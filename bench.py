@@ -174,8 +174,8 @@ def main() -> None:
     phases: dict[str, float] = {}
 
     def seq10():
-        # single-query latency path: driver-side global merge
-        # (bm25_topk_rows) — one Spark job per query. phase_sink
+        # single-query latency path: bm25_topk_rows scores these small
+        # single-term queries on the driver — no Spark job. phase_sink
         # accumulates per-phase wall time across the 10 queries so a
         # cross-round latency shift is attributable to planning vs
         # sidecar read vs decode/score vs merge (round-4 verdict item 1:

@@ -263,7 +263,7 @@ def test_sharded_file_list_keeps_manifest_small(
 
     reader = IndexReader(spark, ix)
     per_bucket = [
-        reader.segment_files_for_bucket(b)
+        reader.segment_files_for_buckets([b])
         for b in range(man.n_buckets)
     ]
     assert sorted(

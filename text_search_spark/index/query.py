@@ -6,19 +6,25 @@ argmax + min-ratio gate); BM25 top-k generalizes it (SURVEY.md §2.3 J3) with
 the same discipline: deterministic scores, explicit total-order tie-break
 (score desc, doc_id asc).
 
-Query plan (Spark-first):
-  1. driver: normalize query terms with the canonical tokenizer; compute
-     term buckets with a driver-side XXH64 (bit-identical to the build's
-     F.xxhash64, no Spark job); global df per term from the PRUNED
-     segments scan (postings column never read — parquet column pruning).
-  2. segments scan pruned TWICE: directory pruning on term_bucket +
-     parquet predicate pushdown on term — only the query terms' posting
-     rows are read; the positions column is read ONLY for phrase queries.
-  3. groupBy(shard).applyInPandas: each shard holds a doc-disjoint slice of
-     EVERY term's postings (shard = hash(doc_id), build.py), so one group
-     computes exact final BM25 scores for its docs with a FIXED per-term
-     float64 summation order (rank-identity discipline, SURVEY.md §7.3),
-     evaluates AND/OR/phrase semantics, and emits its local top-k.
+Query plan:
+  1. driver (_plan_queries, shared by every route): normalize query
+     terms with the canonical tokenizer; compute term buckets with a
+     driver-side XXH64 (bit-identical to the build's F.xxhash64, no Spark
+     job); global df per term from a pyarrow read of only those buckets'
+     committed files (postings column never read); idf weights.
+  2. read only the query terms' segment rows: term_bucket partition
+     pruning + term_id predicate pushdown; the positions column is read
+     ONLY for phrase/near queries. bm25_topk_rows reads them on the
+     driver through the pyarrow sidecar when the batch's summed df is at
+     most DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver —
+     no Spark job; otherwise (and always for bm25_topk_df) a Spark scan.
+  3. per shard: each shard holds a doc-disjoint slice of EVERY term's
+     postings (shard = hash(doc_id), build.py), so one group computes
+     exact final BM25 scores for its docs with a FIXED per-term float64
+     summation order (rank-identity discipline, SURVEY.md §7.3),
+     evaluates AND/OR/phrase/near semantics, and emits its local top-k.
+     The same _score_shard_pdf scores a group on the driver (pandas
+     groupby) or in groupBy(shard).applyInPandas.
      OR queries run block-max MaxScore pruning (prune=True): terms are
      decoded in descending max-contribution order; once the remaining
      terms' upper bounds cannot beat the running kth score, their postings
@@ -27,18 +33,21 @@ Query plan (Spark-first):
      jump). Pruned docs are PROVABLY below the kth score, and survivors
      are re-accumulated in canonical term order -> exact, rank-identical
      top-k.
-  4. global merge: k*n_shards candidate rows per query -> window top-k.
+  4. global merge: k*n_shards candidate rows per query -> top-k by
+     (score desc, doc_id asc): a window in bm25_topk_df, a driver sort
+     in bm25_topk_rows.
 
-No posting list ever crosses the network to another shard's scorer, and the
-driver only ever sees k rows per query.
+On the Spark route no posting list ever crosses the network to another
+shard's scorer, and the driver only ever sees k rows per query and shard.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import time
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -257,20 +266,30 @@ class IndexReader:
                 ).parquet(root)
         return self._segments_df
 
-    def segment_files_for_bucket(self, bucket: int) -> Optional[List[str]]:
-        """Manifest-committed segment files (absolute paths) under one
-        term_bucket partition; None on a legacy manifest (caller falls
-        back to the directory scan). Empty list = committed snapshot has
-        no files for this bucket."""
+    def segment_files_for_buckets(self, buckets: Iterable[int]) -> List[str]:
+        """Manifest-committed segment files (absolute paths) under the
+        given term_bucket partitions — the file set every driver-side
+        pyarrow read opens (snapshot isolation vs in-flight appends).
+        Empty list = the committed snapshot has no files there.
+
+        Raises FileNotFoundError when the manifest carries no file list:
+        _load_validated pins a legacy manifest on a LOCAL root to its
+        committed-stage walk, so what is left is a non-local legacy
+        root. Every caller falls back to the Spark scan, which reads
+        URIs."""
         files = self.manifest.segment_files
         if files is None:
-            return None
+            raise FileNotFoundError(
+                f"{self.index_dir}: no committed file list (non-local "
+                "legacy index) — sidecar reads unavailable"
+            )
         root = fmt.segments_dir(self.index_dir)
-        prefix = f"term_bucket={bucket}/"  # manifest paths are always '/'
+        # manifest paths are always '/'-separated
+        want = {f"term_bucket={b}" for b in buckets}
         return [
             os.path.join(root, p.replace("/", os.sep))
             for p in files
-            if p.startswith(prefix)
+            if p.split("/", 1)[0] in want
         ]
 
     def term_stats(self) -> DataFrame:
@@ -390,47 +409,17 @@ class IndexReader:
     def _df_sidecar_scan(
         self, id_list: List[int], blist: List[int]
     ) -> Dict[int, int]:
-        import pyarrow.dataset as pads
-
-        seg_root = fmt.segments_dir(self.index_dir)
         # list ONLY the needed bucket partitions — never the whole
         # segments tree (a 10^12-doc index has many buckets; a query
-        # touches len(terms) of them). Per bucket: the manifest-committed
-        # file set when available (snapshot isolation vs in-flight
-        # appends), else the partition directory (legacy manifest).
-        sources = []
-        for b in blist:
-            flist = self.segment_files_for_bucket(b)
-            if flist is not None:
-                if flist:
-                    sources.append(flist)
-            else:
-                # legacy manifest AND non-local root (a local legacy
-                # root was pinned to a file list by _load_validated):
-                # os.path.isdir is False for every URI, so continuing
-                # would silently return {} and cache df=0 for every
-                # term — raise into the Spark-scan fallback instead,
-                # which reads URIs fine
-                if not os.path.isdir(seg_root):
-                    raise FileNotFoundError(
-                        f"{seg_root} is not a local directory — "
-                        "sidecar scan unavailable for a non-local "
-                        "legacy index"
-                    )
-                d = os.path.join(seg_root, f"term_bucket={b}")
-                if os.path.isdir(d):
-                    sources.append(d)
+        # touches len(terms) of them)
+        tbl = _read_sidecar(
+            self.segment_files_for_buckets(blist),
+            ["term_id", "df_part"],
+            id_list,
+        )
         out: Dict[int, int] = {}
-        for src in sources:
-            dset = pads.dataset(src, format="parquet")
-            tbl = dset.to_table(
-                columns=["term_id", "df_part"],
-                filter=pads.field("term_id").isin(id_list),
-            )
-            tid = tbl["term_id"].to_numpy()
-            dfp = tbl["df_part"].to_numpy()
-            for t, v in zip(tid, dfp):
-                out[int(t)] = out.get(int(t), 0) + int(v)
+        for t, v in zip(tbl["term_id"].to_numpy(), tbl["df_part"].to_numpy()):
+            out[int(t)] = out.get(int(t), 0) + int(v)
         return out
 
     def _df_spark_scan(
@@ -449,12 +438,94 @@ class IndexReader:
         return {r.term_id: int(r.df) for r in rows}
 
 
+def _read_sidecar(files: List[str], columns: List[str], term_ids):
+    """Driver-side pyarrow read of the given segment files: only
+    `columns`, only rows of `term_ids` (term_id row-group stats prune
+    inside). No Spark job. -> pyarrow Table."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    if not files:
+        return pa.table({c: [] for c in columns})
+    return pads.dataset(files, format="parquet").to_table(
+        columns=columns, filter=pads.field("term_id").isin(term_ids)
+    )
+
+
 def _normalize_queries(queries: Sequence[QuerySpec]) -> List[QuerySpec]:
     out = []
     for q in queries:
         terms = [nt for t in q.terms for nt in tokenize(t)]
         out.append(QuerySpec(q.query_id, terms, q.mode, q.window))
     return out
+
+
+@dataclass
+class _QueryPlan:
+    """What every scoring route scores, built once per batch by
+    _plan_queries so the driver and Spark routes cannot drift."""
+
+    # (query_id, mode, [distinct term ids, first-occurrence order],
+    # [idfs], phrase term-id sequence or None, near window)
+    entries: List[tuple]
+    hit_ids: List[int]  # term ids with df > 0: the only rows read
+    buckets: List[int]  # their term_bucket partitions
+    total_df: int  # summed df: the postings volume a route must decode
+    need_pos: bool  # a phrase/near query reads the positions column
+    avgdl: float
+
+    @property
+    def shard_columns(self) -> List[str]:
+        """Segment columns a shard scorer reads."""
+        return ["shard", "term_id", "postings", "blockmax", "bm_avgdl"] + (
+            ["positions"] if self.need_pos else []
+        )
+
+
+def _plan_queries(
+    r: "IndexReader", queries: Sequence[QuerySpec]
+) -> Optional[_QueryPlan]:
+    """Normalize, look up df (driver sidecar, cached per reader), weight
+    by idf. None = no query has a term that hits the index."""
+    man = r.manifest
+    qs = _normalize_queries(queries)
+    all_terms = sorted({t for q in qs for t in q.terms})
+    buckets = r.buckets_for(all_terms)
+    dfs = r.df_for(all_terms, buckets)
+    n = man.n_docs
+
+    def idf(t: str) -> float:
+        d = dfs.get(t, 0)
+        return math.log(1.0 + (n - d + 0.5) / (d + 0.5))
+
+    ids = r.ids_for(all_terms)
+    entries = []
+    for q in qs:
+        terms = list(dict.fromkeys(q.terms))
+        if not terms:
+            continue
+        seq = [ids[t] for t in q.terms] if q.mode == "phrase" else None
+        entries.append(
+            (
+                q.query_id,
+                q.mode,
+                [ids[t] for t in terms],
+                [idf(t) for t in terms],
+                seq,
+                q.window,
+            )
+        )
+    hit_terms = [t for t in all_terms if dfs.get(t, 0) > 0]
+    if not entries or not hit_terms:
+        return None
+    return _QueryPlan(
+        entries=entries,
+        hit_ids=[ids[t] for t in hit_terms],
+        buckets=sorted({buckets[t] for t in hit_terms}),
+        total_df=sum(dfs[t] for t in hit_terms),
+        need_pos=any(e[1] in ("phrase", "near") for e in entries),
+        avgdl=man.avgdl,
+    )
 
 
 from ..codec import live_doc_mask as _live_mask, ragged_take_index
@@ -886,57 +957,23 @@ def _shard_topk_candidates(
     k: int,
     reader: Optional[IndexReader],
     prune: bool,
+    qp: Optional[_QueryPlan] = None,
 ) -> Optional[DataFrame]:
-    """Shared plan: pruned segments scan -> per-shard exact top-k rows
+    """Spark route: pruned segments scan -> per-shard exact top-k rows
     (query_id, doc_id, score), k rows per (query, shard). None = no
-    query term hits the index."""
+    query term hits the index. qp: the batch's plan when the caller
+    already built it."""
     r = reader or IndexReader(spark, index_dir)
-    man = r.manifest
-    qs = _normalize_queries(queries)
-    all_terms = sorted({t for q in qs for t in q.terms})
-    buckets = r.buckets_for(all_terms)
-    dfs = r.df_for(all_terms, buckets)
-    n, avgdl = man.n_docs, man.avgdl
-
-    def idf(t: str) -> float:
-        d = dfs.get(t, 0)
-        return math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-
-    ids = r.ids_for(all_terms)
-    plan = []
-    need_pos = False
-    for q in qs:
-        uterms: Dict[str, None] = {}
-        for t in q.terms:
-            uterms.setdefault(t, None)
-        terms = list(uterms)
-        if not terms:
-            continue
-        seq = [ids[t] for t in q.terms] if q.mode == "phrase" else None
-        need_pos = need_pos or q.mode in ("phrase", "near")
-        plan.append(
-            (
-                q.query_id,
-                q.mode,
-                [ids[t] for t in terms],
-                [idf(t) for t in terms],
-                seq,
-                q.window,
-            )
-        )
-
-    hit_terms = [t for t in all_terms if dfs.get(t, 0) > 0]
-    if not plan or not hit_terms:
+    qp = qp or _plan_queries(r, queries)
+    if qp is None:
         return None
-
-    blist = sorted({buckets[t] for t in hit_terms})
+    man = r.manifest
+    plan, avgdl = qp.entries, qp.avgdl
     seg = r.segments().where(
-        F.col("term_bucket").isin(blist)
-        & F.col("term_id").isin([ids[t] for t in hit_terms])
+        F.col("term_bucket").isin(qp.buckets)
+        & F.col("term_id").isin(qp.hit_ids)
     )
-    cols = ["shard", "term_id", "postings", "blockmax", "bm_avgdl"] + (
-        ["positions"] if need_pos else []
-    )
+    cols = qp.shard_columns
     out_schema = "query_id string, doc_id long, score double"
     if r.tombstones_distributed():
         # MASS-delete regime: tombstones reach each scorer group as
@@ -1003,10 +1040,18 @@ def bm25_topk_df(
     )
 
 
-# above this pruned-postings volume the single-term fast path stays on
-# executors (a stop-word term at 10^12 docs must never be pulled to the
-# driver); below it, driver-side decode beats any Spark job's floor
+# above this pruned-postings volume (the summed df of a batch's terms) a
+# bm25_topk_rows batch stays on executors (a stop-word term at 10^12
+# docs must never be pulled to the driver); below it, driver-side
+# decode beats any Spark job's floor
 DRIVER_SCORE_MAX_POSTINGS = 4_000_000
+
+
+def _phase(sink: Optional[Dict[str, float]], key: str, t0: float) -> None:
+    """Accumulate the wall seconds since t0 into sink[key]; no-op
+    without a sink."""
+    if sink is not None:
+        sink[key] = sink.get(key, 0.0) + time.perf_counter() - t0
 
 
 def _score_single_term_local(
@@ -1017,13 +1062,12 @@ def _score_single_term_local(
     phase_sink: Optional[Dict[str, float]] = None,
 ):
     """Driver-side single-term scoring over the pyarrow sidecar scan:
-    yields (query_id, doc_id, score) candidate rows (per-row top-k; rows
+    -> (query_id, doc_id, score) candidate rows (per-row top-k; rows
     of one term are doc-disjoint). Bounded by DRIVER_SCORE_MAX_POSTINGS.
 
     phase_sink: optional dict accumulating wall seconds for the two
     sub-phases ("read_s" = pyarrow dataset open + filtered to_table,
-    "score_s" = posting decode + BM25 partial + top-k) — bench
-    triage instrumentation, zero cost when None. Cache hits skip
+    "score_s" = posting decode + BM25 partial + top-k). Cache hits skip
     read_s entirely (the phase table is how the cache's effect shows
     up in BENCH).
 
@@ -1033,69 +1077,35 @@ def _score_single_term_local(
     a repeated term answers from memory at score+merge cost only.
     refresh() invalidates (a new snapshot may append rows to any
     term)."""
-    import os
-    import time as _time
-
-    import pyarrow.dataset as pads
-
     from ..functions.xxhash import pmod
 
-    seg_root = fmt.segments_dir(reader.index_dir)
     cache = reader._postings_cache
     id_list = sorted(qplan)
     missing = [t for t in id_list if t not in cache]
     fetched: Dict[int, List[tuple]] = {}
     if missing:
         nb = reader.manifest.n_buckets
-        need_buckets = sorted({pmod(t, nb) for t in missing})
-        for b in need_buckets:
-            flist = reader.segment_files_for_bucket(b)
-            if flist is not None:
-                if not flist:
-                    continue
-                src = flist  # manifest-committed snapshot file set
-            else:
-                if not os.path.isdir(seg_root):
-                    raise FileNotFoundError(
-                        f"{seg_root} is not a local directory — "
-                        "driver sidecar scoring unavailable for a "
-                        "non-local legacy index"
-                    )
-                src = os.path.join(seg_root, f"term_bucket={b}")
-                if not os.path.isdir(src):
-                    continue
-            t0 = _time.perf_counter() if phase_sink is not None else 0.0
-            tbl = pads.dataset(src, format="parquet").to_table(
-                columns=["term_id", "postings"],
-                filter=pads.field("term_id").isin(missing),
-            )
-            if phase_sink is not None:
-                phase_sink["read_s"] = (
-                    phase_sink.get("read_s", 0.0)
-                    + _time.perf_counter()
-                    - t0
-                )
-            tids = tbl["term_id"].to_numpy()
-            posts = tbl["postings"].to_pylist()
-            t1 = _time.perf_counter() if phase_sink is not None else 0.0
-            for tid, pbuf in zip(tids, posts):
-                docs, tfs, dls = decode_block_postings(bytes(pbuf))
-                if docs.size:
-                    fetched.setdefault(int(tid), []).append(
-                        (docs, tfs, dls)
-                    )
-            if phase_sink is not None:
-                phase_sink["score_s"] = (
-                    phase_sink.get("score_s", 0.0)
-                    + _time.perf_counter()
-                    - t1
-                )
+        files = reader.segment_files_for_buckets(
+            {pmod(t, nb) for t in missing}
+        )
+        t0 = time.perf_counter()
+        tbl = _read_sidecar(files, ["term_id", "postings"], missing)
+        _phase(phase_sink, "read_s", t0)
+        t1 = time.perf_counter()
+        for tid, pbuf in zip(
+            tbl["term_id"].to_numpy(), tbl["postings"].to_pylist()
+        ):
+            docs, tfs, dls = decode_block_postings(bytes(pbuf))
+            if docs.size:
+                fetched.setdefault(int(tid), []).append((docs, tfs, dls))
+        _phase(phase_sink, "score_s", t1)
         for t in missing:
             # absent terms cache an empty list too — df>0 should make
             # that impossible, but re-reading every query would be the
             # worse failure mode
             reader._postings_cache_put(t, fetched.get(t, []))
-    t1 = _time.perf_counter() if phase_sink is not None else 0.0
+    t1 = time.perf_counter()
+    tombs = reader.tombstones()
     out: List[Tuple[str, int, float]] = []
     for tid in id_list:
         rows = cache.get(tid)
@@ -1104,7 +1114,6 @@ def _score_single_term_local(
         else:
             cache.move_to_end(tid)  # LRU touch
         specs = qplan[tid]
-        tombs = reader.tombstones()
         for docs, tfs, dls in rows:
             keep = _live_mask(docs, tombs)
             if keep is not None:
@@ -1117,10 +1126,43 @@ def _score_single_term_local(
                 out.extend(
                     (query_id, int(docs[j]), float(p[j])) for j in idx
                 )
-    if phase_sink is not None:
-        phase_sink["score_s"] = (
-            phase_sink.get("score_s", 0.0) + _time.perf_counter() - t1
+    _phase(phase_sink, "score_s", t1)
+    return out
+
+
+def _score_shards_local(
+    reader: "IndexReader",
+    qp: _QueryPlan,
+    k: int,
+    prune: bool,
+    phase_sink: Optional[Dict[str, float]] = None,
+):
+    """Driver twin of the Spark route's groupBy(shard).applyInPandas:
+    the batch's segment rows come through the pyarrow sidecar read and
+    every shard group goes through the same _score_shard_pdf, so both
+    routes emit the same (query_id, doc_id, score) candidate rows.
+    Bounded by DRIVER_SCORE_MAX_POSTINGS; no Spark job. phase_sink
+    records "read_s" and "score_s" as in _score_single_term_local."""
+    t0 = time.perf_counter()
+    pdf = _read_sidecar(
+        reader.segment_files_for_buckets(qp.buckets),
+        qp.shard_columns,
+        qp.hit_ids,
+    ).to_pandas()
+    _phase(phase_sink, "read_s", t0)
+    t1 = time.perf_counter()
+    tombs = reader.tombstones()
+    out: List[Tuple[str, int, float]] = []
+    for _shard, g in pdf.groupby("shard", sort=False):
+        res = _score_shard_pdf(g, qp.entries, qp.avgdl, k, prune, tombs)
+        out.extend(
+            zip(
+                res["query_id"].tolist(),
+                res["doc_id"].tolist(),
+                res["score"].tolist(),
+            )
         )
+    _phase(phase_sink, "score_s", t1)
     return out
 
 
@@ -1170,136 +1212,120 @@ def bm25_topk_rows(
     phase_sink: Optional[Dict[str, float]] = None,
 ) -> List[Tuple[str, int, int, float]]:
     """Low-latency variant: the global merge runs driver-side over the
-    collected candidate rows (the reference's bounded-heap global merge,
-    SURVEY §2.5 T3) instead of a second shuffle. When EVERY query in the
-    batch is single-term, scoring happens inside the scan stage itself
-    (segment rows are doc-disjoint per term) — one shuffle-free stage
-    per batch. Rank- and score-identical to bm25_topk_df in both paths
-    (same float64 ops, same total order).
+    candidate rows (the reference's bounded-heap global merge, SURVEY
+    §2.5 T3) instead of a second shuffle. The batch takes one of three
+    routes:
+
+    - driver_sidecar: the batch's summed df is at most
+      DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver
+      (reader.tombstones_distributed() is False). The query terms'
+      segment rows are read through the pyarrow sidecar and scored on
+      the driver — NO Spark job. A batch of single-term OR/AND queries
+      scores each term's rows directly, caching decoded postings on the
+      reader; any other batch scores each shard group with the same
+      _score_shard_pdf the Spark route runs.
+    - scan_stage: a single-term batch above the gate scores inside the
+      scan stage itself (segment rows are doc-disjoint per term) — one
+      shuffle-free stage per batch.
+    - shard_topk: any other batch above the gate, and every batch in
+      the MASS-delete regime — bm25_topk_df's groupBy(shard) route
+      (cogrouped with the tombstones when they are distributed).
+
+    Every route is rank- and score-identical to bm25_topk_df (same
+    float64 ops, same total order). The driver route falls back to the
+    Spark routes on environmental failures only.
 
     phase_sink: optional dict; when given, accumulates wall seconds per
     phase ("plan_s" df/bucket lookups + weight planning, "read_s"
     sidecar parquet read, "score_s" decode+score, "merge_s" driver
-    merge) and records "path" = driver_sidecar | scan_stage |
-    shard_topk. Bench triage instrumentation (BENCH.md round-5);
-    zero overhead when None.
+    merge; the Spark routes read and score inside their job) and
+    records "path" = driver_sidecar | scan_stage | shard_topk.
 
     -> [(query_id, rank, doc_id, score)]"""
-    import time as _time
-
-    _t_start = _time.perf_counter() if phase_sink is not None else 0.0
+    t_start = time.perf_counter()
     r = reader or IndexReader(spark, index_dir)
-    qs = _normalize_queries(queries)
-    all_single = (
-        all(
-            len(set(q.terms)) == 1 and q.mode in ("or", "and") for q in qs
-        )
-        and len(qs) > 0
-        # MASS-delete regime: both single-term paths (driver sidecar,
-        # scan-stage closure) need the driver numpy tombstone union —
-        # above the gate they'd materialize it, so the batch routes to
-        # the cogrouped shard path instead (exact, fully distributed;
-        # higher per-query floor, which is the documented trade until
-        # compaction purges)
-        and not r.tombstones_distributed()
+    qp = _plan_queries(r, queries)
+    if qp is None:
+        return []
+    # MASS-delete regime: both driver routes and the scan-stage closure
+    # need the driver numpy tombstone union — above the gate they'd
+    # materialize it, so the batch routes to the cogrouped shard path
+    # instead (exact, fully distributed; higher per-query floor, which
+    # is the documented trade until compaction purges)
+    driver_tombs = not r.tombstones_distributed()
+    single = driver_tombs and all(
+        len(e[2]) == 1 and e[1] in ("or", "and") for e in qp.entries
     )
-    rows_iter = None
-    if all_single:
-        all_terms = sorted({t for q in qs for t in q.terms})
-        buckets = r.buckets_for(all_terms)
-        dfs = r.df_for(all_terms, buckets)
-        man = r.manifest
-        n, avgdl = man.n_docs, man.avgdl
-        ids = r.ids_for(all_terms)
+    if single:
+        hit = set(qp.hit_ids)
         qplan: Dict[int, List[Tuple[str, float]]] = {}
-        for q in qs:
-            t = q.terms[0]
-            d = dfs.get(t, 0)
-            if d <= 0:
-                continue
-            w = math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-            qplan.setdefault(ids[t], []).append((q.query_id, w))
-        if not qplan:
-            return []
-        blist = sorted({buckets[t] for t in all_terms if dfs.get(t, 0) > 0})
-        total_df = sum(dfs.get(t, 0) for t in all_terms)
-        if phase_sink is not None:
-            phase_sink["plan_s"] = (
-                phase_sink.get("plan_s", 0.0)
-                + _time.perf_counter()
-                - _t_start
-            )
-        if total_df <= DRIVER_SCORE_MAX_POSTINGS:
-            # small pruned volume (known exactly from df): read the
-            # posting rows through the pyarrow sidecar and score on the
-            # driver — NO Spark job at all (~ms, the real latency path).
-            # Fallback is for ENVIRONMENTAL failures only (non-local
-            # fs, missing pyarrow handler) — a genuine defect (codec
-            # corruption, bad manifest) must surface, not silently
-            # downgrade to the Spark path; the failed attempt's partial
-            # phase timings are rolled back so triage numbers stay
-            # attributable.
-            import pyarrow as _pa
+        for query_id, _mode, tids, idfs, _seq, _window in qp.entries:
+            if tids[0] in hit:
+                qplan.setdefault(tids[0], []).append((query_id, idfs[0]))
+    _phase(phase_sink, "plan_s", t_start)
+    rows = None
+    if driver_tombs and qp.total_df <= DRIVER_SCORE_MAX_POSTINGS:
+        # small pruned volume (known exactly from df): score on the
+        # driver (~ms, the real latency path). Fallback is for
+        # ENVIRONMENTAL failures only (non-local fs, missing pyarrow
+        # handler) — a genuine defect (codec corruption, bad manifest)
+        # must surface, not silently downgrade to the Spark path; the
+        # failed attempt's partial phase timings are rolled back so
+        # triage numbers stay attributable.
+        import pyarrow as pa
 
-            saved = dict(phase_sink) if phase_sink is not None else None
-            try:
-                rows_iter = _score_single_term_local(
-                    r, qplan, avgdl, k, phase_sink=phase_sink
+        saved = dict(phase_sink) if phase_sink is not None else None
+        try:
+            if single:
+                rows = _score_single_term_local(
+                    r, qplan, qp.avgdl, k, phase_sink
                 )
-                if phase_sink is not None:
-                    phase_sink["path"] = "driver_sidecar"
-            except (OSError, NotImplementedError, _pa.ArrowException):
-                rows_iter = None
-                if phase_sink is not None:
-                    phase_sink.clear()
-                    phase_sink.update(saved)
-        if rows_iter is None:
+            else:
+                rows = _score_shards_local(r, qp, k, prune, phase_sink)
+            path = "driver_sidecar"
+        except (OSError, NotImplementedError, pa.ArrowException):
+            if phase_sink is not None:
+                phase_sink.clear()
+                phase_sink.update(saved)
+    if rows is None:
+        if single:
             # big terms / non-local fs: shuffle-free scan-stage scoring
             # (segment rows are doc-disjoint per term -> exact)
             cand = (
                 r.segments()
                 .where(
-                    F.col("term_bucket").isin(blist)
+                    F.col("term_bucket").isin(qp.buckets)
                     & F.col("term_id").isin(sorted(qplan))
                 )
                 .select("term_id", "postings")
                 .mapInPandas(
-                    _single_term_scorer(qplan, avgdl, k, tombs=r.tombstones()),
+                    _single_term_scorer(
+                        qplan, qp.avgdl, k, tombs=r.tombstones()
+                    ),
                     schema="query_id string, doc_id long, score double",
                 )
             )
-            rows_iter = (
-                (row.query_id, row.doc_id, row.score)
-                for row in cand.collect()
+            path = "scan_stage"
+        else:
+            cand = _shard_topk_candidates(
+                spark, index_dir, queries, k, r, prune, qp
             )
-            if phase_sink is not None:
-                phase_sink["path"] = "scan_stage"
-    else:
-        cand = _shard_topk_candidates(
-            spark, index_dir, queries, k, r, prune
-        )
-        if cand is None:
-            return []
-        rows_iter = (
+            path = "shard_topk"
+        rows = [
             (row.query_id, row.doc_id, row.score) for row in cand.collect()
-        )
-        if phase_sink is not None:
-            phase_sink["path"] = "shard_topk"
-    _t_merge = _time.perf_counter() if phase_sink is not None else 0.0
+        ]
+    if phase_sink is not None:
+        phase_sink["path"] = path
+    t_merge = time.perf_counter()
     by_q: Dict[str, List[Tuple[float, int]]] = {}
-    for qid, doc_id, score in rows_iter:
+    for qid, doc_id, score in rows:
         by_q.setdefault(qid, []).append((score, doc_id))
     out: List[Tuple[str, int, int, float]] = []
     for qid in sorted(by_q):
-        rows = sorted(by_q[qid], key=lambda x: (-x[0], x[1]))[:k]
+        best = sorted(by_q[qid], key=lambda x: (-x[0], x[1]))[:k]
         out.extend(
             (qid, rank, doc_id, score)
-            for rank, (score, doc_id) in enumerate(rows, start=1)
+            for rank, (score, doc_id) in enumerate(best, start=1)
         )
-    if phase_sink is not None:
-        phase_sink["merge_s"] = (
-            phase_sink.get("merge_s", 0.0)
-            + _time.perf_counter()
-            - _t_merge
-        )
+    _phase(phase_sink, "merge_s", t_merge)
     return out

@@ -1,22 +1,26 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 All operators take/return DataFrames, use only JVM-side expressions in the
-hot path, and shuffle exactly once on their group key. Hashes are md5-based
+hot path, and shuffle at most once on their group key. Hashes are md5-based
 so the DuckDB correctness oracle reproduces them bit-for-bit.
 
 Scale notes (100 TB discipline):
   * exact_duplicates: one hash-agg shuffle on a 32-char key; AQE coalesces.
-  * minhash_signatures: per-doc agg over exploded distinct terms — one
-    shuffle; NUM_HASHES columns of min() (map-side partial agg applies).
+  * minhash_signatures: computed inside each doc row — NUM_HASHES
+    array_min(transform(distinct units, md5)) columns, a pure map
+    operation with no shuffle (the former explode + groupBy(id) min()
+    sorted and exchanged the whole exploded relation).
   * lsh_candidate_pairs: band -> bucket grouping; bucket sizes are the
     classic LSH skew point — `max_bucket` bounds pathological buckets
     via chunked recovery (O(n*max_bucket) direct pairs + bridge edges
     that keep the bucket one connected component; residual reported by
     lsh_capped_census, never silently exploded into n^2 pairs).
-  * simhash: 64 per-bit conditional sums in ONE agg pass whose single
-    exchange moves the narrow DOC rows (pre-partitioned by id, so the
-    per-term bit relation never shuffles — partial sums for ~every doc
-    from every map task were the expensive alternative).
+  * simhash: per-bit conditional sums in ONE agg pass whose single
+    exchange moves the projected (id, text) DOC rows (pre-partitioned by
+    id, so the per-term bit relation never shuffles). The trade is one
+    doc row against one ~500 B partial-sum row per doc: narrower only
+    for short documents (~300 B at the bench profile); for long web
+    pages the partial row is the narrower payload (see simhash()).
 """
 
 from __future__ import annotations
