@@ -49,15 +49,26 @@ def _index_dir_for(sf_dir: str) -> str:
     )
 
 
-def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once) the inverted index over documents(doc_id, text)."""
-    d = _index_dir_for(sf_dir)
+def _cached_manifest(d: str):
+    """The manifest of the cached index at d when it can be reused as
+    is (complete, current format, both committed file lists), else
+    None — the caller rebuilds."""
     man = ixfmt.load_manifest(d)
     if (
         man is None
         or not man.complete
         or man.format_version != ixfmt.FORMAT_VERSION
+        or man.segment_files is None
+        or man.doc_stats_files is None
     ):
+        return None
+    return man
+
+
+def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
+    """Build (once) the inverted index over documents(doc_id, text)."""
+    d = _index_dir_for(sf_dir)
+    if _cached_manifest(d) is None:
         import shutil
 
         shutil.rmtree(d, ignore_errors=True)
@@ -75,13 +86,8 @@ def _ensure_deleted_index(spark: SparkSession, sf_dir: str) -> str:
     tombstone set applied (doc_id % 5 == 2) — the delete-semantics
     driver gate (index/delete.py)."""
     d = _index_dir_for(sf_dir) + "_del"
-    man = ixfmt.load_manifest(d)
-    if (
-        man is None
-        or not man.complete
-        or man.format_version != ixfmt.FORMAT_VERSION
-        or not man.tombstone_files
-    ):
+    man = _cached_manifest(d)
+    if man is None or not man.tombstone_files:
         import shutil
 
         from text_search_spark.index.delete import delete_docs
@@ -226,12 +232,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         ix = _ensure_index(spark, sf_dir)
         merged = ix + "_m2"
-        man = ixfmt.load_manifest(merged)
-        if (
-            man is None
-            or not man.complete
-            or man.format_version != ixfmt.FORMAT_VERSION
-        ):
+        if _cached_manifest(merged) is None:
             shutil.rmtree(merged, ignore_errors=True)
             merge_shards(spark, ix, merged, factor=2)
         return merged
@@ -293,13 +294,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         d = _index_dir_for(sf_dir) + "_inc"
-        man = ixfmt.load_manifest(d)
-        if (
-            man is None
-            or not man.complete
-            or man.format_version != ixfmt.FORMAT_VERSION
-            or not man.stages.get("term_stats")
-        ):
+        man = _cached_manifest(d)
+        if man is None or not man.stages.get("term_stats"):
             shutil.rmtree(d, ignore_errors=True)
             docs = prepare_corpus(
                 _t(spark, sf_dir, "documents"), doc_id_col="doc_id"
@@ -332,12 +328,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import text_search_spark.index.build as B
 
         d = _index_dir_for(sf_dir) + "_spill"
-        man = ixfmt.load_manifest(d)
-        if (
-            man is None
-            or not man.complete
-            or man.format_version != ixfmt.FORMAT_VERSION
-        ):
+        if _cached_manifest(d) is None:
             shutil.rmtree(d, ignore_errors=True)
             corpus = prepare_corpus(
                 _t(spark, sf_dir, "documents"), doc_id_col="doc_id"

@@ -523,3 +523,30 @@ def test_mock_backend_compaction_racing_append(
     assert not os.path.exists(fmt.manifest_path(ix)), (
         "pointer bypassed the backend"
     )
+
+
+def test_manifest_with_retired_narrowing_keys_loads(tmp_path):
+    """Manifests written while the doc_id pipe narrowing existed carry
+    doc_id_base / doc_id_narrow; loading drops exactly those keys."""
+    from dataclasses import asdict
+
+    ix = str(tmp_path / "retired_keys")
+    os.makedirs(ix)
+    d = asdict(fmt.IndexManifest(complete=True, n_docs=3, segment_files=[]))
+    d.update(doc_id_base=1000, doc_id_narrow=True)
+    with open(fmt.manifest_path(ix), "w") as f:
+        json.dump(d, f)
+    m = fmt.load_manifest(ix)
+    assert m.complete and m.n_docs == 3 and m.segment_files == []
+    assert not {"doc_id_base", "doc_id_narrow"} & set(vars(m))
+
+
+def test_complete_manifest_without_file_list_is_refused(spark, tmp_path):
+    """A complete manifest must carry its committed file lists: the
+    reader raises instead of scanning the directory."""
+    ix = str(tmp_path / "no_list")
+    fmt.save_manifest(ix, fmt.IndexManifest(
+        format_version=fmt.FORMAT_VERSION, complete=True, doc_stats_files=[]
+    ))
+    with pytest.raises(ValueError, match="no committed file list"):
+        IndexReader(spark, ix)

@@ -1,145 +1,28 @@
-"""doc_id pipe narrowing (int32 delta on the JVM->Python segment pipe):
-the on-disk index must be BYTE-identical with narrowing on vs off, the
-gate must auto-disable for sparse hashed id spaces, and the narrowed
-builder must reproduce the int64 builder's output bytes at the unit
-level (incl. through the spill path)."""
+"""Sparse doc_id spaces on the JVM->Python segment pipe: 60-bit hashed
+url ids span far beyond int32, and the segment pipe must carry them
+whole so the built index still answers queries with the right ids."""
 
-import glob
-import hashlib
-import os
-
-import numpy as np
-import pyarrow as pa
-import pytest
-from pyspark.sql import functions as F
-
-import text_search_spark.index.build as B
-from text_search_spark.index import format as fmt
-from text_search_spark.index.build import build_index, prepare_corpus
-from text_search_spark.index.query import IndexReader, QuerySpec, bm25_topk_df
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _dir_file_hashes(d: str) -> dict:
-    """relpath -> md5, with Spark's random write-job UUID stripped from
-    part file names (part-00000-<uuid>.c000... -> part-00000) so the two
-    builds' files pair up positionally."""
-    out = {}
-    for p in sorted(glob.glob(os.path.join(d, "**", "*"), recursive=True)):
-        if os.path.isfile(p) and not os.path.basename(p).startswith((".", "_")):
-            rel = os.path.relpath(p, d)
-            head, base = os.path.split(rel)
-            key = os.path.join(head, base.split("-")[0] + "-" + base.split("-")[1])
-            with open(p, "rb") as f:
-                out[key] = hashlib.md5(f.read()).hexdigest()
-    return out
-
-
-def test_narrow_build_byte_identical(spark, tmp_path, monkeypatch):
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    corpus = prepare_corpus(docs, doc_id_col="doc_id")
-
-    d_on = str(tmp_path / "ix_on")
-    monkeypatch.setenv("TSS_NARROW_DOC_ID", "1")
-    build_index(spark, corpus, d_on, n_buckets=4, n_shards=2)
-    man_on = fmt.load_manifest(d_on)
-    assert man_on.doc_id_narrow  # dense ids -> the narrow path ran
-
-    d_off = str(tmp_path / "ix_off")
-    monkeypatch.delenv("TSS_NARROW_DOC_ID", raising=False)
-    build_index(spark, corpus, d_off, n_buckets=4, n_shards=2)
-
-    # segment data files: identical bytes, file for file
-    h_on = _dir_file_hashes(fmt.segments_dir(d_on))
-    h_off = _dir_file_hashes(fmt.segments_dir(d_off))
-    assert h_on and h_on == h_off
-
-    # and the index answers queries (sanity that the narrow build reads)
-    r = IndexReader(spark, d_on)
-    terms = [
-        t.term
-        for t in spark.read.parquet(fmt.term_stats_dir(d_on))
-        .orderBy(F.desc("cf"), F.asc("term"))
-        .limit(2)
-        .collect()
-    ]
-    out = bm25_topk_df(
-        spark, d_on, [QuerySpec(t, [t], "or") for t in terms], k=5
-    )
-    assert out.count() > 0
+from text_search_spark.index.build import (
+    build_index,
+    hash_doc_id_py,
+    prepare_corpus,
+)
+from text_search_spark.index.query import QuerySpec, bm25_topk_df
 
 
 def test_sparse_hashed_ids_disable_narrowing(spark, tmp_path):
-    """60-bit hashed doc_ids (url ingest) span >> 2^31 — the gate must
-    fall back to the int64 pipe and still build a correct index."""
-    rows = [
-        (f"https://example.com/p{i}", f"alpha beta gamma doc{i} alpha")
-        for i in range(30)
-    ]
+    """60-bit hashed doc_ids (url ingest) span >> 2^31 — the int64 pipe
+    must carry them unchanged and still build a correct index."""
+    urls = [f"https://example.com/p{i}" for i in range(30)]
+    ids = [hash_doc_id_py(u) for u in urls]
+    assert max(ids) - min(ids) > 2**31  # the id space really is sparse
+    rows = [(u, f"alpha beta gamma doc{i} alpha") for i, u in enumerate(urls)]
     docs = spark.createDataFrame(rows, "url string, text string")
     corpus = prepare_corpus(docs, url_col="url")
     d = str(tmp_path / "ix_sparse")
     build_index(spark, corpus, d, n_buckets=2, n_shards=2)
-    man = fmt.load_manifest(d)
-    assert not man.doc_id_narrow
     out = bm25_topk_df(
         spark, d, [QuerySpec("q", ["ALPHA"], "or")], k=30
-    )
-    assert out.count() == 30  # every doc matches ALPHA
-
-
-def _mk_narrow_batches(groups, base):
-    """Unit-level pipe batches in BOTH transports for the same logical
-    rows: (int64 doc_id) and (int32 doc_id32 = doc_id - base)."""
-    full, narrow = [], []
-    for term_id, docs in groups:
-        doc_ids = np.asarray(docs, dtype=np.int64)
-        blobs = []
-        for d in docs:
-            # varbyte header (doc_len=5, tf=1) + one absolute position 0
-            blobs.append(bytes([5, 1, 0]))
-        t = np.full(len(docs), term_id, dtype=np.int64)
-        full.append(
-            pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, pa.int64()),
-                    pa.array(blobs, pa.binary()),
-                    pa.array(t, pa.int64()),
-                ],
-                names=["doc_id", "blob", "term_id"],
-            )
-        )
-        narrow.append(
-            pa.RecordBatch.from_arrays(
-                [
-                    pa.array((doc_ids - base).astype(np.int32), pa.int32()),
-                    pa.array(blobs, pa.binary()),
-                    pa.array(t, pa.int64()),
-                ],
-                names=["doc_id32", "blob", "term_id"],
-            )
-        )
-    return full, narrow
-
-
-@pytest.mark.parametrize("spill_rows", [10**9, 20])
-def test_builder_narrow_equals_full_unit(spill_rows):
-    """Same logical rows through the int64 and int32 transports (in-memory
-    and spill paths) -> identical segment rows, bytes included."""
-    base = 1_000_000
-    groups = [(-7, [base + i * 3 for i in range(150)]), (9, [base + 5])]
-    full_b, narrow_b = _mk_narrow_batches(groups, base)
-    mk_full = B._segment_builder(
-        9.0, 4, 1, spill_rows=spill_rows, chunk_rows=16
-    )
-    mk_narrow = B._segment_builder(
-        9.0, 4, 1, spill_rows=spill_rows, chunk_rows=16, doc_base=base
-    )
-    got_full = [
-        b.to_pydict() for b in mk_full(iter(full_b))
-    ]
-    got_narrow = [
-        b.to_pydict() for b in mk_narrow(iter(narrow_b))
-    ]
-    assert got_full and got_full == got_narrow
+    ).collect()
+    assert len(out) == 30  # every doc matches ALPHA
+    assert sorted(r.doc_id for r in out) == sorted(ids)

@@ -320,8 +320,7 @@ def test_build_segment_plan_shape(spark):
 
 def test_fused_build_single_grouper_scan(spark, tmp_path, monkeypatch):
     """bucket_groups=1 under the size gate: ONE grouper scan feeds both
-    the vocab and segment stages (persisted posting relation), and the
-    explode-based vocab fallback is not used. 2 corpus scans -> 1."""
+    the vocab and segment stages (persisted posting relation)."""
     import text_search_spark.index.build as B
 
     calls = {"grouped_terms": 0, "explode_vocab": 0}
@@ -332,7 +331,6 @@ def test_fused_build_single_grouper_scan(spark, tmp_path, monkeypatch):
         return orig_gt(corpus)
 
     monkeypatch.setattr(B, "grouped_terms", spy_gt)
-    orig_explode = F.explode
 
     pdf = spark.createDataFrame(
         [(i, f"alpha beta w{i} gamma delta", str(i)) for i in range(40)],
@@ -357,32 +355,58 @@ def test_fused_build_single_grouper_scan(spark, tmp_path, monkeypatch):
 
 
 def test_fused_build_gate_falls_back(spark, tmp_path, monkeypatch):
-    """Above the size gate the fused path must NOT persist (explode vocab
-    + separate segment scan — the pre-existing behavior)."""
+    """Above the size gate a single-unit build takes the materialized
+    path a multi-unit build takes: the grouper output is written once to
+    tokens_tmp (the 'tokens' stage), vocab reads it back (no corpus
+    explode scan), and the segments are the fused build's rows."""
     import text_search_spark.index.build as B
 
+    pdf = spark.createDataFrame(
+        [(i, f"alpha beta w{i} gamma alpha", str(i)) for i in range(10)],
+        "doc_id long, text string, url string",
+    )
+    corpus = prepare_corpus(pdf, doc_id_col="doc_id")
+    fused_ix = str(tmp_path / "fused_ix")
+    B.build_index(
+        spark, corpus, fused_ix, n_buckets=4, n_shards=2, bucket_groups=1
+    )
+
     monkeypatch.setattr(B, "_FUSED_PERSIST_MAX_BYTES", 0)
-    calls = {"grouped_terms": 0}
-    orig_gt = B.grouped_terms
+    calls = {"grouped_terms": 0, "explode": 0}
+    orig_gt, orig_explode = B.grouped_terms, F.explode
 
     def spy_gt(corpus):
         calls["grouped_terms"] += 1
         return orig_gt(corpus)
 
+    def spy_explode(col):
+        calls["explode"] += 1
+        return orig_explode(col)
+
     monkeypatch.setattr(B, "grouped_terms", spy_gt)
-    pdf = spark.createDataFrame(
-        [(i, f"alpha beta w{i}", str(i)) for i in range(10)],
-        "doc_id long, text string, url string",
-    )
-    corpus = prepare_corpus(pdf, doc_id_col="doc_id")
+    monkeypatch.setattr(F, "explode", spy_explode)
     ix = str(tmp_path / "gated_ix")
     B.build_index(
         spark, corpus, ix, n_buckets=4, n_shards=2, bucket_groups=1
     )
-    assert calls["grouped_terms"] == 1  # only the segment stage's scan
-    from text_search_spark.index import format as ixfmt
+    assert calls == {"grouped_terms": 1, "explode": 0}
+    man = ixfmt.load_manifest(ix)
+    assert man.complete and man.stages.get("tokens")
 
-    assert ixfmt.load_manifest(ix).complete
+    def seg_rows(d):
+        return sorted(
+            tuple(r)
+            for r in spark.read.schema(ixfmt.SEG_READ_SCHEMA)
+            .parquet(ixfmt.segments_dir(d))
+            .select(
+                "term_id", "shard", "df_part", "postings", "positions",
+                "blockmax",
+            )
+            .collect()
+        )
+
+    got = seg_rows(ix)
+    assert got and got == seg_rows(fused_ix)
 
 
 def test_shingle_minhash_tokenizer_evaluated_once(spark):

@@ -158,3 +158,22 @@ def test_resume_adopts_persisted_bucket_groups(spark, tmp_path):
     assert _index_fingerprint(spark, resumed_dir) == _index_fingerprint(
         spark, clean_dir
     )
+
+
+def test_stream_append_refuses_crashed_batch_build(spark, tmp_path):
+    """A stream append onto a crashed batch build raises before landing
+    a file (so neither side adopts the other's files); the build still
+    resumes."""
+    from text_search_spark.streaming.incremental import _append_batch
+
+    ix = str(tmp_path / "crashed")
+    corpus = _corpus(spark)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(spark, corpus, ix, n_buckets=4, n_shards=2,
+                    bucket_groups=2, fail_after="vocab")
+    with pytest.raises(ValueError, match="unfinished batch build"):
+        _append_batch(spark, corpus.limit(5), ix, batch_id=0)
+    assert not any("batch0-" in p for p in fmt.list_segment_files(ix)
+                   + fmt.list_doc_stats_files(ix))
+    build_index(spark, corpus, ix, n_buckets=4, n_shards=2, bucket_groups=2)
+    assert fmt.load_manifest(ix).complete

@@ -497,17 +497,13 @@ def _decode_varbyte_at(data: np.ndarray, ptr: np.ndarray):
 # structural bound (_auto_size: largest partial = max_df/n_shards) makes
 # this path unreachable in a well-sized build — it converts an OOM into
 # sequential local-disk traffic when sizing assumptions break.
-_SPILL_GROUP_ROWS = int(
-    os.environ.get("TSS_SPILL_GROUP_ROWS", str(4 * _CHUNK_ROWS))
-)
+_SPILL_GROUP_ROWS = 4 * _CHUNK_ROWS
 
 
-def _decode_posting_rows(tbl, doc_base: Optional[int] = None):
+def _decode_posting_rows(tbl):
     """(doc_id, blob, term_id) Arrow table -> numpy views: term_ids,
     doc_ids, doc_len, tf, stripped positions payload (pos_data, pos_offs).
-    Shared by the in-memory flush and the spill-stream encoder.
-    doc_base set => the pipe carried narrowed int32 `doc_id32` columns
-    (doc_id - base); reconstruct the absolute int64 ids here."""
+    Shared by the in-memory flush and the spill-stream encoder."""
     col = lambda name: (
         tbl.column(name)
         .combine_chunks()
@@ -515,7 +511,7 @@ def _decode_posting_rows(tbl, doc_base: Optional[int] = None):
         .astype(np.int64)
     )
     term_ids = col("term_id")
-    doc_ids = col("doc_id") if doc_base is None else doc_base + col("doc_id32")
+    doc_ids = col("doc_id")
     data, offs = _flat_binary(tbl.column("blob"))
     dl, p1 = _decode_varbyte_at(data, offs[:-1])
     tf, p2 = _decode_varbyte_at(data, p1)
@@ -536,7 +532,6 @@ def _encode_group_streaming(
     avgdl: float,
     n_buckets: int,
     n_shards: int,
-    doc_base: Optional[int] = None,
 ):
     """Encode ONE (term, shard) group from an iterator of Arrow tables
     (rows doc_id-ascending across chunks — the partition sort guarantees
@@ -610,9 +605,7 @@ def _encode_group_streaming(
     for tbl in chunks:
         if tbl.num_rows == 0:
             continue
-        t_ids, doc, dl, tf, pos_data, pos_offs = _decode_posting_rows(
-            tbl, doc_base
-        )
+        t_ids, doc, dl, tf, pos_data, pos_offs = _decode_posting_rows(tbl)
         if term_id is None:
             term_id = int(t_ids[0])
             shard = int(
@@ -660,7 +653,6 @@ def _segment_builder(
     n_shards: int,
     spill_rows: Optional[int] = None,
     chunk_rows: Optional[int] = None,
-    doc_base: Optional[int] = None,
 ):
     """Streaming mapInArrow fn: sorted (term_id, shard-of-doc_id, doc_id)
     record batches of (doc_id, blob, term_id) — one row per doc-run, from
@@ -691,18 +683,8 @@ def _segment_builder(
         return np.mod(xxhash64_long_vec(doc_ids), np.int64(n_shards))
 
     def docs_abs(tbl: "pa.Table") -> np.ndarray:
-        """Absolute int64 doc_ids of a pipe table (doc_base set => the
-        pipe carries narrowed int32 doc_id32 = doc_id - base; the shard
-        hash and the on-disk encoding always use the absolute id)."""
-        if doc_base is None:
-            return (
-                tbl.column("doc_id")
-                .combine_chunks()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-        return doc_base + (
-            tbl.column("doc_id32")
+        return (
+            tbl.column("doc_id")
             .combine_chunks()
             .to_numpy(zero_copy_only=False)
             .astype(np.int64)
@@ -710,7 +692,7 @@ def _segment_builder(
 
     def flush(tbl: "pa.Table") -> Iterator["pa.RecordBatch"]:
         term_ids, doc_ids, dl, tf, pos_data, pos_offs = (
-            _decode_posting_rows(tbl, doc_base)
+            _decode_posting_rows(tbl)
         )
         g_start_rows, cols = _build_chunk_arrays(
             term_ids,
@@ -829,7 +811,7 @@ def _segment_builder(
 
             try:
                 row = _encode_group_streaming(
-                    chunks(), avgdl, n_buckets, n_shards, doc_base
+                    chunks(), avgdl, n_buckets, n_shards
                 )
             finally:
                 os.unlink(path)
@@ -939,11 +921,9 @@ def _append_metrics(
 TOKENS_PER_PARTITION = 2_000_000  # target postings per build partition
 
 # fused-path persist gate: grouper-output cache estimate (~24 B/token)
-# must fit comfortably in block-manager memory+disk; beyond this, use
-# bucket_groups > 1 (parquet-materialized tokens_tmp) instead
-_FUSED_PERSIST_MAX_BYTES = int(
-    os.environ.get("TSS_FUSED_PERSIST_MAX_BYTES", str(8 << 30))
-)
+# must fit comfortably in block-manager memory+disk; beyond this the
+# build materializes tokens_tmp to parquet instead
+_FUSED_PERSIST_MAX_BYTES = 8 << 30
 
 
 def _auto_size(total_tokens: int, parallelism: int) -> tuple:
@@ -1085,12 +1065,10 @@ def build_index(
             .parquet(fmt.doc_stats_dir(index_dir))
         )
         ds = spark.read.parquet(fmt.doc_stats_dir(index_dir))
-        n_docs, total_tokens, n_distinct, dmin, dmax = ds.select(
+        n_docs, total_tokens, n_distinct = ds.select(
             F.count("*"),
             F.coalesce(F.sum("doc_len"), F.lit(0)),
             F.countDistinct("doc_id"),
-            F.min("doc_id"),
-            F.max("doc_id"),
         ).first()
         if int(n_docs) != int(n_distinct):
             # a silent collision would merge two documents' postings
@@ -1103,13 +1081,6 @@ def build_index(
         man.n_docs = int(n_docs)
         man.total_tokens = int(total_tokens)
         man.avgdl = man.total_tokens / man.n_docs if man.n_docs else 0.0
-        # pipe-narrowing gate: dense id ranges (sequential ingest ids)
-        # ship as int32 deltas on the segment pipe; sparse hashed ids
-        # keep the int64 column (a 31-bit delta cannot hold them)
-        man.doc_id_base = int(dmin) if n_docs else 0
-        man.doc_id_narrow = bool(
-            n_docs and int(dmax) - int(dmin) < (1 << 31)
-        )
         if auto:
             n_buckets, n_shards = _auto_size(
                 man.total_tokens, spark.sparkContext.defaultParallelism
@@ -1123,40 +1094,30 @@ def build_index(
         )
         checkpoint("doc_stats")
 
-    def posting_rows() -> DataFrame:
-        # The big shuffle carries ONE ROW PER (doc, term) — the map-side
-        # grouper collapses per-token rows and pre-encodes positions
-        # (grouped_postings) — with term_id = xxhash64(term), an int64,
-        # never strings (term<->id uniqueness is asserted by the vocab
-        # stage). No doc_len join: the grouper computes it in-batch (the
-        # former broadcast join could not broadcast doc_stats at 10^12
-        # docs, and the inline-size() alternative hit a Catalyst
-        # CollapseProject hazard — see
-        # tests/test_plans.py::test_no_tokenizer_above_generate).
-        return grouped_postings(corpus)
-
-    # ---- stage: tokens_tmp (posting rows materialized ONLY when the
-    # segment stage is split into multiple resumable units — a single-unit
-    # build fuses group -> shuffle -> sort -> build into one job instead
-    # of paying a full write+read of the posting relation). The tmp keeps
-    # the term STRING (same bytes as the id it would replace) so the
-    # vocab stage below derives the dictionary from it — at scale this
-    # drops a full corpus tokenize scan (3 scans -> 2). ----
-    materialize = bucket_groups > 1
-
-    # Fused single-unit path (bucket_groups=1): share ONE grouper scan
-    # between the vocab and segment stages by persisting the grouper
-    # output (serialized, disk-backed) for the build's duration — 2
-    # corpus tokenize scans -> 1. Size-gated: the posting relation is
-    # bounded by ~24 B x total_tokens (8B doc_id + 8B term-string avg +
-    # blob + overhead); beyond the gate the multi-unit path's parquet
-    # materialization (tokens_tmp) is the right spill medium, not the
-    # block-manager cache.
-    fused_rows = None
-    if (
-        not materialize
+    # ---- segment input: two shapes. The posting shuffle carries ONE
+    # ROW PER (doc, term) from the map-side grouper (grouped_terms ->
+    # drop_terms: int64 term_id, never strings; doc_len computed
+    # in-batch, no doc_stats join — see
+    # tests/test_plans.py::test_no_tokenizer_above_generate).
+    #   * fused (one resumable unit, posting relation under the size
+    #     gate): the grouper output is persisted (serialized,
+    #     disk-backed) for the build's duration and feeds both the vocab
+    #     and segment stages — one corpus tokenize scan, no write+read
+    #     of the posting relation. The gate bounds it by ~24 B x
+    #     total_tokens (8B doc_id + 8B term-string avg + blob + overhead).
+    #   * materialized (several units, or above the gate): the grouper
+    #     output is written once to tokens_tmp, partitioned by
+    #     term_bucket; vocab and every bucket-group unit read it back,
+    #     so a resume never re-tokenizes the corpus. The tmp keeps the
+    #     term STRING (same bytes as the id it would replace) so the
+    #     vocab stage derives the dictionary from it. ----
+    fused = (
+        bucket_groups == 1
         and man.total_tokens * 24 <= _FUSED_PERSIST_MAX_BYTES
-    ):
+    )
+    materialize = not fused
+    fused_rows = None
+    if fused:
         from pyspark import StorageLevel
 
         fused_rows = grouped_terms(corpus).persist(
@@ -1186,8 +1147,7 @@ def build_index(
     try:
         # ---- stage: vocab (the term dictionary; distinct terms only, so the
         # map-side-combined shuffle is tiny next to the posting shuffle;
-        # sourced from tokens_tmp when it exists — doc-term rows, already
-        # tokenized — else from a corpus scan) ----
+        # sourced from the already-tokenized doc-term rows) ----
         if not man.stages.get("vocab"):
             if materialize:
                 terms_src = (
@@ -1196,12 +1156,8 @@ def build_index(
                     .select("term")
                     .distinct()
                 )
-            elif fused_rows is not None:
-                terms_src = fused_rows.select("term").distinct()
             else:
-                terms_src = corpus.select(
-                    F.explode(spark_tokens(F.col("text"))).alias("term")
-                ).distinct()
+                terms_src = fused_rows.select("term").distinct()
             vocab = terms_src.select(
                 "term",
                 F.xxhash64("term").alias("term_id"),
@@ -1247,10 +1203,8 @@ def build_index(
                         F.col("term_bucket").isin(buckets)  # partition-pruned
                     )
                 )
-            elif fused_rows is not None:
-                toks = drop_terms(fused_rows)  # cached: no re-tokenize
             else:
-                toks = posting_rows()
+                toks = drop_terms(fused_rows)  # cached: no re-tokenize
             from pyspark.sql import Observation
 
             obs = Observation(f"seg_metrics_{gi}")
@@ -1266,37 +1220,9 @@ def build_index(
             ).sortWithinPartitions(
                 "term_id", shard_expr(n_shards), "doc_id"
             )
-            # pipe narrowing: dense id range -> ship int32 deltas across
-            # the JVM->Python Arrow pipe; a pure projection ABOVE the
-            # sort, so partitioning/order are preserved and the on-disk
-            # index is byte-identical (the builder reconstructs absolute
-            # ids before hashing/encoding). OPT-IN (TSS_NARROW_DOC_ID=1):
-            # measured on the round-4 host (interleaved full-build A/B
-            # x2 at 400k docs/local[16] AND a passthrough-UDF transfer
-            # control), the 4 B/row width cut does NOT beat the cost of
-            # the extra projection — the round-3 narrowing won by
-            # removing whole COLUMNS (per-column Arrow buffers), which
-            # is where the pipe overhead lives, not raw fixed-column width.
-            # Kept behind the flag with byte-identity pinned
-            # (tests/test_pipe_narrow.py) for hosts where the pipe is
-            # genuinely bandwidth-bound.
-            narrow = man.doc_id_narrow and (
-                os.environ.get("TSS_NARROW_DOC_ID", "0") == "1"
-            )
-            doc_base = man.doc_id_base if narrow else None
-            if narrow:
-                sorted_toks = sorted_toks.select(
-                    (F.col("doc_id") - F.lit(man.doc_id_base))
-                    .cast("int")
-                    .alias("doc_id32"),
-                    "blob",
-                    "term_id",
-                )
             seg = (
                 sorted_toks.mapInArrow(
-                    _segment_builder(
-                        man.avgdl, n_buckets, n_shards, doc_base=doc_base
-                    ),
+                    _segment_builder(man.avgdl, n_buckets, n_shards),
                     schema=seg_schema,
                 )
                 # metrics ride the write job itself — re-reading the segments

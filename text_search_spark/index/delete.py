@@ -213,9 +213,7 @@ def tombstones_df(
     files = man.tombstone_files or []
     if not files:
         return None
-    return spark.read.schema("doc_id long").parquet(
-        *(os.path.join(index_dir, rel.replace("/", os.sep)) for rel in files)
-    )
+    return fmt.read_committed(spark, index_dir, files, "doc_id long")
 
 
 def load_tombstones(index_dir: str, man: "fmt.IndexManifest") -> np.ndarray:

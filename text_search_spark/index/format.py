@@ -61,14 +61,6 @@ class IndexManifest:
     complete: bool = False
     run_id: str = ""
     stages: Dict[str, bool] = field(default_factory=dict)
-    # JVM->Python pipe narrowing for the segment stage (build-transport
-    # only — on-disk bytes are identical either way): when the corpus's
-    # doc_id RANGE fits 31 bits (sequential/dense ingest ids), the pipe
-    # carries int32 (doc_id - doc_id_base) instead of int64 doc_id.
-    # Sparse 60-bit hashed ids auto-disable it. Persisted so a resumed
-    # build re-runs the segment stage with the same transport.
-    doc_id_base: int = 0
-    doc_id_narrow: bool = False
     # resumable-unit layout: group g owns buckets range(g, n_buckets,
     # bucket_groups), and the 'segments:{g}' checkpoints are only valid
     # under the layout that wrote them — persisted so a resume cannot
@@ -81,10 +73,11 @@ class IndexManifest:
     # concurrent streaming appends — a part file an in-flight batch has
     # already landed is invisible until the manifest flip commits it
     # (closes the torn-read seam incremental.py documented through
-    # round 4). None = legacy manifest: readers fall back to the
-    # directory scan. At 10^12-doc scale this list lives in Iceberg
-    # manifest-list files rather than one JSON array; the commit
-    # protocol (file set flips with the snapshot pointer) is identical.
+    # round 4). None only before the first commit: a complete manifest
+    # without it is refused (require_file_lists). At 10^12-doc scale
+    # this list lives in Iceberg manifest-list files rather than one
+    # JSON array; the commit protocol (file set flips with the
+    # snapshot pointer) is identical.
     # Paths always use '/' separators regardless of OS (normalized on
     # write; converted to os-native only at open time) so a manifest
     # written on one OS reads on another.
@@ -123,7 +116,8 @@ class IndexManifest:
     # relative to doc_stats_dir, '/'-normalized; the purge lands
     # compactN- replacement files next to the old ones and this list
     # flips with the commit, so pinned time-travel readers keep a
-    # consistent doc_stats view until vacuum. None = legacy dir scan.
+    # consistent doc_stats view until vacuum. None only before the
+    # first commit, as for segment_files.
     # Externalized to a filelists/ sidecar past the same inline cap as
     # segment_files (a 10k-batch stream would otherwise bloat every
     # manifest JSON); doc_stats_files_ref mirrors segment_files_ref.
@@ -351,8 +345,15 @@ def latest_snapshot_id(index_dir: str) -> int:
     return ids[-1] if ids else 0
 
 
+# fields earlier engine versions wrote and this one ignores (the retired
+# doc_id pipe-narrowing transport); dropped on load so those indexes open
+_RETIRED_MANIFEST_KEYS = ("doc_id_base", "doc_id_narrow")
+
+
 def _manifest_from_dict(index_dir: str, d: dict) -> IndexManifest:
-    m = IndexManifest(**d)
+    m = IndexManifest(
+        **{k: v for k, v in d.items() if k not in _RETIRED_MANIFEST_KEYS}
+    )
     if m.doc_stats_files_ref is not None and m.doc_stats_files is None:
         ref = os.path.join(
             index_dir, m.doc_stats_files_ref.replace("/", os.sep)
@@ -693,42 +694,28 @@ def _list_parquet_files(root: str) -> List[str]:
     return sorted(out)
 
 
-def committed_files_legacy(index_dir: str, stages: Dict[str, bool]) -> List[str]:
-    """Directory-walk fallback for PRE-snapshot manifests
-    (segment_files=None): the segment part files a COMMITTED stage
-    owns — untagged files (the initial batch build), `batchN-` files
-    with `stream:N` committed, `compactN-` files with `compact:N`
-    committed. Orphans from a crashed never-committed batch or
-    compaction attempt are excluded instead of silently adopted."""
-
-    return [
-        p
-        for p in list_segment_files(index_dir)
-        if _stage_committed(p, stages)
-    ]
+def require_file_lists(index_dir: str, m: IndexManifest) -> None:
+    """A complete manifest must carry both committed file lists: every
+    reader and maintenance path opens exactly those files, never a
+    directory scan."""
+    if m.complete and (m.segment_files is None or m.doc_stats_files is None):
+        raise ValueError(
+            f"{index_dir}: no committed file list — rebuild the index"
+        )
 
 
-def _stage_committed(p: str, stages: Dict[str, bool]) -> bool:
-    base = os.path.basename(p)
-    mb = re.match(r"batch(\d+)-", base)
-    if mb:
-        return bool(stages.get(f"stream:{mb.group(1)}"))
-    mc = re.match(r"compact(\d+)-", base)
-    if mc:
-        return bool(stages.get(f"compact:{mc.group(1)}"))
-    return True
-
-
-def committed_doc_stats_legacy(
-    index_dir: str, stages: Dict[str, bool]
-) -> List[str]:
-    """committed_files_legacy for the doc_stats table (legacy manifests
-    with doc_stats_files=None)."""
-    return [
-        p
-        for p in list_doc_stats_files(index_dir)
-        if _stage_committed(p, stages)
-    ]
+def read_committed(spark, root: str, files: List[str], schema: str):
+    """Open exactly the given committed parquet files ('/'-separated
+    paths relative to root) with an explicit schema; an empty list reads
+    as an empty relation. basePath keeps partition-column discovery
+    (term_bucket) for partitioned tables."""
+    if not files:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", root)
+        .parquet(*(os.path.join(root, p.replace("/", os.sep)) for p in files))
+    )
 
 
 def segments_dir(index_dir: str) -> str:

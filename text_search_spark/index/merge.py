@@ -207,22 +207,12 @@ def _merged_segments(spark, seg, avgdl, n_buckets, s_new, tombs=None):
 
 def _read_committed_segments(spark: SparkSession, index_dir: str, man):
     """The source index's segment rows — exactly the manifest-committed
-    snapshot when the manifest carries a file list (a compaction racing
-    a streaming append must not absorb half an uncommitted batch);
-    directory scan for legacy manifests."""
-    src_root = fmt.segments_dir(index_dir)
-    if man.segment_files is not None and not man.segment_files:
-        return spark.createDataFrame([], fmt.SEG_READ_SCHEMA)
-    if man.segment_files is not None:
-        return (
-            spark.read.schema(fmt.SEG_READ_SCHEMA)
-            .option("basePath", src_root)
-            .parquet(
-                *(os.path.join(src_root, p.replace("/", os.sep))
-                    for p in man.segment_files)
-            )
-        )
-    return spark.read.schema(fmt.SEG_READ_SCHEMA).parquet(src_root)
+    snapshot (a compaction racing a streaming append must not absorb
+    half an uncommitted batch)."""
+    return fmt.read_committed(
+        spark, fmt.segments_dir(index_dir), man.segment_files,
+        fmt.SEG_READ_SCHEMA,
+    )
 
 
 def merge_shards(
@@ -231,6 +221,7 @@ def merge_shards(
     """Produce a new index at out_dir with n_shards /= factor."""
     man = fmt.load_manifest(index_dir)
     assert man is not None and man.complete
+    fmt.require_file_lists(index_dir, man)
     s_old, s_new = man.n_shards, man.n_shards // factor
     assert s_new >= 1 and s_old % s_new == 0
     avgdl = man.avgdl
@@ -249,10 +240,10 @@ def merge_shards(
     # until rebuild_term_stats runs (the merged copy is then empty and
     # likewise needs a rebuild), and an all-blank index has empty dirs —
     # neither may crash the merge on schema inference / missing path.
-    os.makedirs(fmt.doc_stats_dir(index_dir), exist_ok=True)
     os.makedirs(fmt.term_stats_dir(index_dir), exist_ok=True)
-    spark.read.schema(fmt.DOC_STATS_READ_SCHEMA).parquet(
-        fmt.doc_stats_dir(index_dir)
+    fmt.read_committed(
+        spark, fmt.doc_stats_dir(index_dir), man.doc_stats_files,
+        fmt.DOC_STATS_READ_SCHEMA,
     ).write.mode("overwrite").parquet(fmt.doc_stats_dir(out_dir))
     spark.read.schema(fmt.VOCAB_READ_SCHEMA).parquet(
         fmt.vocab_dir(index_dir)
@@ -276,6 +267,7 @@ def merge_shards(
         stages={"merged_from": True},
     )
     new_man.segment_files = fmt.list_segment_files(out_dir)
+    new_man.doc_stats_files = fmt.list_doc_stats_files(out_dir)
     fmt.save_manifest(out_dir, new_man)
 
 
@@ -304,10 +296,8 @@ def compact_in_place(
     Crash contract: the snapshot claim is the only commit point. A
     crash before it leaves half-landed compact files that no manifest
     references (invisible to every reader); a rerun replaces them
-    (same-generation strays are cleaned FIRST — before any read of
-    seg_root, so a legacy directory-scan source can never absorb a
-    prior crashed attempt's output and double-count postings) and
-    vacuum removes any strays. one_file_per_bucket adds a second small
+    (same-generation strays are cleaned FIRST) and vacuum removes any
+    strays. one_file_per_bucket adds a second small
     shuffle of the MERGED rows (already compressed — tiny next to the
     corpus), sorted within partitions on (term_bucket, term_id, shard)
     so the dynamic-partition writer's required partition-column
@@ -339,6 +329,7 @@ def compact_in_place(
     for _attempt in range(5):
         man = fmt.load_manifest(index_dir)
         assert man is not None and man.complete
+        fmt.require_file_lists(index_dir, man)
         gen = sum(1 for k in man.stages if k.startswith("compact:"))
         lock = _claim_compaction_lock(index_dir, gen)
         man2 = fmt.load_manifest(index_dir)
@@ -385,11 +376,8 @@ def _compact_in_place_locked(
 
     seg_root = fmt.segments_dir(index_dir)
     prefix = f"compact{gen}-"
-    # clean a previous crashed attempt of the SAME generation BEFORE
-    # building the source DataFrame: for a legacy manifest the source
-    # is a directory scan, and stale same-generation strays would merge
-    # in twice (they are re-encodes of rows already in the source).
-    # doc_stats strays too (the purge lands compactN- files there).
+    # clean a previous crashed attempt of the SAME generation (segment
+    # and doc_stats strays: the purge lands compactN- files there too)
     for walk_root in (seg_root, fmt.doc_stats_dir(index_dir)):
         if not os.path.isdir(walk_root):
             continue
@@ -399,15 +387,7 @@ def _compact_in_place_locked(
                     os.remove(os.path.join(d, f))
 
     # the exact snapshot being compacted — the rebase below replaces
-    # precisely this set in whatever manifest wins the CAS race. For a
-    # legacy manifest the set is the committed-stage walk (an
-    # uncommitted landing batch's files must not be absorbed), pinned
-    # onto the in-memory manifest so the read opens exactly these files
-    # rather than re-scanning the directory later.
-    if man.segment_files is None:
-        man.segment_files = fmt.committed_files_legacy(
-            index_dir, man.stages
-        )
+    # precisely this set in whatever manifest wins the CAS race
     base_files = man.segment_files
 
     # ---- tombstone purge bookkeeping (delete.py contract) ----
@@ -437,30 +417,18 @@ def _compact_in_place_locked(
         tombs = None
     tombs_big = tombs is not None and tombs.size > TOMBSTONE_DRIVER_MAX
     ds_dir = fmt.doc_stats_dir(index_dir)
-    if man.doc_stats_files is None:
-        man.doc_stats_files = fmt.committed_doc_stats_legacy(
-            index_dir, man.stages
-        )
     base_ds_files = list(man.doc_stats_files)
 
     def _ds_base_df():
-        if not base_ds_files:
-            return spark.createDataFrame([], fmt.DOC_STATS_READ_SCHEMA)
-        return spark.read.schema(fmt.DOC_STATS_READ_SCHEMA).parquet(
-            *(
-                os.path.join(ds_dir, p.replace("/", os.sep))
-                for p in base_ds_files
-            )
+        return fmt.read_committed(
+            spark, ds_dir, base_ds_files, fmt.DOC_STATS_READ_SCHEMA
         )
 
     n_purged, purged_tokens = 0, 0
     if tombs is not None:
-        tomb_df = spark.read.parquet(
-            *(
-                os.path.join(index_dir, rel.replace("/", os.sep))
-                for rel in tomb_files_consumed
-            )
-        ).select("doc_id").distinct()
+        tomb_df = fmt.read_committed(
+            spark, index_dir, tomb_files_consumed, "doc_id long"
+        ).distinct()
         if not tombs_big:
             # small purge set: force the broadcast (skips the stats
             # side's map-stage shuffle write); big sets let AQE choose
@@ -569,28 +537,19 @@ def _compact_in_place_locked(
     consumed = set(tomb_files_consumed)
 
     def _commit(m2: "fmt.IndexManifest") -> None:
-        cur = (
-            m2.segment_files
-            if m2.segment_files is not None
-            else list(base_files)
-        )
         m2.segment_files = sorted(
-            (set(cur) - base_set) | set(new_files)
+            (set(m2.segment_files) - base_set) | set(new_files)
         )
         m2.n_shards = s_new
         m2.stages[f"compact:{gen}"] = True
         if tombs is not None:
-            cur_ds = (
-                m2.doc_stats_files
-                if m2.doc_stats_files is not None
-                else list(base_ds_files)
-            )
             # replace exactly the purged base set; doc_stats files a
             # racing append committed since are retained (their docs
             # were not in this purge's tombstones by definition of the
             # base snapshot)
             m2.doc_stats_files = sorted(
-                (set(cur_ds) - set(base_ds_files)) | set(new_ds_files)
+                (set(m2.doc_stats_files) - set(base_ds_files))
+                | set(new_ds_files)
             )
             m2.tombstone_files = sorted(
                 set(m2.tombstone_files or []) - consumed
@@ -643,17 +602,14 @@ def vacuum_segments(
     import time as _time
 
     man = fmt.load_manifest(index_dir)
-    assert man is not None and man.segment_files is not None, (
-        "vacuum needs a manifest with a committed file list"
-    )
+    assert man is not None and man.complete, "vacuum needs a complete index"
+    fmt.require_file_lists(index_dir, man)
     # union of the retained snapshots' file sets (history scan; the
-    # current manifest is always retained even if snapshots/ is empty)
+    # current manifest is always retained even if snapshots/ is empty;
+    # a retained pre-commit build snapshot lists nothing)
     listed = set(man.segment_files)
     listed_tombs = set(man.tombstone_files or [])
-    # legacy manifests (doc_stats_files=None) keep their entire
-    # doc_stats dir: a None here means "retain everything" below
-    legacy_ds = man.doc_stats_files is None
-    listed_ds = set(man.doc_stats_files or [])
+    listed_ds = set(man.doc_stats_files)
     if retain_last > 0:
         sids = fmt.list_snapshot_ids(index_dir)
         for sid in sids[-retain_last:]:
@@ -663,10 +619,7 @@ def vacuum_segments(
             m2 = fmt._manifest_from_dict(index_dir, d)
             listed.update(m2.segment_files or [])
             listed_tombs.update(m2.tombstone_files or [])
-            if m2.doc_stats_files is None:
-                legacy_ds = True
-            else:
-                listed_ds.update(m2.doc_stats_files)
+            listed_ds.update(m2.doc_stats_files or [])
 
     committed_streams = sorted(
         int(k.split(":")[1])
@@ -702,28 +655,25 @@ def vacuum_segments(
             removed += 1
 
     # doc_stats files out of every retained snapshot (pre-purge
-    # versions) expire under the same rules as segments; skipped
-    # entirely while any retained snapshot is legacy (no list = the
-    # whole dir is its snapshot)
-    if not legacy_ds:
-        ds_root = fmt.doc_stats_dir(index_dir)
-        if os.path.isdir(ds_root):
-            for f in os.listdir(ds_root):
-                if not f.endswith(".parquet"):
-                    continue
-                if f in listed_ds:
-                    continue
-                mb = _re.match(r"batch(\d+)-", f)
-                if mb and int(mb.group(1)) > max_stream:
-                    continue  # possibly still landing
-                mc = _re.match(r"compact(\d+)-", f)
-                if mc and int(mc.group(1)) >= cur_compact_gen:
-                    continue  # active compactor's landing files
-                p = os.path.join(ds_root, f)
-                if grace_s > 0 and os.path.getmtime(p) > cutoff:
-                    continue
-                os.remove(p)
-                removed += 1
+    # versions) expire under the same rules as segments
+    ds_root = fmt.doc_stats_dir(index_dir)
+    if os.path.isdir(ds_root):
+        for f in os.listdir(ds_root):
+            if not f.endswith(".parquet"):
+                continue
+            if f in listed_ds:
+                continue
+            mb = _re.match(r"batch(\d+)-", f)
+            if mb and int(mb.group(1)) > max_stream:
+                continue  # possibly still landing
+            mc = _re.match(r"compact(\d+)-", f)
+            if mc and int(mc.group(1)) >= cur_compact_gen:
+                continue  # active compactor's landing files
+            p = os.path.join(ds_root, f)
+            if grace_s > 0 and os.path.getmtime(p) > cutoff:
+                continue
+            os.remove(p)
+            removed += 1
 
     # tombstone files consumed by a purge (and out of every retained
     # snapshot) expire too. Unlike segments, tombstone files have NO

@@ -164,20 +164,7 @@ class IndexReader:
                 f"engine scores with k1={K1} b={B} (codec.K1/B) — "
                 "block-max bounds would not match the scorer"
             )
-        if m.segment_files is None and os.path.isdir(
-            fmt.segments_dir(self.index_dir)
-        ):
-            # legacy pre-snapshot manifest on a LOCAL filesystem: pin
-            # the committed-stage file walk so every reader path opens
-            # exactly the committed set — a raw directory scan would
-            # adopt landed-but-never-committed batchN-/compactN- orphans
-            # from a crashed append/compaction, which the maintenance
-            # paths (merge/incremental) deliberately exclude. Non-local
-            # roots keep None: the walk cannot see them, and the
-            # Spark-scan branches (which CAN read URIs) take over.
-            m.segment_files = fmt.committed_files_legacy(
-                self.index_dir, m.stages
-            )
+        fmt.require_file_lists(self.index_dir, m)
         return m
 
     def refresh(self) -> None:
@@ -239,50 +226,24 @@ class IndexReader:
         # reuse one DataFrame across queries: the file listing + parquet
         # footer reads happen once per reader, not once per query
         if self._segments_df is None:
-            root = fmt.segments_dir(self.index_dir)
-            files = self.manifest.segment_files
-            if files is not None:
-                # snapshot isolation: open exactly the manifest-committed
-                # file set — part files an in-flight streaming append has
-                # landed but not committed are invisible (Iceberg-style
-                # snapshot read; see format.IndexManifest.segment_files).
-                # basePath keeps term_bucket partition-column discovery.
-                if not files:
-                    self._segments_df = self.spark.createDataFrame(
-                        [], fmt.SEG_READ_SCHEMA
-                    )
-                else:
-                    self._segments_df = (
-                        self.spark.read.schema(fmt.SEG_READ_SCHEMA)
-                        .option("basePath", root)
-                        .parquet(*(os.path.join(root, p.replace("/", os.sep)) for p in files))
-                    )
-            else:
-                # legacy manifest (pre-snapshot): directory scan.
-                # explicit schema: an empty index (zero segment files)
-                # must read as an empty relation, not fail inference
-                self._segments_df = self.spark.read.schema(
-                    fmt.SEG_READ_SCHEMA
-                ).parquet(root)
+            # snapshot isolation: open exactly the manifest-committed file
+            # set — part files an in-flight streaming append has landed
+            # but not committed are invisible (Iceberg-style snapshot
+            # read; see format.IndexManifest.segment_files)
+            self._segments_df = fmt.read_committed(
+                self.spark,
+                fmt.segments_dir(self.index_dir),
+                self.manifest.segment_files,
+                fmt.SEG_READ_SCHEMA,
+            )
         return self._segments_df
 
     def segment_files_for_buckets(self, buckets: Iterable[int]) -> List[str]:
         """Manifest-committed segment files (absolute paths) under the
         given term_bucket partitions — the file set every driver-side
         pyarrow read opens (snapshot isolation vs in-flight appends).
-        Empty list = the committed snapshot has no files there.
-
-        Raises FileNotFoundError when the manifest carries no file list:
-        _load_validated pins a legacy manifest on a LOCAL root to its
-        committed-stage walk, so what is left is a non-local legacy
-        root. Every caller falls back to the Spark scan, which reads
-        URIs."""
+        Empty list = the committed snapshot has no files there."""
         files = self.manifest.segment_files
-        if files is None:
-            raise FileNotFoundError(
-                f"{self.index_dir}: no committed file list (non-local "
-                "legacy index) — sidecar reads unavailable"
-            )
         root = fmt.segments_dir(self.index_dir)
         # manifest paths are always '/'-separated
         want = {f"term_bucket={b}" for b in buckets}
@@ -310,9 +271,9 @@ class IndexReader:
         deltas = self.manifest.term_stats_delta_files
         if not deltas:
             return base
-        dd = fmt.term_stats_deltas_dir(self.index_dir)
-        ddf = self.spark.read.schema(fmt.TERM_STATS_READ_SCHEMA).parquet(
-            *(os.path.join(dd, rel) for rel in deltas)
+        ddf = fmt.read_committed(
+            self.spark, fmt.term_stats_deltas_dir(self.index_dir), deltas,
+            fmt.TERM_STATS_READ_SCHEMA,
         )
         return (
             base.unionByName(ddf)
@@ -330,28 +291,13 @@ class IndexReader:
         """This snapshot's doc_stats — opens exactly the manifest-
         committed file set (a pinned time-travel reader sees its own
         snapshot's rows even after a later purge landed replacement
-        files; legacy manifests fall back to the dir scan), minus
-        tombstoned docs."""
-        root = fmt.doc_stats_dir(self.index_dir)
-        files = self.manifest.doc_stats_files
-        if files is not None:
-            if not files:
-                ds = self.spark.createDataFrame(
-                    [], fmt.DOC_STATS_READ_SCHEMA
-                )
-            else:
-                ds = self.spark.read.schema(
-                    fmt.DOC_STATS_READ_SCHEMA
-                ).parquet(
-                    *(
-                        os.path.join(root, p.replace("/", os.sep))
-                        for p in files
-                    )
-                )
-        else:
-            ds = self.spark.read.schema(fmt.DOC_STATS_READ_SCHEMA).parquet(
-                root
-            )
+        files), minus tombstoned docs."""
+        ds = fmt.read_committed(
+            self.spark,
+            fmt.doc_stats_dir(self.index_dir),
+            self.manifest.doc_stats_files,
+            fmt.DOC_STATS_READ_SCHEMA,
+        )
         if self.tombstones_distributed():
             # MASS regime: anti-join the tombstone parquet directly —
             # ids never touch the driver; AQE picks broadcast vs

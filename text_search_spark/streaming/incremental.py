@@ -106,6 +106,20 @@ def _append_batch(
         # this batch already committed (manifest flip is the commit
         # point) — a redelivery after a post-commit failure is a no-op
         return
+    if man is not None and not man.complete:
+        # an uncommitted manifest with non-stream stages is a batch
+        # build in progress or crashed: refuse before landing any file,
+        # so neither this append adopts the build's files nor a resumed
+        # build adopts this batch's
+        build_stages = {
+            k for k in man.stages if not k.startswith("stream:")
+        } - {"layout_from_data"}
+        if build_stages:
+            raise ValueError(
+                f"{index_dir}: unfinished batch build (stages "
+                f"{sorted(build_stages)}) — resume it with build_index or "
+                "delete the directory"
+            )
     if man is None:
         man = fmt.IndexManifest(
             format_version=fmt.FORMAT_VERSION,
@@ -260,16 +274,8 @@ def _append_batch_inner(
     # stats, so append-vs-purge races rebase correctly.
     ts_delta_rels: list = []
     if new_files:
-        seg_root = fmt.segments_dir(index_dir)
-        batch_seg = (
-            spark.read.schema(fmt.SEG_READ_SCHEMA)
-            .option("basePath", seg_root)
-            .parquet(
-                *(
-                    os.path.join(seg_root, p.replace("/", os.sep))
-                    for p in new_files
-                )
-            )
+        batch_seg = fmt.read_committed(
+            spark, fmt.segments_dir(index_dir), new_files, fmt.SEG_READ_SCHEMA
         )
         ts_delta = (
             batch_seg.groupBy("term_id", "term_bucket")
@@ -327,6 +333,9 @@ def _append_batch_inner(
     def _commit(m2: "fmt.IndexManifest") -> bool:
         if m2.stages.get(f"stream:{batch_id}"):
             return False  # redelivered after commit — no-op
+        # a None file list only means "no commit yet" (_append_batch
+        # refused an unfinished batch build before landing anything)
+        fmt.require_file_lists(index_dir, m2)
         if m2.n_buckets == 0 or (
             m2.total_tokens == 0 and not m2.stages.get("layout_from_data")
         ):
@@ -335,32 +344,12 @@ def _append_batch_inner(
             m2.n_buckets, m2.n_shards = n_buckets, n_shards
         if m2.total_tokens + b_tokens > 0:
             m2.stages["layout_from_data"] = True
-        if m2.segment_files is None:
-            # legacy pre-snapshot manifest: initialize the file set
-            # from a directory walk, keeping only files a COMMITTED
-            # stage owns. Orphans from an earlier crashed
-            # never-committed batch (e.g. a checkpoint reset reassigned
-            # batch ids) are excluded instead of silently committed
-            # (round-6 fix).
-            prev_files = [
-                p
-                for p in fmt.committed_files_legacy(index_dir, m2.stages)
-                if not os.path.basename(p).startswith(tag)
-            ]
-        else:
-            prev_files = m2.segment_files
-        m2.segment_files = sorted(set(prev_files) | set(new_files))
-        if m2.doc_stats_files is None:
-            prev_ds = [
-                p
-                for p in fmt.committed_doc_stats_legacy(
-                    index_dir, m2.stages
-                )
-                if not os.path.basename(p).startswith(ds_tag)
-            ]
-        else:
-            prev_ds = m2.doc_stats_files
-        m2.doc_stats_files = sorted(set(prev_ds) | set(new_ds_files))
+        m2.segment_files = sorted(
+            set(m2.segment_files or []) | set(new_files)
+        )
+        m2.doc_stats_files = sorted(
+            set(m2.doc_stats_files or []) | set(new_ds_files)
+        )
         if not m2.complete and m2.n_docs == 0:
             # brand-new index: stamp the current format. An EXISTING
             # other-version manifest keeps its version so the reader's
@@ -521,9 +510,7 @@ def _fold_term_stats_locked(
     if len(deltas) <= max_delta_files:
         return False
     td = fmt.term_stats_deltas_dir(index_dir)
-    ddf = spark.read.schema(fmt.TERM_STATS_READ_SCHEMA).parquet(
-        *(os.path.join(td, rel) for rel in deltas)
-    )
+    ddf = fmt.read_committed(spark, td, deltas, fmt.TERM_STATS_READ_SCHEMA)
     folded = (
         ddf.groupBy("term_id")
         .agg(
@@ -586,23 +573,14 @@ def _rebuild_term_stats_locked(
     spark: SparkSession, index_dir: str, delta_grace_s: float
 ) -> None:
     man0 = fmt.load_manifest(index_dir)
-    root = fmt.segments_dir(index_dir)
-    if man0 is not None and man0.segment_files is not None:
-        # derive stats from the committed snapshot only (a concurrent
-        # in-flight append's files must not leak into term_stats)
-        if man0.segment_files:
-            seg = (
-                spark.read.schema(fmt.SEG_READ_SCHEMA)
-                .option("basePath", root)
-                .parquet(
-                    *(os.path.join(root, p.replace("/", os.sep))
-                      for p in man0.segment_files)
-                )
-            )
-        else:
-            seg = spark.createDataFrame([], fmt.SEG_READ_SCHEMA)
-    else:
-        seg = spark.read.schema(fmt.SEG_READ_SCHEMA).parquet(root)
+    # derive stats from the committed snapshot only (a concurrent
+    # in-flight append's files must not leak into term_stats)
+    seg = fmt.read_committed(
+        spark,
+        fmt.segments_dir(index_dir),
+        (man0.segment_files or []) if man0 is not None else [],
+        fmt.SEG_READ_SCHEMA,
+    )
     vocab = (
         spark.read.schema(fmt.VOCAB_READ_SCHEMA)
         .parquet(fmt.vocab_dir(index_dir))
@@ -736,22 +714,12 @@ def upsert_batch(
         # (which now includes this batch's own rows — excluded by the
         # anti-join on our ids); never a raw dir scan, which could see
         # another in-flight batch's uncommitted landing files
-        ds_dir = fmt.doc_stats_dir(index_dir)
-        man2 = fmt.load_manifest(index_dir)
-        ds_files = man2.doc_stats_files if man2 else None
-        if ds_files is not None:
-            ds = spark.read.schema(fmt.DOC_STATS_READ_SCHEMA).parquet(
-                *(
-                    os.path.join(ds_dir, p.replace("/", os.sep))
-                    for p in ds_files
-                )
-            ) if ds_files else spark.createDataFrame(
-                [], fmt.DOC_STATS_READ_SCHEMA
-            )
-        else:
-            ds = spark.read.schema(fmt.DOC_STATS_READ_SCHEMA).parquet(
-                ds_dir
-            )
+        ds = fmt.read_committed(
+            spark,
+            fmt.doc_stats_dir(index_dir),
+            fmt.load_manifest(index_dir).doc_stats_files,
+            fmt.DOC_STATS_READ_SCHEMA,
+        )
         old = (
             ds.join(versioned.select("url"), "url", "leftsemi")
             .join(versioned.select("doc_id"), "doc_id", "left_anti")
