@@ -217,3 +217,24 @@ def test_environmental_failure_falls_back_and_rolls_back_phases(
     assert sink["path"] == "shard_topk" and jobs > 0
     assert "read_s" not in sink
     assert got == want
+
+    # the df lookup falls back on the same environmental errors only: a
+    # defect in the sidecar read surfaces instead of a silent Spark scan
+    def df_scan_raising(exc):
+        def scan(self, id_list, blist):
+            raise exc
+
+        return scan
+
+    monkeypatch.setattr(
+        IndexReader, "_df_sidecar_scan", df_scan_raising(ValueError("codec"))
+    )
+    with pytest.raises(ValueError, match="codec"):
+        _run(spark, ix, specs, True, "df-defect", reader=IndexReader(spark, ix))
+    monkeypatch.setattr(
+        IndexReader, "_df_sidecar_scan", df_scan_raising(OSError("no fs"))
+    )
+    got, _sink, _jobs = _run(
+        spark, ix, specs, True, "df-fallback", reader=IndexReader(spark, ix)
+    )
+    assert got == want

@@ -2,6 +2,8 @@
 built directly at the target shard count (same docs -> same gaps -> same
 varbyte), across one and two merge levels."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -168,3 +170,17 @@ def test_compact_in_place_factor_merges_shards(spark, tmp_path):
     man = fmt.load_manifest(ix)
     assert man.n_shards == 1
     assert bm25_topk_rows(spark, ix, specs, k=10) == before
+
+    # a factor whose quotient does not divide n_shards would break the
+    # pmod(xxhash64(doc_id), n_shards) routing: refused as caller input
+    # (not an assert, which python -O strips), before any lock or write
+    ix5 = str(tmp_path / "cipf_ix5")
+    build_index(spark, prepare_corpus(pdf, url_col="url"), ix5,
+                n_buckets=4, n_shards=5, bucket_groups=1)
+    man5 = fmt.load_manifest(ix5)
+    with pytest.raises(ValueError, match="factor 2"):
+        compact_in_place(spark, ix5, factor=2)
+    with pytest.raises(ValueError, match="factor 2"):
+        merge_shards(spark, ix5, str(tmp_path / "cipf_m5"), factor=2)
+    assert fmt.load_manifest(ix5) == man5
+    assert not [f for f in os.listdir(ix5) if f.startswith(".compact")]

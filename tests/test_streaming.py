@@ -146,6 +146,23 @@ def test_batch_append_idempotent_under_retry(spark, tmp_path):
     assert [
         (r.term_id, r.shard, r.df_part, bytes(r.postings)) for r in seg2
     ] == [(r.term_id, r.shard, r.df_part, bytes(r.postings)) for r in seg1]
+    # the retry replaced the batch's metrics row too, and the commit
+    # lists exactly the batch's landed files
+    stages = [
+        r.stage for r in spark.read.parquet(fmt.metrics_dir(ix)).collect()
+    ]
+    assert stages.count("stream_batch:0") == 1
+    for root, listed in (
+        (fmt.segments_dir(ix), man2.segment_files),
+        (fmt.doc_stats_dir(ix), man2.doc_stats_files),
+    ):
+        on_disk = sorted(
+            os.path.relpath(os.path.join(d, f), root).replace(os.sep, "/")
+            for d, _dirs, files in os.walk(root)
+            for f in files
+            if f.startswith("batch0-")
+        )
+        assert on_disk and listed == on_disk
 
 
 def test_doc_id_collision_fails_build(spark, tmp_path):

@@ -871,7 +871,6 @@ def _segment_builder(
 
 
 def _append_metrics(
-    spark: SparkSession,
     index_dir: str,
     run_id: str,
     stage: str,
@@ -880,10 +879,13 @@ def _append_metrics(
     postings: int,
     nbytes: int,
     status: str = "complete",
+    name: Optional[str] = None,
 ) -> None:
-    """Append one audit row to the metrics table.
+    """Append one audit row to the metrics table, as its own file
+    (`name`, default a fresh part-{uuid}; a fixed name makes a rerun
+    replace its row).
 
-    Written driver-side with pyarrow (tmp + atomic rename) instead of a
+    Written driver-side with pyarrow (fmt.put_table) instead of a
     createDataFrame().write Spark job: the row is a single tuple of
     driver-known values, and the Spark job fired per checkpointed stage
     was ~0.2-0.3 s of pure scheduling overhead (round-8, guide §5: the
@@ -893,7 +895,6 @@ def _append_metrics(
     import uuid
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     tbl = pa.table(
         {
@@ -910,12 +911,11 @@ def _append_metrics(
             ),
         }
     )
-    d = fmt.metrics_dir(index_dir)
-    os.makedirs(d, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(d, "." + name + ".tmp")
-    pq.write_table(tbl, tmp)
-    os.rename(tmp, os.path.join(d, name))
+    fmt.put_table(
+        fmt.metrics_dir(index_dir),
+        name or f"part-{uuid.uuid4().hex}.parquet",
+        tbl,
+    )
 
 
 TOKENS_PER_PARTITION = 2_000_000  # target postings per build partition
@@ -1089,9 +1089,7 @@ def build_index(
         # snapshot-track the doc_stats file set (round-6b): the purge
         # and vacuum flip/expire it like segments
         man.doc_stats_files = fmt.list_doc_stats_files(index_dir)
-        _append_metrics(
-            spark, index_dir, run_id, "doc_stats", "all", n_docs, 0, 0
-        )
+        _append_metrics(index_dir, run_id, "doc_stats", "all", n_docs, 0, 0)
         checkpoint("doc_stats")
 
     # ---- segment input: two shapes. The posting shuffle carries ONE
@@ -1256,7 +1254,6 @@ def build_index(
             )
             got = obs.get
             _append_metrics(
-                spark,
                 index_dir,
                 run_id,
                 stage_name,
@@ -1286,15 +1283,9 @@ def build_index(
         )
         vocab = spark.read.schema(fmt.VOCAB_READ_SCHEMA).parquet(
             fmt.vocab_dir(index_dir)
-        ).select("term", "term_id")
+        )
         (
-            seg.groupBy("term_id", "term_bucket")
-            .agg(
-                F.sum("df_part").alias("df"),
-                F.sum("cf_part").alias("cf"),
-            )
-            .join(vocab, "term_id")
-            .select("term", "term_id", "df", "cf", "term_bucket")
+            fmt.term_stats_of(seg, vocab)
             .write.mode("overwrite")
             .partitionBy("term_bucket")
             .parquet(fmt.term_stats_dir(index_dir))

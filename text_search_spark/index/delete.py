@@ -57,7 +57,6 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 import uuid
 from typing import Iterable, List, Optional, Union
 
@@ -145,14 +144,12 @@ def delete_docs(
 def _write_tombstone_file(index_dir: str, ids: np.ndarray) -> str:
     """Land one sorted single-column tombstone parquet; returns its
     manifest-relative path."""
-    tdir = fmt.tombstones_dir(index_dir)
-    os.makedirs(tdir, exist_ok=True)
     fname = f"del-{uuid.uuid4().hex[:12]}.parquet"
-    tmp = os.path.join(tdir, "." + fname + ".tmp")
-    pq.write_table(
-        pa.table({"doc_id": pa.array(ids, type=pa.int64())}), tmp
+    fmt.put_table(
+        fmt.tombstones_dir(index_dir),
+        fname,
+        pa.table({"doc_id": pa.array(ids, type=pa.int64())}),
     )
-    os.replace(tmp, os.path.join(tdir, fname))
     return f"tombstones/{fname}"
 
 
@@ -160,34 +157,23 @@ def _write_tombstones_distributed(
     spark: SparkSession, index_dir: str, ids_df: DataFrame, n: int
 ) -> List[str]:
     """Executor-side tombstone write: range-partition the distinct ids
-    (sorted within each file — keeps the driver path's load contract),
-    write to a landing dir, rename the parts into tombstones/ under one
-    delete's uuid tag. The rename is the same land-then-commit pattern
-    segment batches use; a crashed half-landed set is unreferenced and
-    inert (vacuum's tombstone grace sweeps it)."""
-    tdir = fmt.tombstones_dir(index_dir)
-    os.makedirs(tdir, exist_ok=True)
-    tag = f"del-{uuid.uuid4().hex[:12]}"
-    tmp = os.path.join(tdir, "." + tag + ".landing")
-    shutil.rmtree(tmp, ignore_errors=True)
+    (sorted within each file — keeps the driver path's load contract)
+    and land the parts in tombstones/ under one delete's uuid tag
+    (fmt.land, the same land-then-commit pattern segment batches use);
+    a crashed half-landed set is unreferenced and inert (vacuum's
+    tombstone grace sweeps it)."""
     n_files = max(1, math.ceil(n / _IDS_PER_FILE))
-    (
-        ids_df.repartitionByRange(n_files, "doc_id")
+    rels = fmt.land(
+        lambda p: ids_df.repartitionByRange(n_files, "doc_id")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
-        .parquet(tmp)
+        .parquet(p),
+        fmt.tombstones_dir(index_dir),
+        f"del-{uuid.uuid4().hex[:12]}-",
     )
-    rels: List[str] = []
-    for i, f in enumerate(sorted(os.listdir(tmp))):
-        if not f.endswith(".parquet"):
-            continue
-        fname = f"{tag}-{i:05d}.parquet"
-        os.replace(os.path.join(tmp, f), os.path.join(tdir, fname))
-        rels.append(f"tombstones/{fname}")
-    shutil.rmtree(tmp, ignore_errors=True)
     if not rels:  # all-null input degenerates to nothing to commit
         raise AssertionError("distributed tombstone write landed 0 files")
-    return rels
+    return [f"tombstones/{f}" for f in rels]
 
 
 def tombstone_rows_bound(index_dir: str, man: "fmt.IndexManifest") -> int:

@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import uuid
 from dataclasses import asdict, dataclass, field
 from typing import Callable, Dict, List, Optional
@@ -186,10 +187,12 @@ class CommitBackend:
 
     Deliberately OUT of scope: segment/doc_stats/tombstone data files
     and filelist sidecars. Those are immutable write-once-then-
-    referenced Parquet/JSON that Spark itself reads and writes via
-    Hadoop FileSystems — pointing an index at s3a:// makes the data
-    plane work out of the box; only this metadata seam needs the
-    conditional-write mapping above."""
+    referenced Parquet/JSON. Spark writes them, but every data file
+    still lands through `land` (os.walk + os.replace out of a tmp dir)
+    and expires through `sweep`, with single driver-side files written
+    by `put_table`: those three helpers are the remaining local-FS
+    assumption of the data plane, so an s3a:// index root does not work
+    until they go through a storage seam too."""
 
     def claim(self, path: str, payload: str) -> bool:
         raise NotImplementedError
@@ -267,6 +270,15 @@ def set_commit_backend(b: CommitBackend) -> CommitBackend:
     prev = _BACKEND
     _BACKEND = b
     return prev
+
+
+def release_lock(lock: str) -> None:
+    """Drop a lock claimed with try_claim_pid_lock; one that is already
+    gone is not an error."""
+    try:
+        os.remove(lock)
+    except FileNotFoundError:
+        pass
 
 
 def try_claim_pid_lock(lock: str) -> bool:
@@ -454,6 +466,14 @@ def _write_pointer(index_dir: str, payload: dict, sid: int) -> None:
     _BACKEND.put(p, json.dumps(payload, indent=2))
 
 
+def _slash_paths(m: IndexManifest) -> None:
+    """Manifest file lists are always '/'-separated (see segment_files)."""
+    for k in ("segment_files", "tombstone_files", "doc_stats_files"):
+        files = getattr(m, k)
+        if files is not None:
+            setattr(m, k, [p.replace(os.sep, "/") for p in files])
+
+
 def save_manifest(index_dir: str, m: IndexManifest) -> None:
     """Unconditional last-write-wins save — the SINGLE-writer path
     (batch build stage checkpoints, test rewinds). Bumps snapshot_id
@@ -463,16 +483,7 @@ def save_manifest(index_dir: str, m: IndexManifest) -> None:
     part of time-travel history (load_snapshot / snapshot_history) —
     but unlike commit_manifest it never rebases: losing a claim just
     re-bumps the id and claims the next one (last-write-wins)."""
-    if m.segment_files is not None:
-        m.segment_files = [p.replace(os.sep, "/") for p in m.segment_files]
-    if m.tombstone_files is not None:
-        m.tombstone_files = [
-            p.replace(os.sep, "/") for p in m.tombstone_files
-        ]
-    if m.doc_stats_files is not None:
-        m.doc_stats_files = [
-            p.replace(os.sep, "/") for p in m.doc_stats_files
-        ]
+    _slash_paths(m)
     while True:
         m.snapshot_id = (
             max(m.snapshot_id, latest_snapshot_id(index_dir)) + 1
@@ -561,18 +572,7 @@ def commit_manifest(
             return man
         sid = man.snapshot_id + 1
         man.snapshot_id = sid
-        if man.segment_files is not None:
-            man.segment_files = [
-                p.replace(os.sep, "/") for p in man.segment_files
-            ]
-        if man.tombstone_files is not None:
-            man.tombstone_files = [
-                p.replace(os.sep, "/") for p in man.tombstone_files
-            ]
-        if man.doc_stats_files is not None:
-            man.doc_stats_files = [
-                p.replace(os.sep, "/") for p in man.doc_stats_files
-            ]
+        _slash_paths(man)
         payload = _externalize_file_list(index_dir, man)
         if not _BACKEND.claim(
             _snapshot_path(index_dir, sid), json.dumps(payload, indent=2)
@@ -600,7 +600,8 @@ def expire_snapshots(
     the imminent claim points at and leave that snapshot unreadable
     (same landing-window guard as vacuum_segments' grace). Pass 0 only
     when no writer can be active."""
-    assert retain_last >= 1
+    if retain_last < 1:
+        raise ValueError(f"retain_last must be >= 1, got {retain_last}")
     removed = 0
     sids = list_snapshot_ids(index_dir)
     keep_sids = set(sids[-retain_last:])
@@ -621,7 +622,6 @@ def expire_snapshots(
             removed += 1
     fl = filelists_dir(index_dir)
     if os.path.isdir(fl):
-        import shutil
         import time as _time
 
         cutoff = _time.time() - sidecar_grace_s
@@ -715,6 +715,105 @@ def read_committed(spark, root: str, files: List[str], schema: str):
         spark.read.schema(schema)
         .option("basePath", root)
         .parquet(*(os.path.join(root, p.replace("/", os.sep)) for p in files))
+    )
+
+
+def land(write: Callable[[str], None], root: str, prefix: str) -> List[str]:
+    """Land one Spark write in the data dir `root` under a file-name
+    prefix, idempotently: files under root starting with `prefix` are an
+    earlier attempt's strays and go first; write(tmp) writes into a
+    hidden sibling of root (unique per prefix, outside every tree a
+    lister or sweep walks); each .parquet part moves to the same subdir
+    of root as prefix + name. A retry replaces, never duplicates, what
+    the prefix owns. Returns the moved files' root-relative '/' paths,
+    sorted, for the caller's commit."""
+    parent, name = os.path.split(root.rstrip("/"))
+    tmp = os.path.join(parent, f".{name}-{prefix}tmp")
+    shutil.rmtree(tmp, ignore_errors=True)
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            if f.startswith(prefix):
+                os.remove(os.path.join(d, f))
+    write(tmp)
+    out: List[str] = []
+    for d, _dirs, files in os.walk(tmp):
+        dst = os.path.join(root, os.path.relpath(d, tmp))
+        for f in files:
+            if f.endswith(".parquet"):
+                os.makedirs(dst, exist_ok=True)
+                moved = os.path.join(dst, prefix + f)
+                os.replace(os.path.join(d, f), moved)
+                out.append(os.path.relpath(moved, root).replace(os.sep, "/"))
+    shutil.rmtree(tmp, ignore_errors=True)
+    return sorted(out)
+
+
+def put_table(d: str, name: str, table) -> None:
+    """Write one driver-side pyarrow table as d/name: a hidden tmp file,
+    then os.replace, so a reader never sees a partial file and a rewrite
+    of the same name replaces it."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(d, name))
+
+
+def sweep(
+    root: str, keep: Callable[[str, str], bool], recursive: bool = False
+) -> int:
+    """Remove the .parquet files directly under root (every subdir too
+    when recursive) for which keep(rel, path) is false; rel is the
+    root-relative '/' path, path the absolute one. A file another
+    remover took first is skipped. Returns the number removed."""
+    removed = 0
+    for d, _dirs, files in os.walk(root):
+        rel_dir = os.path.relpath(d, root).replace(os.sep, "/")
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            p = os.path.join(d, f)
+            try:
+                if keep(f if rel_dir == "." else f"{rel_dir}/{f}", p):
+                    continue
+                os.remove(p)
+            except FileNotFoundError:
+                continue
+            removed += 1
+        if not recursive:
+            break
+    return removed
+
+
+def term_stats_of(seg, vocab):
+    """term_stats rows (term, term_id, df, cf, term_bucket) of segment
+    rows: the per-shard df/cf partials summed per term, named through
+    vocab (needs term, term_id; one row per term_id)."""
+    from pyspark.sql import functions as F
+
+    return (
+        seg.groupBy("term_id", "term_bucket")
+        .agg(F.sum("df_part").alias("df"), F.sum("cf_part").alias("cf"))
+        .join(vocab.select("term", "term_id"), "term_id")
+        .select("term", "term_id", "df", "cf", "term_bucket")
+    )
+
+
+def fold_term_stats(ts):
+    """Sum term_stats rows that share a term_id (a base table unioned
+    with per-batch deltas, or the deltas alone) into one row each."""
+    from pyspark.sql import functions as F
+
+    return (
+        ts.groupBy("term_id")
+        .agg(
+            F.min("term").alias("term"),
+            F.sum("df").alias("df"),
+            F.sum("cf").alias("cf"),
+            F.min("term_bucket").alias("term_bucket"),
+        )
+        .select("term", "term_id", "df", "cf", "term_bucket")
     )
 
 

@@ -36,10 +36,6 @@ from ..codec import (
 )
 from . import format as fmt
 
-# canonical definition lives with the layout (format.py); every segment
-# writer (build, append, compaction, shard merge) uses the same bound
-SEGMENT_ROW_GROUP_BYTES = fmt.SEGMENT_ROW_GROUP_BYTES
-
 
 def _claim_compaction_lock(index_dir: str, gen: int) -> str:
     """Atomically claim compaction generation `gen` (O_CREAT|O_EXCL on
@@ -67,6 +63,11 @@ def _claim_compaction_lock(index_dir: str, gen: int) -> str:
         f"({lock}); concurrent compactions are one-at-a-time. If the "
         "owner crashed on another host, remove the lock file manually."
     )
+
+
+def _compact_gen(man: "fmt.IndexManifest") -> int:
+    """The next compaction generation: compactions committed so far."""
+    return sum(1 for k in man.stages if k.startswith("compact:"))
 
 
 def _live_rows(d, t, l, p, tombs):
@@ -215,15 +216,36 @@ def _read_committed_segments(spark: SparkSession, index_dir: str, man):
     )
 
 
+def _load_complete(index_dir: str) -> "fmt.IndexManifest":
+    """The index's complete manifest, or ValueError (caller input: a
+    missing or unfinished index)."""
+    man = fmt.load_manifest(index_dir)
+    if man is None or not man.complete:
+        raise ValueError(f"{index_dir}: no complete index to maintain")
+    fmt.require_file_lists(index_dir, man)
+    return man
+
+
+def _merged_shard_count(man: "fmt.IndexManifest", factor: int) -> int:
+    """n_shards // factor, or ValueError unless it divides n_shards: the
+    merged shard must stay pmod(xxhash64(doc_id), n_shards), which
+    `shard % s_new` keeps only when s_new divides n_shards."""
+    if factor >= 1:
+        s_new = man.n_shards // factor
+        if s_new >= 1 and man.n_shards % s_new == 0:
+            return s_new
+    raise ValueError(
+        f"factor {factor} does not merge {man.n_shards} shards into a "
+        "divisor of the shard count"
+    )
+
+
 def merge_shards(
     spark: SparkSession, index_dir: str, out_dir: str, factor: int = 2
 ) -> None:
     """Produce a new index at out_dir with n_shards /= factor."""
-    man = fmt.load_manifest(index_dir)
-    assert man is not None and man.complete
-    fmt.require_file_lists(index_dir, man)
-    s_old, s_new = man.n_shards, man.n_shards // factor
-    assert s_new >= 1 and s_old % s_new == 0
+    man = _load_complete(index_dir)
+    s_new = _merged_shard_count(man, factor)
     avgdl = man.avgdl
 
     merged = _merged_segments(spark, seg=_read_committed_segments(
@@ -231,7 +253,7 @@ def merge_shards(
     ), avgdl=avgdl, n_buckets=man.n_buckets, s_new=s_new)
     (
         merged.write.mode("overwrite")
-        .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
+        .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
         .partitionBy("term_bucket")
         .parquet(fmt.segments_dir(out_dir))
     )
@@ -327,24 +349,18 @@ def compact_in_place(
     # COMMITTED compact{N}- files. Re-load the manifest INSIDE the
     # lock; if the generation moved, release and retry at the new one.
     for _attempt in range(5):
-        man = fmt.load_manifest(index_dir)
-        assert man is not None and man.complete
-        fmt.require_file_lists(index_dir, man)
-        gen = sum(1 for k in man.stages if k.startswith("compact:"))
+        man = _load_complete(index_dir)
+        _merged_shard_count(man, factor)  # refuse before claiming
+        gen = _compact_gen(man)
         lock = _claim_compaction_lock(index_dir, gen)
         man2 = fmt.load_manifest(index_dir)
         gen2 = (
-            sum(1 for k in man2.stages if k.startswith("compact:"))
-            if man2 is not None and man2.complete
-            else -1
+            _compact_gen(man2) if man2 is not None and man2.complete else -1
         )
         if gen2 == gen:
             man = man2
             break
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+        fmt.release_lock(lock)
     else:
         raise RuntimeError(
             "compaction generation kept moving under concurrent "
@@ -355,10 +371,7 @@ def compact_in_place(
             spark, index_dir, man, gen, factor, one_file_per_bucket
         )
     finally:
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+        fmt.release_lock(lock)
 
 
 def _compact_in_place_locked(
@@ -369,22 +382,10 @@ def _compact_in_place_locked(
     factor: int,
     one_file_per_bucket: bool,
 ) -> None:
-    import shutil
-
-    s_old, s_new = man.n_shards, man.n_shards // factor
-    assert s_new >= 1 and s_old % s_new == 0
-
-    seg_root = fmt.segments_dir(index_dir)
+    s_new = _merged_shard_count(man, factor)
+    # landing under the generation prefix also removes a previous
+    # crashed attempt's strays of the SAME generation (fmt.land)
     prefix = f"compact{gen}-"
-    # clean a previous crashed attempt of the SAME generation (segment
-    # and doc_stats strays: the purge lands compactN- files there too)
-    for walk_root in (seg_root, fmt.doc_stats_dir(index_dir)):
-        if not os.path.isdir(walk_root):
-            continue
-        for d, _dirs, files in os.walk(walk_root):
-            for f in files:
-                if f.startswith(prefix):
-                    os.remove(os.path.join(d, f))
 
     # the exact snapshot being compacted — the rebase below replaces
     # precisely this set in whatever manifest wins the CAS race
@@ -400,7 +401,7 @@ def _compact_in_place_locked(
     # on disk for pinned time-travel readers until vacuum. Crash-rerun
     # is naturally idempotent: the unflipped manifest still pins the
     # base list, so the stats delta recomputes identically and the
-    # same-generation strays are cleaned first (below, with segments).
+    # landing replaces the same-generation strays.
     # Purge-tier note (round-7): the splice needs per-task membership
     # tests against the tombstone union, so the union is loaded ONCE
     # driver-side and shipped as a TorrentBroadcast (one copy per
@@ -467,42 +468,16 @@ def _compact_in_place_locked(
             man.n_buckets, F.col("term_bucket")
         ).sortWithinPartitions("term_bucket", "term_id", "shard")
 
-    tmp = seg_root.rstrip("/") + "._compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        merged.write.mode("overwrite")
-        # Bounded row groups (round-7): one-file-per-bucket compaction
-        # otherwise lands 100+ MB single-row-group files, and a
-        # single-term query's filtered sidecar read must then pull the
-        # ENTIRE postings column chunk of the row group to extract one
-        # term (measured at 1M docs: post-compaction cold p50 374 ms vs
-        # 228 ms pre, read phase 3.4x — BENCH_LATENCY_1000000). With
-        # rows sorted by term_id, 8 MB row groups keep min/max pruning
-        # effective: point reads touch ~8 MB, bulk scans still coalesce
-        # row groups per task via files.maxPartitionBytes.
-        .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
+    # bounded row groups: one file per bucket would otherwise be one
+    # 100+ MB row group (fmt.SEGMENT_ROW_GROUP_BYTES rationale)
+    new_files = fmt.land(
+        lambda p: merged.write.mode("overwrite")
+        .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
         .partitionBy("term_bucket")
-        .parquet(tmp)
+        .parquet(p),
+        fmt.segments_dir(index_dir),
+        prefix,
     )
-    new_files: List[str] = []
-    for d, _dirs, files in os.walk(tmp):
-        rel = os.path.relpath(d, tmp).replace(os.sep, "/")
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            dst_dir = (
-                seg_root
-                if rel == "."
-                else os.path.join(seg_root, rel.replace("/", os.sep))
-            )
-            os.makedirs(dst_dir, exist_ok=True)
-            os.replace(
-                os.path.join(d, f), os.path.join(dst_dir, prefix + f)
-            )
-            new_files.append(
-                prefix + f if rel == "." else f"{rel}/{prefix + f}"
-            )
-    shutil.rmtree(tmp, ignore_errors=True)
 
     # doc_stats purge (only when tombstones exist): land the filtered
     # rows as generation-tagged files NEXT TO the old ones — never an
@@ -511,23 +486,14 @@ def _compact_in_place_locked(
     # manifest flip below swaps the list; vacuum expires the old files.
     new_ds_files: List[str] = []
     if tombs is not None:
-        ds_tmp = ds_dir + "._compact_tmp"
-        shutil.rmtree(ds_tmp, ignore_errors=True)
-        (
-            _ds_base_df()
+        new_ds_files = fmt.land(
+            lambda p: _ds_base_df()
             .join(tomb_df, "doc_id", "left_anti")  # hinted iff small
             .write.mode("overwrite")
-            .parquet(ds_tmp)
+            .parquet(p),
+            ds_dir,
+            prefix,
         )
-        os.makedirs(ds_dir, exist_ok=True)
-        for f in os.listdir(ds_tmp):
-            if not f.endswith(".parquet"):
-                continue
-            os.replace(
-                os.path.join(ds_tmp, f), os.path.join(ds_dir, prefix + f)
-            )
-            new_ds_files.append(prefix + f)
-        shutil.rmtree(ds_tmp, ignore_errors=True)
 
     # COMMIT via CAS: replace the compacted snapshot's files, keep any
     # files committed since (a concurrent append's batch), flip shards,
@@ -601,9 +567,7 @@ def vacuum_segments(
     import re as _re
     import time as _time
 
-    man = fmt.load_manifest(index_dir)
-    assert man is not None and man.complete, "vacuum needs a complete index"
-    fmt.require_file_lists(index_dir, man)
+    man = _load_complete(index_dir)
     # union of the retained snapshots' file sets (history scan; the
     # current manifest is always retained even if snapshots/ is empty;
     # a retained pre-commit build snapshot lists nothing)
@@ -627,53 +591,31 @@ def vacuum_segments(
         if k.startswith("stream:") and v
     )
     max_stream = committed_streams[-1] if committed_streams else -1
-    cur_compact_gen = sum(
-        1 for k in man.stages if k.startswith("compact:")
-    )
-
-    root = fmt.segments_dir(index_dir)
-    removed = 0
+    cur_compact_gen = _compact_gen(man)
     cutoff = _time.time() - grace_s
-    for d, _dirs, files in os.walk(root):
-        rel = os.path.relpath(d, root).replace(os.sep, "/")
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            relpath = f if rel == "." else f"{rel}/{f}"
-            if relpath in listed:
-                continue
-            mb = _re.match(r"batch(\d+)-", f)
-            if mb and int(mb.group(1)) > max_stream:
-                continue  # possibly still landing — generation guard
-            mc = _re.match(r"compact(\d+)-", f)
-            if mc and int(mc.group(1)) >= cur_compact_gen:
-                continue  # an active compactor's landing files
-            p = os.path.join(d, f)
-            if grace_s > 0 and os.path.getmtime(p) > cutoff:
-                continue  # young enough to be a landing write — keep
-            os.remove(p)
-            removed += 1
 
+    def keep_rule(listed_set):
+        # listed, possibly still landing (an uncommitted batch or the
+        # active compaction generation), or young enough to be a write
+        def keep(rel: str, path: str) -> bool:
+            f = rel.rsplit("/", 1)[-1]
+            mb = _re.match(r"batch(\d+)-", f)
+            mc = _re.match(r"compact(\d+)-", f)
+            return (
+                rel in listed_set
+                or (mb is not None and int(mb.group(1)) > max_stream)
+                or (mc is not None and int(mc.group(1)) >= cur_compact_gen)
+                or (grace_s > 0 and os.path.getmtime(path) > cutoff)
+            )
+
+        return keep
+
+    removed = fmt.sweep(
+        fmt.segments_dir(index_dir), keep_rule(listed), recursive=True
+    )
     # doc_stats files out of every retained snapshot (pre-purge
     # versions) expire under the same rules as segments
-    ds_root = fmt.doc_stats_dir(index_dir)
-    if os.path.isdir(ds_root):
-        for f in os.listdir(ds_root):
-            if not f.endswith(".parquet"):
-                continue
-            if f in listed_ds:
-                continue
-            mb = _re.match(r"batch(\d+)-", f)
-            if mb and int(mb.group(1)) > max_stream:
-                continue  # possibly still landing
-            mc = _re.match(r"compact(\d+)-", f)
-            if mc and int(mc.group(1)) >= cur_compact_gen:
-                continue  # active compactor's landing files
-            p = os.path.join(ds_root, f)
-            if grace_s > 0 and os.path.getmtime(p) > cutoff:
-                continue
-            os.remove(p)
-            removed += 1
+    removed += fmt.sweep(fmt.doc_stats_dir(index_dir), keep_rule(listed_ds))
 
     # tombstone files consumed by a purge (and out of every retained
     # snapshot) expire too. Unlike segments, tombstone files have NO
@@ -691,18 +633,11 @@ def vacuum_segments(
         else tombstone_grace_s
     )
     t_cutoff = _time.time() - t_grace
-    troot = fmt.tombstones_dir(index_dir)
-    if os.path.isdir(troot):
-        for f in os.listdir(troot):
-            if not f.endswith(".parquet"):
-                continue
-            if f"tombstones/{f}" in listed_tombs:
-                continue
-            p = os.path.join(troot, f)
-            if t_grace > 0 and os.path.getmtime(p) > t_cutoff:
-                continue
-            os.remove(p)
-            removed += 1
+    removed += fmt.sweep(
+        fmt.tombstones_dir(index_dir),
+        lambda f, p: f"tombstones/{f}" in listed_tombs
+        or (t_grace > 0 and os.path.getmtime(p) > t_cutoff),
+    )
     return removed
 
 
@@ -750,14 +685,9 @@ def maybe_compact(
         and man.tombstone_files
         and man.n_docs > 0
     ):
-        import pyarrow.parquet as pq
+        from .delete import tombstone_rows_bound
 
-        n_tomb = sum(
-            pq.ParquetFile(
-                os.path.join(index_dir, rel.replace("/", os.sep))
-            ).metadata.num_rows
-            for rel in man.tombstone_files
-        )
+        n_tomb = tombstone_rows_bound(index_dir, man)
         trigger = n_tomb / man.n_docs > max_tombstone_frac
     if not trigger:
         return False

@@ -51,6 +51,7 @@ from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -69,6 +70,11 @@ from . import format as fmt
 # K1/B live in codec (imported above): the block-max bounds stored at
 # build time (codec.tf_saturation) and the scoring here MUST share one
 # definition or the MaxScore caps stop being upper bounds.
+
+# the environmental failures of a driver-side pyarrow read (non-local
+# filesystem, missing handler): only these fall back to a Spark route —
+# a codec or manifest defect must surface
+_LOCAL_READ_ERRORS = (OSError, NotImplementedError, pa.ArrowException)
 
 
 @dataclass
@@ -275,17 +281,7 @@ class IndexReader:
             self.spark, fmt.term_stats_deltas_dir(self.index_dir), deltas,
             fmt.TERM_STATS_READ_SCHEMA,
         )
-        return (
-            base.unionByName(ddf)
-            .groupBy("term_id")
-            .agg(
-                F.min("term").alias("term"),
-                F.sum("df").alias("df"),
-                F.sum("cf").alias("cf"),
-                F.min("term_bucket").alias("term_bucket"),
-            )
-            .select("term", "term_id", "df", "cf", "term_bucket")
-        )
+        return fmt.fold_term_stats(base.unionByName(ddf))
 
     def doc_stats(self) -> DataFrame:
         """This snapshot's doc_stats — opens exactly the manifest-
@@ -338,7 +334,8 @@ class IndexReader:
         and only term_id/df_part columns are read) — NO Spark job, so a
         query batch costs exactly one job: the scoring scan. Falls back
         to the pruned Spark scan if the local read fails (e.g. a
-        non-local filesystem without a pyarrow handler)."""
+        non-local filesystem without a pyarrow handler); any other error
+        is a defect and propagates."""
         ids = self.ids_for(terms)
         missing = [t for t in set(terms) if t not in self._df_cache]
         if missing:
@@ -346,7 +343,7 @@ class IndexReader:
             id_list = [ids[t] for t in missing]
             try:
                 found = self._df_sidecar_scan(id_list, blist)
-            except Exception:
+            except _LOCAL_READ_ERRORS:
                 found = self._df_spark_scan(id_list, blist)
             for t in missing:
                 self._df_cache[t] = found.get(ids[t], 0)
@@ -388,7 +385,6 @@ def _read_sidecar(files: List[str], columns: List[str], term_ids):
     """Driver-side pyarrow read of the given segment files: only
     `columns`, only rows of `term_ids` (term_id row-group stats prune
     inside). No Spark job. -> pyarrow Table."""
-    import pyarrow as pa
     import pyarrow.dataset as pads
 
     if not files:
@@ -1218,8 +1214,6 @@ def bm25_topk_rows(
         # must surface, not silently downgrade to the Spark path; the
         # failed attempt's partial phase timings are rolled back so
         # triage numbers stay attributable.
-        import pyarrow as pa
-
         saved = dict(phase_sink) if phase_sink is not None else None
         try:
             if single:
@@ -1229,7 +1223,7 @@ def bm25_topk_rows(
             else:
                 rows = _score_shards_local(r, qp, k, prune, phase_sink)
             path = "driver_sidecar"
-        except (OSError, NotImplementedError, pa.ArrowException):
+        except _LOCAL_READ_ERRORS:
             if phase_sink is not None:
                 phase_sink.clear()
                 phase_sink.update(saved)

@@ -40,8 +40,7 @@ or after a purge shifted df/cf) and folds consumed deltas into it.
 from __future__ import annotations
 
 import os
-import shutil
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,50 +48,13 @@ from pyspark.sql import functions as F
 from ..textnorm import spark_tokens
 from ..index import format as fmt
 from ..index.build import (
+    _append_metrics,
     _auto_size,
     _segment_builder,
     bucket_expr,
     shard_expr,
     grouped_postings,
 )
-
-
-def _clean_batch_files(target_dir: str, batch_id: int) -> None:
-    tag = f"batch{batch_id}-"
-    if not os.path.isdir(target_dir):
-        return
-    for root, _dirs, files in os.walk(target_dir):
-        for f in files:
-            if f.startswith(tag):
-                os.remove(os.path.join(root, f))
-
-
-def _append_scoped(
-    write_fn: Callable[[str], None], target_dir: str, batch_id: int
-) -> None:
-    """Idempotent append under foreachBatch's at-least-once semantics:
-    the batch writes to a scratch dir, any files from a previous attempt
-    of the SAME batch are removed, then the new part files move into the
-    target under batch-tagged names. A retry after a partial append
-    therefore replaces — never duplicates — this batch's rows."""
-    tmp = target_dir.rstrip("/") + f"._batch{batch_id}_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
-    _clean_batch_files(target_dir, batch_id)
-    for root, _dirs, files in os.walk(tmp):
-        rel = os.path.relpath(root, tmp)
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            dst_dir = (
-                target_dir if rel == "." else os.path.join(target_dir, rel)
-            )
-            os.makedirs(dst_dir, exist_ok=True)
-            os.replace(
-                os.path.join(root, f),
-                os.path.join(dst_dir, f"batch{batch_id}-{f}"),
-            )
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _append_batch(
@@ -125,12 +87,14 @@ def _append_batch(
             format_version=fmt.FORMAT_VERSION,
             run_id=f"stream:{batch_id}",
         )
-    # one materialization feeds all four jobs below (doc_stats write,
-    # posting shuffle, vocab explode, metrics count) — without it each
-    # job re-reads the micro-batch source. The three tokenize passes
-    # themselves could further fuse via the batch builder's persisted
-    # grouped_terms (build.py fused path) — seam noted, not done: at
-    # micro-batch sizes the source re-read dominated, not the tokenize.
+    # one materialization feeds every job below that reads the batch
+    # (doc_stats write, stats count, vocab write, posting shuffle) —
+    # without it each job re-reads the micro-batch source. The metrics
+    # row is written on the driver from the stats count. The three
+    # tokenize passes themselves could further fuse via the batch
+    # builder's persisted grouped_terms (build.py fused path) — seam
+    # noted, not done: at micro-batch sizes the source re-read
+    # dominated, not the tokenize.
     batch = batch.select("doc_id", "url", "text").persist()
     try:
         _append_batch_inner(spark, batch, index_dir, batch_id, man)
@@ -158,17 +122,12 @@ def _append_batch_inner(
             )
         ).alias("doc_len"),
     )
-    _append_scoped(
+    tag = f"batch{batch_id}-"
+    new_ds_files = fmt.land(
         lambda p: ds.write.mode("overwrite").parquet(p),
         fmt.doc_stats_dir(index_dir),
-        batch_id,
+        tag,
     )
-    ds_tag = f"batch{batch_id}-"
-    new_ds_files = [
-        p
-        for p in fmt.list_doc_stats_files(index_dir)
-        if os.path.basename(p).startswith(ds_tag)
-    ]
     # BATCH-ONLY stats (round-6b, review finding): the commit applies
     # them as DELTAS (m2.n_docs += ...), never as absolute values read
     # from the doc_stats directory — an absolute dir read races a
@@ -176,9 +135,9 @@ def _append_batch_inner(
     # re-inflates the stats by the purged docs; the mirror interleaving
     # double-subtracts). Deltas compose under CAS rebase in ANY
     # interleaving: the mutate re-runs against the then-latest
-    # committed totals. Retry-stable too — _append_scoped REPLACED any
-    # prior attempt's files, and these numbers come from the batch
-    # data, not the directory.
+    # committed totals. Retry-stable too — fmt.land REPLACED any prior
+    # attempt's files, and these numbers come from the batch data, not
+    # the directory.
     bstats = ds.select(
         F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0))
     ).first()
@@ -227,12 +186,12 @@ def _append_batch_inner(
             .alias("term_bucket"),
         )
     )
-    _append_scoped(
+    fmt.land(
         lambda p: vocab.write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(p),
         fmt.vocab_dir(index_dir),
-        batch_id,
+        tag,
     )
     seg_schema = "term_bucket int, " + fmt.SEGMENT_SCHEMA
     seg = (
@@ -247,21 +206,16 @@ def _append_batch_inner(
             schema=seg_schema,
         )
     )
-    _append_scoped(
+    # this batch's landed segment files (batch-tagged; fmt.land
+    # replaced any partial same-batch attempt)
+    new_files = fmt.land(
         lambda p: seg.write.mode("overwrite")
         .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
         .partitionBy("term_bucket")
         .parquet(p),
         fmt.segments_dir(index_dir),
-        batch_id,
+        tag,
     )
-    # this batch's landed segment files (batch-tagged; _append_scoped
-    # replaced any partial same-batch attempt)
-    tag = f"batch{batch_id}-"
-    all_files = fmt.list_segment_files(index_dir)
-    new_files = [
-        p for p in all_files if os.path.basename(p).startswith(tag)
-    ]
 
     # term_stats DELTA (round-7, VERDICT item 7): aggregate df/cf over
     # JUST this batch's landed segment rows (already partially summed
@@ -277,51 +231,16 @@ def _append_batch_inner(
         batch_seg = fmt.read_committed(
             spark, fmt.segments_dir(index_dir), new_files, fmt.SEG_READ_SCHEMA
         )
-        ts_delta = (
-            batch_seg.groupBy("term_id", "term_bucket")
-            .agg(
-                F.sum("df_part").alias("df"),
-                F.sum("cf_part").alias("cf"),
-            )
-            .join(vocab, ["term_id", "term_bucket"])
-            .select("term", "term_id", "df", "cf", "term_bucket")
-        )
-        _append_scoped(
-            lambda p: ts_delta.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(p),
+        ts_delta = fmt.term_stats_of(batch_seg, vocab)
+        ts_delta_rels = fmt.land(
+            lambda p: ts_delta.coalesce(1).write.mode("overwrite").parquet(p),
             fmt.term_stats_deltas_dir(index_dir),
-            batch_id,
+            tag,
         )
-        td = fmt.term_stats_deltas_dir(index_dir)
-        ts_delta_rels = sorted(
-            f
-            for f in os.listdir(td)
-            if f.startswith(tag) and f.endswith(".parquet")
-        )
-    # metrics row, batch-scoped like the data files
-    import datetime as _dt
-
-    metrics = spark.createDataFrame(
-        [
-            (
-                f"stream:{batch_id}",
-                f"stream_batch:{batch_id}",
-                "batch",
-                int(batch.count()),
-                0,
-                0,
-                "complete",
-                _dt.datetime.now(_dt.timezone.utc),
-            )
-        ],
-        "run_id string, stage string, unit string, docs long, "
-        "postings long, bytes long, status string, updated_at timestamp",
-    )
-    _append_scoped(
-        lambda p: metrics.coalesce(1).write.mode("overwrite").parquet(p),
-        fmt.metrics_dir(index_dir),
-        batch_id,
+    # metrics row, batch-named like the data files: a retry replaces it
+    _append_metrics(
+        index_dir, f"stream:{batch_id}", f"stream_batch:{batch_id}",
+        "batch", b_docs, 0, 0, name=f"{tag}metrics.parquet",
     )
 
     # manifest commit LAST, via the optimistic-CAS protocol: the mutate
@@ -436,19 +355,13 @@ def _sweep_unreferenced_deltas(index_dir: str, grace_s: float) -> None:
 
     man = fmt.load_manifest(index_dir)
     ref = set(man.term_stats_delta_files or []) if man is not None else set()
-    td = fmt.term_stats_deltas_dir(index_dir)
-    if not os.path.isdir(td):
-        return
     now = _time.time()
-    for f in os.listdir(td):
-        if f.startswith(".") or not f.endswith(".parquet") or f in ref:
-            continue
-        p = os.path.join(td, f)
-        try:
-            if grace_s <= 0 or now - os.path.getmtime(p) > grace_s:
-                os.remove(p)
-        except OSError:
-            pass
+    fmt.sweep(
+        fmt.term_stats_deltas_dir(index_dir),
+        lambda f, p: f.startswith(".")
+        or f in ref
+        or (grace_s > 0 and now - os.path.getmtime(p) <= grace_s),
+    )
 
 
 def fold_term_stats_deltas(
@@ -489,10 +402,7 @@ def fold_term_stats_deltas(
             spark, index_dir, max_delta_files, delta_grace_s
         )
     finally:
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+        fmt.release_lock(lock)
 
 
 def _fold_term_stats_locked(
@@ -510,28 +420,14 @@ def _fold_term_stats_locked(
     if len(deltas) <= max_delta_files:
         return False
     td = fmt.term_stats_deltas_dir(index_dir)
-    ddf = fmt.read_committed(spark, td, deltas, fmt.TERM_STATS_READ_SCHEMA)
-    folded = (
-        ddf.groupBy("term_id")
-        .agg(
-            F.min("term").alias("term"),
-            F.sum("df").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.min("term_bucket").alias("term_bucket"),
-        )
-        .select("term", "term_id", "df", "cf", "term_bucket")
+    folded = fmt.fold_term_stats(
+        fmt.read_committed(spark, td, deltas, fmt.TERM_STATS_READ_SCHEMA)
     )
-    tag = f"fold-{_uuid.uuid4().hex[:12]}"
-    tmp = os.path.join(td, "." + tag)
-    shutil.rmtree(tmp, ignore_errors=True)
-    folded.coalesce(1).write.mode("overwrite").parquet(tmp)
-    rels = []
-    for i, f in enumerate(sorted(os.listdir(tmp))):
-        if f.endswith(".parquet"):
-            out = f"{tag}-{i:04d}.parquet"
-            os.replace(os.path.join(tmp, f), os.path.join(td, out))
-            rels.append(out)
-    shutil.rmtree(tmp, ignore_errors=True)
+    rels = fmt.land(
+        lambda p: folded.coalesce(1).write.mode("overwrite").parquet(p),
+        td,
+        f"fold-{_uuid.uuid4().hex[:12]}-",
+    )
     consumed = set(deltas)
 
     def _commit(m2: "fmt.IndexManifest") -> None:
@@ -563,10 +459,7 @@ def rebuild_term_stats(
     try:
         _rebuild_term_stats_locked(spark, index_dir, delta_grace_s)
     finally:
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+        fmt.release_lock(lock)
 
 
 def _rebuild_term_stats_locked(
@@ -581,6 +474,7 @@ def _rebuild_term_stats_locked(
         (man0.segment_files or []) if man0 is not None else [],
         fmt.SEG_READ_SCHEMA,
     )
+    # every appended batch lands its own vocab rows: keep one per term
     vocab = (
         spark.read.schema(fmt.VOCAB_READ_SCHEMA)
         .parquet(fmt.vocab_dir(index_dir))
@@ -588,10 +482,7 @@ def _rebuild_term_stats_locked(
         .dropDuplicates(["term_id"])
     )
     (
-        seg.groupBy("term_id", "term_bucket")
-        .agg(F.sum("df_part").alias("df"), F.sum("cf_part").alias("cf"))
-        .join(vocab, "term_id")
-        .select("term", "term_id", "df", "cf", "term_bucket")
+        fmt.term_stats_of(seg, vocab)
         .write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(fmt.term_stats_dir(index_dir))
