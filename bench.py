@@ -203,9 +203,10 @@ def main() -> None:
     }
     extra["bm25_seq10_path"] = phases.get("path", "?")
     extra["bm25_p50_ms"] = round(statistics.median(lat) * 1000, 1)
-    # same 10 queries again on the SAME reader: the decoded-postings
-    # LRU cache answers without the sidecar read (the measured ~85% of
-    # cold latency) — the repeat/warm p50 a real query mix would see
+    # same 10 queries again on the SAME reader: its term cache
+    # (IndexReader.term_postings, shared with multi-term batches) answers
+    # without the sidecar read — the repeat/warm p50 a real query mix
+    # would see
     rlat = []
     for i in range(10):
         t0 = time.perf_counter()

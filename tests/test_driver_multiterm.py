@@ -238,3 +238,33 @@ def test_environmental_failure_falls_back_and_rolls_back_phases(
         spark, ix, specs, True, "df-fallback", reader=IndexReader(spark, ix)
     )
     assert got == want
+
+
+@pytest.mark.parametrize("state", ("build", "upsert"))
+def test_driver_route_builds_no_pandas_frame(
+    spark, states, state, monkeypatch
+):
+    """The driver route scores shard groups straight from the reader's
+    term cache: with the pandas adapter and pandas itself unavailable to
+    the query module it returns the Spark route's rows, and a repeat of
+    the batch on the same reader answers without a read or a job."""
+    ix = states[state][0]
+    specs = _specs()
+    monkeypatch.setattr(qmod, "DRIVER_SCORE_MAX_POSTINGS", -1)
+    want, sink, _jobs = _run(spark, ix, specs, True, f"nopd-spk-{state}")
+    assert sink["path"] == "shard_topk"
+    monkeypatch.undo()
+
+    def no_pandas(*_args, **_kwargs):
+        raise AssertionError("the driver route built a pandas frame")
+
+    monkeypatch.setattr(qmod, "_score_shard_pdf", no_pandas)
+    monkeypatch.setattr(qmod, "pd", None)
+    r = IndexReader(spark, ix)
+    for i in range(2):
+        got, sink, jobs = _run(
+            spark, ix, specs, True, f"nopd-drv-{state}-{i}", reader=r
+        )
+        assert sink["path"] == "driver_sidecar" and jobs == 0
+        assert got == want
+        assert ("read_s" in sink) == (i == 0)

@@ -109,3 +109,94 @@ def test_cache_respects_snapshot_isolation(spark, tmp_path):
     os.remove(planted)
     r2 = IndexReader(spark, ix)
     assert bm25_topk_rows(spark, ix, spec, k=10, reader=r2) == with_planted
+
+
+def _cold_rows(spark, ix, spec, k=10):
+    """The rows of a fresh reader with the term cache disabled."""
+    r0 = IndexReader(spark, ix)
+    r0.postings_cache_max_postings = 0
+    rows = bm25_topk_rows(spark, ix, spec, k=k, reader=r0)
+    assert not r0._postings_cache
+    return rows
+
+
+def _rows_and_sink(spark, ix, spec, r):
+    sink: dict = {}
+    rows = bm25_topk_rows(spark, ix, spec, k=10, reader=r, phase_sink=sink)
+    return rows, sink
+
+
+def test_single_term_batch_warms_multi_term_queries(spark, tmp_path):
+    """Single- and multi-term batches share one term cache: terms a
+    single-term batch read answer AND / OR queries without a read."""
+    ix = _mk_index(spark, tmp_path)
+    r = IndexReader(spark, ix)
+    single = [QuerySpec("a", ["alpha"], "or"), QuerySpec("b", ["beta"], "or")]
+    _rows, sink = _rows_and_sink(spark, ix, single, r)
+    assert sink.get("read_s", 0) > 0
+    for mode in ("and", "or"):
+        spec = [QuerySpec("q", ["alpha", "beta"], mode)]
+        rows, sink = _rows_and_sink(spark, ix, spec, r)
+        assert sink["path"] == "driver_sidecar"
+        assert "read_s" not in sink
+        assert rows and rows == _cold_rows(spark, ix, spec)
+
+
+def test_phrase_rereads_terms_cached_without_positions(spark, tmp_path):
+    """A term cached without positions is read again, once, for a
+    phrase query; the second phrase query answers from the cache."""
+    ix = _mk_index(spark, tmp_path)
+    r = IndexReader(spark, ix)
+    _rows_and_sink(spark, ix, [QuerySpec("o", ["alpha", "beta"], "or")], r)
+    phrase = [QuerySpec("p", ["alpha", "beta"], "phrase")]
+    rows, sink = _rows_and_sink(spark, ix, phrase, r)
+    assert sink.get("read_s", 0) > 0
+    assert rows and rows == _cold_rows(spark, ix, phrase)
+    again, sink = _rows_and_sink(spark, ix, phrase, r)
+    assert "read_s" not in sink
+    assert again == rows
+
+
+def test_refresh_after_delete_drops_doc_from_cached_terms(spark, tmp_path):
+    """A doc deleted after its terms were cached never comes back from
+    the refreshed reader, single-term or AND."""
+    from text_search_spark.index.delete import delete_docs
+
+    ix = _mk_index(spark, tmp_path)
+    r = IndexReader(spark, ix)
+    specs = [
+        [QuerySpec("s", ["alpha"], "or")],
+        [QuerySpec("a", ["alpha", "beta"], "and")],
+    ]
+    before = [bm25_topk_rows(spark, ix, s, k=10, reader=r) for s in specs]
+    victim = before[0][0][2]
+    assert all(victim in {row[2] for row in rows} for rows in before)
+    delete_docs(spark, ix, [victim])
+    r.refresh()
+    for spec in specs:
+        rows = bm25_topk_rows(spark, ix, spec, k=10, reader=r)
+        assert rows and victim not in {row[2] for row in rows}
+        assert rows == bm25_topk_rows(spark, ix, spec, k=10)
+
+
+def test_cache_budget_holds_under_mixed_traffic(spark, tmp_path):
+    """Single- and multi-term batches (with and without positions) keep
+    the cache within its budget and its size equal to its entries'."""
+    ix = _mk_index(spark, tmp_path)
+    r = IndexReader(spark, ix)
+    r.postings_cache_max_postings = 70  # one 60-posting term fits
+    traffic = [
+        [QuerySpec("q", ["alpha"], "or")],
+        [QuerySpec("q", ["alpha", "beta"], "and")],
+        [QuerySpec("q", ["gamma"], "or")],
+        [QuerySpec("q", ["beta", "gamma"], "phrase")],
+        [QuerySpec("q", ["delta", "alpha"], "or")],
+        [QuerySpec("q", ["delta"], "or")],
+    ]
+    for spec in traffic:
+        rows = bm25_topk_rows(spark, ix, spec, k=5, reader=r)
+        assert r._postings_cache_size <= 70
+        assert r._postings_cache_size == sum(
+            e[1] for e in r._postings_cache.values()
+        )
+        assert rows and rows == _cold_rows(spark, ix, spec, k=5)

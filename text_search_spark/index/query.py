@@ -14,17 +14,19 @@ Query plan:
      committed files (postings column never read); idf weights.
   2. read only the query terms' segment rows: term_bucket partition
      pruning + term_id predicate pushdown; the positions column is read
-     ONLY for phrase/near queries. bm25_topk_rows reads them on the
-     driver through the pyarrow sidecar when the batch's summed df is at
-     most DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver —
-     no Spark job; otherwise (and always for bm25_topk_df) a Spark scan.
+     ONLY for phrase/near queries. bm25_topk_rows serves them on the
+     driver from the reader's term cache (IndexReader.term_postings, a
+     pyarrow sidecar read of uncached terms) when the batch's summed df
+     is at most DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the
+     driver — no Spark job; otherwise (and always for bm25_topk_df) a
+     Spark scan.
   3. per shard: each shard holds a doc-disjoint slice of EVERY term's
      postings (shard = hash(doc_id), build.py), so one group computes
      exact final BM25 scores for its docs with a FIXED per-term float64
      summation order (rank-identity discipline, SURVEY.md §7.3),
      evaluates AND/OR/phrase/near semantics, and emits its local top-k.
-     The same _score_shard_pdf scores a group on the driver (pandas
-     groupby) or in groupBy(shard).applyInPandas.
+     The same _score_terms scores a group on the driver (no pandas) or,
+     via the _score_shard_pdf adapter, in groupBy(shard).applyInPandas.
      OR queries run block-max MaxScore pruning (prune=True): terms are
      decoded in descending max-contribution order; once the remaining
      terms' upper bounds cannot beat the running kth score, their postings
@@ -46,6 +48,7 @@ from __future__ import annotations
 import math
 import os
 import time
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
@@ -64,6 +67,7 @@ from ..codec import (
     decode_positions,
     decode_selected_blocks,
 )
+from ..functions.xxhash import pmod, xxhash64_str
 from ..textnorm import tokenize
 from . import format as fmt
 
@@ -86,9 +90,11 @@ class QuerySpec:
 
 
 class IndexReader:
-    # total decoded postings the driver-side cache may hold (LRU evict
-    # beyond it; 0 disables). 8M postings ~ 200 MB of int64 arrays —
-    # per reader, on the DRIVER only (executor paths never cache).
+    # total postings (summed df_part) the driver-side term cache may hold
+    # (LRU evict beyond it; 0 disables), per reader, on the DRIVER only.
+    # An entry holds raw segment row bytes (positions when read) plus the
+    # lazily decoded arrays (_TermPostings): ~54 B per cached posting on
+    # the perfbench `serve` index (13 B rows, 41 B arrays), so 8M ~ 430 MB.
     POSTINGS_CACHE_MAX = 8_000_000
 
     def __init__(
@@ -107,39 +113,82 @@ class IndexReader:
         self.spark = spark
         self.index_dir = index_dir
         self.snapshot_id = snapshot_id
+        self.postings_cache_max_postings = self.POSTINGS_CACHE_MAX
         self.manifest = self._load_validated()
+        self._reset()
+
+    def _reset(self) -> None:
+        """Drop every field derived from the loaded snapshot (a new one
+        may add rows to ANY term, tombstones and a new avgdl)."""
         self._df_cache: Dict[str, int] = {}
         self._segments_df: Optional[DataFrame] = None
-        # term_id -> list[(docs, tfs, dls)] decoded postings, LRU via
-        # OrderedDict order; bounded by total postings, not entries
-        from collections import OrderedDict
-
-        self.postings_cache_max_postings = self.POSTINGS_CACHE_MAX
-        self._postings_cache: "OrderedDict[int, List[tuple]]" = (
-            OrderedDict()
-        )
+        self._tombstones: Optional[np.ndarray] = None
+        self._tomb_bound: Optional[int] = None
+        # term_id -> (positions read?, summed df_part, {shard:
+        # _TermPostings}); LRU order, bounded by total postings
+        self._postings_cache: "OrderedDict[int, tuple]" = OrderedDict()
         self._postings_cache_size = 0
 
-    def _postings_cache_put(self, tid: int, rows: List[tuple]) -> None:
-        """Insert decoded postings for one term, LRU-evicting until the
-        total-postings budget holds. A single term bigger than the whole
-        budget is not cached (it would evict everything for one entry)."""
-        n = sum(d.size for d, _t, _l in rows)
+    def _postings_cache_put(self, tid, has_pos: bool, n: int, shards):
+        """Insert one term's {shard: _TermPostings} (n = summed df_part),
+        LRU-evicting until the total-postings budget holds. A single term
+        bigger than the whole budget is not cached (it would evict
+        everything for one entry)."""
         cap = self.postings_cache_max_postings
         if cap <= 0 or n > cap:
             return
         old = self._postings_cache.pop(tid, None)
         if old is not None:
-            self._postings_cache_size -= sum(
-                d.size for d, _t, _l in old
-            )
+            self._postings_cache_size -= old[1]
         while self._postings_cache and self._postings_cache_size + n > cap:
-            _etid, erows = self._postings_cache.popitem(last=False)
-            self._postings_cache_size -= sum(
-                d.size for d, _t, _l in erows
-            )
-        self._postings_cache[tid] = rows
+            _etid, evicted = self._postings_cache.popitem(last=False)
+            self._postings_cache_size -= evicted[1]
+        self._postings_cache[tid] = (has_pos, n, shards)
         self._postings_cache_size += n
+
+    def term_postings(
+        self,
+        term_ids: Sequence[int],
+        need_pos: bool,
+        phase_sink: Optional[Dict[str, float]] = None,
+    ) -> Dict[int, Dict[int, "_TermPostings"]]:
+        """term_id -> {shard: _TermPostings}: the one driver-side segment
+        read. Only terms the cache lacks (or holds without positions,
+        when need_pos) are read, in ONE pyarrow sidecar read over their
+        buckets' committed files, and cached; phase_sink gets "read_s"
+        only then. A term with no committed rows maps to {}."""
+        cache = self._postings_cache
+        out: Dict[int, dict] = {}
+        for t in term_ids:
+            hit = cache.get(t)
+            if hit is not None and (hit[0] or not need_pos):
+                cache.move_to_end(t)  # LRU touch
+                out[t] = hit[2]
+        missing = [t for t in term_ids if t not in out]
+        fetched: Dict[int, dict] = {t: {} for t in missing}
+        if missing:
+            nb = self.manifest.n_buckets
+            cols = ["df_part"] + _shard_columns(need_pos)
+            t0 = time.perf_counter()
+            tbl = _read_sidecar(
+                self.segment_files_for_buckets({pmod(t, nb) for t in missing}),
+                cols,
+                missing,
+            )
+            tombs, avgdl = self.tombstones(), self.manifest.avgdl
+            sizes = dict.fromkeys(missing, 0)
+            for n, shard, tid, pbuf, bm, bmav, *pos in zip(
+                *(tbl[c].to_pylist() for c in cols)
+            ):
+                sizes[tid] += n
+                fetched[tid].setdefault(
+                    shard, _TermPostings(avgdl, tombs)
+                ).add(pbuf, pos[0] if pos else b"", bm, bmav)
+            _phase(phase_sink, "read_s", t0)
+            for t in missing:
+                self._postings_cache_put(t, need_pos, sizes[t], fetched[t])
+        out.update(fetched)
+        return out
 
     def _load_validated(self) -> "fmt.IndexManifest":
         """Load + validate the manifest — shared by __init__ and
@@ -176,27 +225,19 @@ class IndexReader:
     def refresh(self) -> None:
         """Re-read the manifest (after incremental appends/deletes)."""
         self.manifest = self._load_validated()
-        self._df_cache.clear()
-        self._segments_df = None
-        self._tombstones = None
-        self._tomb_bound = None
-        # a new snapshot may have appended segment rows to ANY term
-        self._postings_cache.clear()
-        self._postings_cache_size = 0
+        self._reset()
 
     def tombstones(self) -> np.ndarray:
         """Sorted tombstoned doc_ids of this reader's snapshot (empty
         array when none) — loaded once per reader/refresh, masked into
-        every query path. The postings cache stores UNMASKED decoded
-        rows (masking happens at score time), so a delete only needs a
+        every query path. The term cache is per snapshot too (its
+        _TermPostings mask with these ids), so a delete only needs a
         refresh(), never a cache-coherence protocol."""
-        t = getattr(self, "_tombstones", None)
-        if t is None:
+        if self._tombstones is None:
             from .delete import load_tombstones
 
-            t = load_tombstones(self.index_dir, self.manifest)
-            self._tombstones = t
-        return t
+            self._tombstones = load_tombstones(self.index_dir, self.manifest)
+        return self._tombstones
 
     def tombstone_rows_bound(self) -> int:
         """Upper bound on this snapshot's tombstoned-id count, from
@@ -206,13 +247,13 @@ class IndexReader:
         numpy union (lowest latency); above it no path materializes
         ids on the driver — scoring cogroups tombstones with the
         segment scan, doc_stats anti-joins executor-side."""
-        b = getattr(self, "_tomb_bound", None)
-        if b is None:
+        if self._tomb_bound is None:
             from .delete import tombstone_rows_bound
 
-            b = tombstone_rows_bound(self.index_dir, self.manifest)
-            self._tomb_bound = b
-        return b
+            self._tomb_bound = tombstone_rows_bound(
+                self.index_dir, self.manifest
+            )
+        return self._tomb_bound
 
     def tombstones_distributed(self) -> bool:
         """True when this snapshot's tombstones exceed the driver
@@ -314,14 +355,10 @@ class IndexReader:
         """term -> term_id via a driver-side XXH64 bit-identical to the
         build's F.xxhash64 (tests/test_xxhash.py) — no Spark job, no
         vocab join."""
-        from ..functions.xxhash import xxhash64_str
-
         return {t: xxhash64_str(t) for t in set(terms)}
 
     def buckets_for(self, terms: Sequence[str]) -> Dict[str, int]:
         """term -> term_bucket (pmod of the term_id)."""
-        from ..functions.xxhash import pmod
-
         nb = self.manifest.n_buckets
         ids = self.ids_for(terms)
         return {t: pmod(i, nb) for t, i in ids.items()}
@@ -416,12 +453,12 @@ class _QueryPlan:
     need_pos: bool  # a phrase/near query reads the positions column
     avgdl: float
 
-    @property
-    def shard_columns(self) -> List[str]:
-        """Segment columns a shard scorer reads."""
-        return ["shard", "term_id", "postings", "blockmax", "bm_avgdl"] + (
-            ["positions"] if self.need_pos else []
-        )
+
+def _shard_columns(need_pos: bool) -> List[str]:
+    """Segment columns a shard scorer reads."""
+    return ["shard", "term_id", "postings", "blockmax", "bm_avgdl"] + (
+        ["positions"] if need_pos else []
+    )
 
 
 def _plan_queries(
@@ -485,13 +522,14 @@ class _TermPostings:
     upper bounds (pruning stays exact, just looser, until compaction
     purges)."""
 
-    __slots__ = ("rows", "_full", "_maxsat", "avgdl_now", "tombs")
+    __slots__ = ("rows", "_full", "_pos", "_maxsat", "avgdl_now", "tombs")
 
     def __init__(
         self, avgdl_now: float, tombs: Optional[np.ndarray] = None
     ):
         self.rows: List[tuple] = []  # (postings, positions, blockmax, bmav)
         self._full = None
+        self._pos = None
         self._maxsat = None
         self.avgdl_now = avgdl_now
         self.tombs = tombs
@@ -570,6 +608,8 @@ class _TermPostings:
 
     def positions_full(self):
         """-> (doc_ids, tfs, flat_positions) merged, doc-sorted."""
+        if self._pos is not None:
+            return self._pos
         parts = []
         for pbuf, qbuf, _, _ in self.rows:
             d, t, _ = decode_block_postings(pbuf)
@@ -582,14 +622,16 @@ class _TermPostings:
                 d, t, flat = d[kidx], t[kidx], flat[take]
             parts.append((d, t, flat))
         if len(parts) == 1:
-            return parts[0]
+            self._pos = parts[0]
+            return self._pos
         d = np.concatenate([p[0] for p in parts])
         t = np.concatenate([p[1] for p in parts])
         order = np.argsort(d, kind="stable")
         # reorder ragged position segments to the sorted doc order
         flat_all = np.concatenate([p[2] for p in parts])
         take = ragged_take_index(t, order)
-        return d[order], t[order], flat_all[take]
+        self._pos = (d[order], t[order], flat_all[take])
+        return self._pos
 
 
 def _topk_tiebreak(p: np.ndarray, docs: np.ndarray, k: int) -> np.ndarray:
@@ -834,16 +876,26 @@ def _score_shard_pdf(
     prune: bool,
     tombs: Optional[np.ndarray],
 ) -> pd.DataFrame:
-    has_pos = "positions" in pdf.columns
+    """_score_terms over one applyInPandas shard group's segment rows."""
+    pos = pdf["positions"] if "positions" in pdf else [b""] * len(pdf)
     tp: Dict[int, _TermPostings] = {}
-    for i in range(len(pdf)):
-        term = int(pdf["term_id"].iat[i])
-        tp.setdefault(term, _TermPostings(avgdl, tombs)).add(
-            pdf["postings"].iat[i],
-            pdf["positions"].iat[i] if has_pos else b"",
-            pdf["blockmax"].iat[i],
-            pdf["bm_avgdl"].iat[i],
+    for tid, pbuf, qbuf, bm, bmav in zip(
+        pdf["term_id"], pdf["postings"], pos, pdf["blockmax"], pdf["bm_avgdl"]
+    ):
+        tp.setdefault(int(tid), _TermPostings(avgdl, tombs)).add(
+            pbuf, qbuf, bm, bmav
         )
+    out_q, out_d, out_s = _score_terms(tp, plan, avgdl, k, prune)
+    return pd.DataFrame(
+        {"query_id": out_q, "doc_id": out_d, "score": out_s}
+    )
+
+
+def _score_terms(
+    tp: Dict[int, _TermPostings], plan, avgdl: float, k: int, prune: bool
+) -> Tuple[List[str], List[int], List[float]]:
+    """One shard's term_id -> _TermPostings scored for every plan query
+    -> (query_ids, doc_ids, scores): each query's shard-local top-k."""
     out_q: List[str] = []
     out_d: List[int] = []
     out_s: List[float] = []
@@ -887,9 +939,7 @@ def _score_shard_pdf(
         out_q.extend([query_id] * order.size)
         out_d.extend(docs[order].tolist())
         out_s.extend(acc[order].tolist())
-    return pd.DataFrame(
-        {"query_id": out_q, "doc_id": out_d, "score": out_s}
-    )
+    return out_q, out_d, out_s
 
 
 def _shard_topk_candidates(
@@ -915,7 +965,7 @@ def _shard_topk_candidates(
         F.col("term_bucket").isin(qp.buckets)
         & F.col("term_id").isin(qp.hit_ids)
     )
-    cols = qp.shard_columns
+    cols = _shard_columns(qp.need_pos)
     out_schema = "query_id string, doc_id long, score double"
     if r.tombstones_distributed():
         # MASS-delete regime: tombstones reach each scorer group as
@@ -1003,63 +1053,19 @@ def _score_single_term_local(
     k: int,
     phase_sink: Optional[Dict[str, float]] = None,
 ):
-    """Driver-side single-term scoring over the pyarrow sidecar scan:
-    -> (query_id, doc_id, score) candidate rows (per-row top-k; rows
-    of one term are doc-disjoint). Bounded by DRIVER_SCORE_MAX_POSTINGS.
-
-    phase_sink: optional dict accumulating wall seconds for the two
-    sub-phases ("read_s" = pyarrow dataset open + filtered to_table,
-    "score_s" = posting decode + BM25 partial + top-k). Cache hits skip
-    read_s entirely (the phase table is how the cache's effect shows
-    up in BENCH).
-
-    Decoded postings are cached per term on the reader (LRU, bounded
-    by reader.postings_cache_max_postings total postings): the phase
-    triage showed the sidecar READ is ~85% of single-query latency, so
-    a repeated term answers from memory at score+merge cost only.
-    refresh() invalidates (a new snapshot may append rows to any
-    term)."""
-    from ..functions.xxhash import pmod
-
-    cache = reader._postings_cache
-    id_list = sorted(qplan)
-    missing = [t for t in id_list if t not in cache]
-    fetched: Dict[int, List[tuple]] = {}
-    if missing:
-        nb = reader.manifest.n_buckets
-        files = reader.segment_files_for_buckets(
-            {pmod(t, nb) for t in missing}
-        )
-        t0 = time.perf_counter()
-        tbl = _read_sidecar(files, ["term_id", "postings"], missing)
-        _phase(phase_sink, "read_s", t0)
-        t1 = time.perf_counter()
-        for tid, pbuf in zip(
-            tbl["term_id"].to_numpy(), tbl["postings"].to_pylist()
-        ):
-            docs, tfs, dls = decode_block_postings(bytes(pbuf))
-            if docs.size:
-                fetched.setdefault(int(tid), []).append((docs, tfs, dls))
-        _phase(phase_sink, "score_s", t1)
-        for t in missing:
-            # absent terms cache an empty list too — df>0 should make
-            # that impossible, but re-reading every query would be the
-            # worse failure mode
-            reader._postings_cache_put(t, fetched.get(t, []))
+    """Driver-side single-term scoring over the reader's term cache
+    (IndexReader.term_postings) -> (query_id, doc_id, score) candidate
+    rows: a top-k per (term, shard), as shards are doc-disjoint. Bounded
+    by DRIVER_SCORE_MAX_POSTINGS. phase_sink accumulates wall seconds of
+    "read_s" (the sidecar read of uncached terms; a cache hit has none)
+    and "score_s" (posting decode + BM25 partial + top-k)."""
+    tps = reader.term_postings(sorted(qplan), False, phase_sink)
     t1 = time.perf_counter()
-    tombs = reader.tombstones()
     out: List[Tuple[str, int, float]] = []
-    for tid in id_list:
-        rows = cache.get(tid)
-        if rows is None:
-            rows = fetched.get(tid, [])
-        else:
-            cache.move_to_end(tid)  # LRU touch
+    for tid, shards in tps.items():
         specs = qplan[tid]
-        for docs, tfs, dls in rows:
-            keep = _live_mask(docs, tombs)
-            if keep is not None:
-                docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+        for tp in shards.values():
+            docs, tfs, dls = tp.full()
             if docs.size == 0:
                 continue
             for query_id, w in specs:
@@ -1080,30 +1086,20 @@ def _score_shards_local(
     phase_sink: Optional[Dict[str, float]] = None,
 ):
     """Driver twin of the Spark route's groupBy(shard).applyInPandas:
-    the batch's segment rows come through the pyarrow sidecar read and
-    every shard group goes through the same _score_shard_pdf, so both
-    routes emit the same (query_id, doc_id, score) candidate rows.
-    Bounded by DRIVER_SCORE_MAX_POSTINGS; no Spark job. phase_sink
-    records "read_s" and "score_s" as in _score_single_term_local."""
-    t0 = time.perf_counter()
-    pdf = _read_sidecar(
-        reader.segment_files_for_buckets(qp.buckets),
-        qp.shard_columns,
-        qp.hit_ids,
-    ).to_pandas()
-    _phase(phase_sink, "read_s", t0)
+    the batch's term postings (reader's term cache, positions only for
+    phrase/near) grouped by shard, each shard scored by the same
+    _score_terms the Spark route runs — no pandas frame. Bounded by
+    DRIVER_SCORE_MAX_POSTINGS; no Spark job. phase_sink records
+    "read_s" and "score_s" as in _score_single_term_local."""
+    tps = reader.term_postings(qp.hit_ids, qp.need_pos, phase_sink)
     t1 = time.perf_counter()
-    tombs = reader.tombstones()
+    by_shard: Dict[int, Dict[int, _TermPostings]] = {}
+    for tid, shards in tps.items():
+        for shard, tp in shards.items():
+            by_shard.setdefault(shard, {})[tid] = tp
     out: List[Tuple[str, int, float]] = []
-    for _shard, g in pdf.groupby("shard", sort=False):
-        res = _score_shard_pdf(g, qp.entries, qp.avgdl, k, prune, tombs)
-        out.extend(
-            zip(
-                res["query_id"].tolist(),
-                res["doc_id"].tolist(),
-                res["score"].tolist(),
-            )
-        )
+    for tp in by_shard.values():
+        out.extend(zip(*_score_terms(tp, qp.entries, qp.avgdl, k, prune)))
     _phase(phase_sink, "score_s", t1)
     return out
 
@@ -1161,11 +1157,10 @@ def bm25_topk_rows(
     - driver_sidecar: the batch's summed df is at most
       DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver
       (reader.tombstones_distributed() is False). The query terms'
-      segment rows are read through the pyarrow sidecar and scored on
-      the driver — NO Spark job. A batch of single-term OR/AND queries
-      scores each term's rows directly, caching decoded postings on the
-      reader; any other batch scores each shard group with the same
-      _score_shard_pdf the Spark route runs.
+      postings come from the reader's term cache (term_postings) and
+      are scored on the driver — NO Spark job: single-term OR/AND
+      batches per (term, shard), any other batch per shard with the
+      same _score_terms the Spark route runs.
     - scan_stage: a single-term batch above the gate scores inside the
       scan stage itself (segment rows are doc-disjoint per term) — one
       shuffle-free stage per batch.
