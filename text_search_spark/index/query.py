@@ -10,16 +10,19 @@ Query plan:
   1. driver (_plan_queries, shared by every route): normalize query
      terms with the canonical tokenizer; compute term buckets with a
      driver-side XXH64 (bit-identical to the build's F.xxhash64, no Spark
-     job); global df per term from a pyarrow read of only those buckets'
-     committed files (postings column never read); idf weights.
-  2. read only the query terms' segment rows: term_bucket partition
-     pruning + term_id predicate pushdown; the positions column is read
-     ONLY for phrase/near queries. bm25_topk_rows serves them on the
-     driver from the reader's term cache (IndexReader.term_postings, a
-     pyarrow sidecar read of uncached terms) when the batch's summed df
+     job); global df per term summed from the reader's term directory
+     (_FileTerms: per committed file of those buckets, its footer,
+     term_id / df_part arrays and row-group ends, read on the file's
+     first touch per snapshot; binary search after that); idf weights.
+  2. read only the query terms' segment rows; the positions column is
+     read ONLY for phrase/near queries. bm25_topk_rows serves them on
+     the driver from the reader's term cache (IndexReader.term_postings:
+     for uncached terms, only the files whose directory holds them and
+     only the row groups holding their rows) when the batch's summed df
      is at most DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the
      driver — no Spark job; otherwise (and always for bm25_topk_df) a
-     Spark scan.
+     Spark scan with term_bucket partition pruning + term_id predicate
+     pushdown.
   3. per shard: each shard holds a doc-disjoint slice of EVERY term's
      postings (shard = hash(doc_id), build.py), so one group computes
      exact final BM25 scores for its docs with a FIXED per-term float64
@@ -55,6 +58,7 @@ from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -95,6 +99,8 @@ class IndexReader:
     # An entry holds raw segment row bytes (positions when read) plus the
     # lazily decoded arrays (_TermPostings): ~54 B per cached posting on
     # the perfbench `serve` index (13 B rows, 41 B arrays), so 8M ~ 430 MB.
+    # The term directory (_FileTerms) is outside this budget: 16 B per
+    # segment row of each touched file, ~3 B per posting on that index.
     POSTINGS_CACHE_MAX = 8_000_000
 
     def __init__(
@@ -128,6 +134,16 @@ class IndexReader:
         # _TermPostings}); LRU order, bounded by total postings
         self._postings_cache: "OrderedDict[int, tuple]" = OrderedDict()
         self._postings_cache_size = 0
+        # the term directory: committed segment files (absolute paths)
+        # by term_bucket partition dir, and path -> _FileTerms of each
+        # file a query touched
+        root = fmt.segments_dir(self.index_dir)
+        self._bucket_files: Dict[str, List[str]] = {}
+        for p in self.manifest.segment_files:  # always '/'-separated
+            self._bucket_files.setdefault(p.split("/", 1)[0], []).append(
+                os.path.join(root, p.replace("/", os.sep))
+            )
+        self._term_dir: Dict[str, _FileTerms] = {}
 
     def _postings_cache_put(self, tid, has_pos: bool, n: int, shards):
         """Insert one term's {shard: _TermPostings} (n = summed df_part),
@@ -154,9 +170,12 @@ class IndexReader:
     ) -> Dict[int, Dict[int, "_TermPostings"]]:
         """term_id -> {shard: _TermPostings}: the one driver-side segment
         read. Only terms the cache lacks (or holds without positions,
-        when need_pos) are read, in ONE pyarrow sidecar read over their
-        buckets' committed files, and cached; phase_sink gets "read_s"
-        only then. A term with no committed rows maps to {}."""
+        when need_pos) are read, and cached: the term directory names
+        the committed files of their buckets that hold them and the
+        row groups holding their rows, and only those row groups are
+        read (no dataset, no filter). phase_sink gets "read_s" and
+        "files_read" (files whose row groups were read) only then. A
+        term with no committed rows maps to {}."""
         cache = self._postings_cache
         out: Dict[int, dict] = {}
         for t in term_ids:
@@ -169,22 +188,30 @@ class IndexReader:
         if missing:
             nb = self.manifest.n_buckets
             cols = ["df_part"] + _shard_columns(need_pos)
+            want = np.unique(np.asarray(missing, np.int64))
             t0 = time.perf_counter()
-            tbl = _read_sidecar(
-                self.segment_files_for_buckets({pmod(t, nb) for t in missing}),
-                cols,
-                missing,
-            )
             tombs, avgdl = self.tombstones(), self.manifest.avgdl
             sizes = dict.fromkeys(missing, 0)
-            for n, shard, tid, pbuf, bm, bmav, *pos in zip(
-                *(tbl[c].to_pylist() for c in cols)
+            n_files = 0
+            for path in self.segment_files_for_buckets(
+                {pmod(t, nb) for t in missing}
             ):
-                sizes[tid] += n
-                fetched[tid].setdefault(
-                    shard, _TermPostings(avgdl, tombs)
-                ).add(pbuf, pos[0] if pos else b"", bm, bmav)
+                tbl = self._file_terms(path).read(path, want, cols)
+                if tbl is None:
+                    continue
+                n_files += 1
+                for n, shard, tid, pbuf, bm, bmav, *pos in zip(
+                    *(tbl[c].to_pylist() for c in cols)
+                ):
+                    sizes[tid] += n
+                    fetched[tid].setdefault(
+                        shard, _TermPostings(avgdl, tombs)
+                    ).add(pbuf, pos[0] if pos else b"", bm, bmav)
             _phase(phase_sink, "read_s", t0)
+            if phase_sink is not None:
+                phase_sink["files_read"] = (
+                    phase_sink.get("files_read", 0) + n_files
+                )
             for t in missing:
                 self._postings_cache_put(t, need_pos, sizes[t], fetched[t])
         out.update(fetched)
@@ -290,15 +317,19 @@ class IndexReader:
         given term_bucket partitions — the file set every driver-side
         pyarrow read opens (snapshot isolation vs in-flight appends).
         Empty list = the committed snapshot has no files there."""
-        files = self.manifest.segment_files
-        root = fmt.segments_dir(self.index_dir)
-        # manifest paths are always '/'-separated
-        want = {f"term_bucket={b}" for b in buckets}
         return [
-            os.path.join(root, p.replace("/", os.sep))
-            for p in files
-            if p.split("/", 1)[0] in want
+            f
+            for b in sorted(set(buckets))
+            for f in self._bucket_files.get(f"term_bucket={b}", ())
         ]
+
+    def _file_terms(self, path: str) -> "_FileTerms":
+        """The term directory entry of one committed segment file, read
+        on its first touch in this snapshot."""
+        ft = self._term_dir.get(path)
+        if ft is None:
+            ft = self._term_dir[path] = _FileTerms(path)
+        return ft
 
     def term_stats(self) -> DataFrame:
         """df/cf per term: the rebuilt base table (+) this snapshot's
@@ -366,13 +397,14 @@ class IndexReader:
     def df_for(self, terms: Sequence[str], buckets: Dict[str, int]) -> Dict[str, int]:
         """Global df per term, cached per reader.
 
-        Served by a DRIVER-SIDE pyarrow scan of only the query terms'
-        term_bucket partitions (term_id row-group stats prune inside,
-        and only term_id/df_part columns are read) — NO Spark job, so a
-        query batch costs exactly one job: the scoring scan. Falls back
-        to the pruned Spark scan if the local read fails (e.g. a
-        non-local filesystem without a pyarrow handler); any other error
-        is a defect and propagates."""
+        Summed on the DRIVER from the term directory (_FileTerms) of
+        only the query terms' term_bucket partitions: a file's term_id /
+        df_part columns are read on its first touch in this snapshot,
+        later lookups open no file — NO Spark job, and df is known
+        before any postings byte is read. Falls back to the pruned
+        Spark scan if the local read fails (e.g. a non-local filesystem
+        without a pyarrow handler); any other error is a defect and
+        propagates."""
         ids = self.ids_for(terms)
         missing = [t for t in set(terms) if t not in self._df_cache]
         if missing:
@@ -389,17 +421,15 @@ class IndexReader:
     def _df_sidecar_scan(
         self, id_list: List[int], blist: List[int]
     ) -> Dict[int, int]:
-        # list ONLY the needed bucket partitions — never the whole
+        # only the needed bucket partitions' files — never the whole
         # segments tree (a 10^12-doc index has many buckets; a query
         # touches len(terms) of them)
-        tbl = _read_sidecar(
-            self.segment_files_for_buckets(blist),
-            ["term_id", "df_part"],
-            id_list,
-        )
+        want = np.unique(np.asarray(id_list, np.int64))
         out: Dict[int, int] = {}
-        for t, v in zip(tbl["term_id"].to_numpy(), tbl["df_part"].to_numpy()):
-            out[int(t)] = out.get(int(t), 0) + int(v)
+        for path in self.segment_files_for_buckets(blist):
+            ft = self._file_terms(path)
+            for tid, lo, hi in ft.spans(want):
+                out[tid] = out.get(tid, 0) + int(ft.df[lo:hi].sum())
         return out
 
     def _df_spark_scan(
@@ -418,17 +448,66 @@ class IndexReader:
         return {r.term_id: int(r.df) for r in rows}
 
 
-def _read_sidecar(files: List[str], columns: List[str], term_ids):
-    """Driver-side pyarrow read of the given segment files: only
-    `columns`, only rows of `term_ids` (term_id row-group stats prune
-    inside). No Spark job. -> pyarrow Table."""
-    import pyarrow.dataset as pads
+class _FileTerms:
+    """Term directory entry of one committed segment file, read once per
+    snapshot: its parquet footer, its term_id and df_part columns as
+    NumPy arrays ordered by term_id (`order` maps them back to file rows;
+    None when the file is already term-sorted, the usual case — checked,
+    not assumed) and its row-group row ends. 16 B per segment row."""
 
-    if not files:
-        return pa.table({c: [] for c in columns})
-    return pads.dataset(files, format="parquet").to_table(
-        columns=columns, filter=pads.field("term_id").isin(term_ids)
-    )
+    __slots__ = ("footer", "ids", "df", "order", "rg_ends")
+
+    def __init__(self, path: str):
+        with pq.ParquetFile(path) as pf:
+            t = pf.read(columns=["term_id", "df_part"], use_threads=False)
+            self.footer = pf.metadata
+        ids, df = t["term_id"].to_numpy(), t["df_part"].to_numpy()
+        self.order = None
+        if (ids[1:] < ids[:-1]).any():
+            self.order = np.argsort(ids, kind="stable")
+            ids, df = ids[self.order], df[self.order]
+        self.ids, self.df = ids, df
+        self.rg_ends = np.cumsum(
+            [self.footer.row_group(i).num_rows
+             for i in range(self.footer.num_row_groups)],
+            dtype=np.int64,
+        )
+
+    def spans(self, want: np.ndarray) -> List[Tuple[int, int, int]]:
+        """(term_id, lo, hi) for each id of the sorted `want` this file
+        holds: ids[lo:hi] / df[lo:hi] are its rows (binary search)."""
+        lo = np.searchsorted(self.ids, want, "left")
+        hi = np.searchsorted(self.ids, want, "right")
+        return [
+            (int(t), int(a), int(b)) for t, a, b in zip(want, lo, hi) if b > a
+        ]
+
+    def read(
+        self, path: str, want: np.ndarray, columns: List[str]
+    ) -> Optional[pa.Table]:
+        """`columns` of this file's rows of the sorted term ids `want`,
+        in file order, decoding only the row groups that hold them; None
+        when the file holds none (it is not opened)."""
+        sp = self.spans(want)
+        if not sp:
+            return None
+        rows = np.concatenate([np.arange(lo, hi) for _, lo, hi in sp])
+        if self.order is not None:
+            rows = self.order[rows]
+        rows.sort()
+        sizes = np.diff(self.rg_ends, prepend=0)
+        rg = np.searchsorted(self.rg_ends, rows, side="right")
+        rgs = np.unique(rg)
+        # row offset of each chosen row group in the table read back
+        base = np.cumsum(sizes[rgs]) - sizes[rgs]
+        local = rows - (self.rg_ends[rg] - sizes[rg]) + base[
+            np.searchsorted(rgs, rg)
+        ]
+        with pq.ParquetFile(path, metadata=self.footer) as pf:
+            tbl = pf.read_row_groups(
+                rgs.tolist(), columns=columns, use_threads=False
+            )
+        return tbl.take(local)
 
 
 def _normalize_queries(queries: Sequence[QuerySpec]) -> List[QuerySpec]:
@@ -1174,12 +1253,16 @@ def bm25_topk_rows(
 
     phase_sink: optional dict; when given, accumulates wall seconds per
     phase ("plan_s" df/bucket lookups + weight planning, "read_s"
-    sidecar parquet read, "score_s" decode+score, "merge_s" driver
-    merge; the Spark routes read and score inside their job) and
-    records "path" = driver_sidecar | scan_stage | shard_topk.
+    driver parquet read of uncached terms, "score_s" decode+score,
+    "merge_s" driver merge; the Spark routes read and score inside
+    their job), counts in "files_read" the segment files whose row
+    groups the driver read (0 on a cache hit and on the Spark routes)
+    and records "path" = driver_sidecar | scan_stage | shard_topk.
 
     -> [(query_id, rank, doc_id, score)]"""
     t_start = time.perf_counter()
+    if phase_sink is not None:
+        phase_sink.setdefault("files_read", 0)
     r = reader or IndexReader(spark, index_dir)
     qp = _plan_queries(r, queries)
     if qp is None:
