@@ -98,7 +98,7 @@ def test_delete_excludes_everywhere_and_purge_matches_fresh_build(
         k = len(exp_rows)
         assert got_q.get(qid, [])[:k] == exp_rows, qid
 
-    # driver sidecar single-term path
+    # driver route, single-term batch
     single = [
         QuerySpec(q.query_id, q.terms, q.mode)
         for q in generate_queries()
@@ -107,17 +107,20 @@ def test_delete_excludes_everywhere_and_purge_matches_fresh_build(
     rows = bm25_topk_rows(spark, ix, single, k=10, reader=reader)
     assert rows and not any(r[2] in vset for r in rows)
 
-    # scan-stage executor path (force by dropping the driver cap)
+    # Spark shard route (force by dropping the driver cap)
     import text_search_spark.index.query as qmod
 
     old_cap = qmod.DRIVER_SCORE_MAX_POSTINGS
     qmod.DRIVER_SCORE_MAX_POSTINGS = -1
     try:
+        sink = {}
         rows2 = bm25_topk_rows(
-            spark, ix, single, k=10, reader=IndexReader(spark, ix)
+            spark, ix, single, k=10, reader=IndexReader(spark, ix),
+            phase_sink=sink,
         )
     finally:
         qmod.DRIVER_SCORE_MAX_POSTINGS = old_cap
+    assert sink["path"] == "shard_topk"
     assert rows2 == rows
 
     # doc_stats surface excludes tombstoned docs too

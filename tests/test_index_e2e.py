@@ -174,34 +174,54 @@ def test_topk_rows_identical_to_df(spark, built):
 
 
 def test_topk_rows_fast_paths_identical(spark, built):
-    """Single-term batches route to the driver-side sidecar scorer (or
-    the shuffle-free executor scorer above the postings threshold); both
-    must be rank- and score-identical to the DataFrame path."""
+    """Single-term batches and mixed single- plus multi-term batches are
+    rank- and score-identical to the DataFrame path and to the NumPy
+    oracle on both bm25_topk_rows routes: the driver scorer, and the
+    Spark shard route the batch takes above the postings threshold."""
     import text_search_spark.index.query as qm
     from text_search_spark.index.query import bm25_topk_rows
 
-    index_dir, _, _ = built
-    queries = [q for q in generate_queries() if len(set(q.terms)) == 1]
-    assert len(queries) >= 5
-    specs = [QuerySpec(q.query_id, q.terms, q.mode) for q in queries]
-    df_rows = sorted(
-        (r.query_id, r.rank, r.doc_id, r.score)
-        for r in bm25_topk_df(spark, index_dir, specs, k=10).collect()
-    )
-    rows_driver = sorted(bm25_topk_rows(spark, index_dir, specs, k=10))
-    assert rows_driver == df_rows
-    old = qm.DRIVER_SCORE_MAX_POSTINGS
-    try:
-        qm.DRIVER_SCORE_MAX_POSTINGS = 0  # force the executor fast path
-        rows_exec = sorted(bm25_topk_rows(spark, index_dir, specs, k=10))
-    finally:
-        qm.DRIVER_SCORE_MAX_POSTINGS = old
-    assert rows_exec == df_rows
+    index_dir, oracle_ix, _ = built
+    queries = generate_queries()
+    single = [q for q in queries if len(set(q.terms)) == 1]
+    assert len(single) >= 5 and len(single) < len(queries)
+    for batch in (single, queries):
+        specs = [QuerySpec(q.query_id, q.terms, q.mode) for q in batch]
+        df_rows = sorted(
+            (r.query_id, r.rank, r.doc_id, r.score)
+            for r in bm25_topk_df(spark, index_dir, specs, k=10).collect()
+        )
+        sink = {}
+        rows_driver = sorted(
+            bm25_topk_rows(spark, index_dir, specs, k=10, phase_sink=sink)
+        )
+        assert sink["path"] == "driver_sidecar"
+        assert rows_driver == df_rows
+        old = qm.DRIVER_SCORE_MAX_POSTINGS
+        try:
+            qm.DRIVER_SCORE_MAX_POSTINGS = 0  # force the Spark shard route
+            sink = {}
+            rows_spark = sorted(
+                bm25_topk_rows(spark, index_dir, specs, k=10, phase_sink=sink)
+            )
+        finally:
+            qm.DRIVER_SCORE_MAX_POSTINGS = old
+        assert sink["path"] == "shard_topk"
+        assert rows_spark == df_rows
+        got = {}
+        for qid, _rank, doc, score in rows_driver:
+            got.setdefault(qid, []).append((doc, score))
+        for q in batch:
+            exp = bm25_topk(oracle_ix, q.terms, k=10, mode=q.mode)
+            mine = got.get(q.query_id, [])
+            assert [d for d, _ in mine] == [d for d, _ in exp], q
+            for (_, sg), (_, se) in zip(mine, exp):
+                assert abs(sg - se) <= 1e-6, (q.query_id, sg, se)
 
 
 def test_topk_tie_break_on_identical_docs(spark, tmp_path):
     """25 byte-identical docs score identically on a single-term query;
-    every path (DataFrame, driver sidecar, executor scorer) must keep
+    every path (DataFrame, driver sidecar, Spark shard route) must keep
     the k SMALLEST doc_ids — a bare argpartition keeps an arbitrary
     tied subset and breaks rank-identity between the paths."""
     import text_search_spark.index.query as qm
@@ -234,8 +254,12 @@ def test_topk_tie_break_on_identical_docs(spark, tmp_path):
 
     old = qm.DRIVER_SCORE_MAX_POSTINGS
     try:
-        qm.DRIVER_SCORE_MAX_POSTINGS = 0  # force the executor fast path
-        exec_rows = sorted(bm25_topk_rows(spark, ix, specs, k=10))
+        qm.DRIVER_SCORE_MAX_POSTINGS = 0  # force the Spark shard route
+        sink = {}
+        spark_rows = sorted(
+            bm25_topk_rows(spark, ix, specs, k=10, phase_sink=sink)
+        )
     finally:
         qm.DRIVER_SCORE_MAX_POSTINGS = old
-    assert [r[2] for r in exec_rows] == want_ids
+    assert sink["path"] == "shard_topk"
+    assert [r[2] for r in spark_rows] == want_ids

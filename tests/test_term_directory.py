@@ -2,7 +2,8 @@
 from memory must equal the Spark scan, term_postings must return exactly
 the rows a filtered pyarrow.dataset read returns, a postings read must
 skip the files and row groups that do not hold the term, and refresh()
-must drop every entry of the previous snapshot."""
+must drop the entry of every file the new snapshot no longer commits
+and keep the others."""
 
 import os
 import shutil
@@ -25,6 +26,7 @@ from text_search_spark.index.build import (
 from text_search_spark.index.delete import delete_docs
 from text_search_spark.index.merge import compact_in_place
 from text_search_spark.index.query import IndexReader, QuerySpec, bm25_topk_rows
+from text_search_spark.oracle import bm25_topk, build_oracle_index
 from text_search_spark.streaming.incremental import upsert_batch
 from text_search_spark.textnorm import tokenize
 
@@ -244,6 +246,84 @@ def test_compaction_and_refresh_rebuild_the_directory(spark, states, tmp_path):
     assert r._term_dir and set(r._term_dir) <= set(_files(ix))
     fresh = IndexReader(spark, ix)
     assert after == bm25_topk_rows(spark, ix, specs, k=5, reader=fresh)
+
+
+def _oracle_rows(ix, tombs, text_of, specs, k):
+    """NumPy-oracle answers for the committed snapshot: every stored
+    version counts in the stats until a compaction purges it, and
+    tombstoned versions are dropped from the ranking."""
+    root = fmt.doc_stats_dir(ix)
+    docs = []
+    for rel in fmt.load_manifest(ix).doc_stats_files:
+        t = pq.read_table(os.path.join(root, rel), columns=["doc_id", "url"])
+        docs += [
+            (d, text_of(d, u))
+            for d, u in zip(t["doc_id"].to_pylist(), t["url"].to_pylist())
+        ]
+    ox = build_oracle_index(docs)
+    rows = []
+    for q in specs:
+        ranked = bm25_topk(ox, q.terms, k=ox.n_docs, mode=q.mode)
+        live = [(d, s) for d, s in ranked if d not in tombs][:k]
+        rows += [(q.query_id, i, d, s) for i, (d, s) in enumerate(live, 1)]
+    return sorted(rows)
+
+
+def test_refresh_keeps_the_entries_of_files_still_committed(
+    spark, states, tmp_path
+):
+    """An upsert only adds files: after refresh() the directory holds
+    the very _FileTerms objects it held before, and a query adds entries
+    only for the batch's files. A compaction retires every file, and no
+    entry of a retired file survives its refresh(). Answers equal the
+    NumPy oracle in every state."""
+    ix = str(tmp_path / "keep")
+    shutil.copytree(states["build"], ix)
+    texts = [(p.url, p.text) for p in generate_pages(N_DOCS)]
+    refetch = [
+        (u, f"{t} {NEEDLES[i % 4]}") for i, (u, t) in enumerate(texts[:30])
+    ]
+    base_text = {hash_doc_id_py(u): t for u, t in texts}
+    new_text = dict(refetch)
+
+    def text_of(doc_id, url):
+        return base_text.get(doc_id, new_text.get(url))
+
+    specs = [QuerySpec(f"q{i}", [t], "or") for i, t in enumerate(_terms()[:20])]
+    specs += [
+        QuerySpec("and", NEEDLES[0].split(), "and"),
+        QuerySpec("or", NEEDLES[1].split() + ["the"], "or"),
+    ]
+    r = IndexReader(spark, ix)
+
+    def check():
+        rows = bm25_topk_rows(spark, ix, specs, k=5, reader=r)
+        want = _oracle_rows(ix, set(r.tombstones().tolist()), text_of, specs, 5)
+        assert want and [g[:3] for g in rows] == [w[:3] for w in want]
+        for g, w in zip(rows, want):
+            assert abs(g[3] - w[3]) <= 1e-6, (g, w)
+        assert set(r._term_dir) <= set(_files(ix))
+
+    check()
+    before = dict(r._term_dir)
+    assert before
+
+    upsert_batch(
+        spark, spark.createDataFrame(refetch, "url string, text string"), ix, 1
+    )
+    r.refresh()
+    assert r.tombstones().size == 30
+    assert r._term_dir.keys() == before.keys()
+    assert all(r._term_dir[p] is ft for p, ft in before.items())
+    check()
+    added = set(r._term_dir) - set(before)
+    assert added and all("batch1-" in os.path.basename(p) for p in added)
+    assert all(r._term_dir[p] is ft for p, ft in before.items())
+
+    compact_in_place(spark, ix)
+    r.refresh()
+    assert not set(r._term_dir) & (set(before) | added)
+    check()
 
 
 def test_file_terms_on_an_unsorted_file_with_small_row_groups(tmp_path):

@@ -3,10 +3,9 @@
 Lucene/Iceberg shape: `delete_docs` writes an immutable tombstone
 parquet (doc_id long) and CAS-commits its path into
 `manifest.tombstone_files`. From the next reader refresh on, every
-query path excludes the tombstoned docs — driver sidecar, scan-stage,
+query path excludes the tombstoned docs — driver sidecar and
 shard-scorer, AND/OR/phrase/near alike (the mask lives in the shared
-posting-decode layer, query._TermPostings, plus the two single-term
-fast paths).
+posting-decode layer, query._TermPostings).
 
 Semantics (Lucene's deleted-docs contract, stated not hidden):
 

@@ -13,16 +13,17 @@ Query plan:
      job); global df per term summed from the reader's term directory
      (_FileTerms: per committed file of those buckets, its footer,
      term_id / df_part arrays and row-group ends, read on the file's
-     first touch per snapshot; binary search after that); idf weights.
+     first touch and kept while a snapshot commits it; binary search
+     after that); idf weights.
   2. read only the query terms' segment rows; the positions column is
-     read ONLY for phrase/near queries. bm25_topk_rows serves them on
-     the driver from the reader's term cache (IndexReader.term_postings:
-     for uncached terms, only the files whose directory holds them and
-     only the row groups holding their rows) when the batch's summed df
-     is at most DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the
-     driver — no Spark job; otherwise (and always for bm25_topk_df) a
-     Spark scan with term_bucket partition pruning + term_id predicate
-     pushdown.
+     read ONLY for phrase/near queries. bm25_topk_rows has two routes:
+     the driver route reads them from the reader's term cache
+     (IndexReader.term_postings: for uncached terms, only the files
+     whose directory holds them and only the row groups holding their
+     rows) when the batch's summed df is at most
+     DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver — no
+     Spark job; the Spark route (always taken by bm25_topk_df) scans
+     with term_bucket partition pruning + term_id predicate pushdown.
   3. per shard: each shard holds a doc-disjoint slice of EVERY term's
      postings (shard = hash(doc_id), build.py), so one group computes
      exact final BM25 scores for its docs with a FIXED per-term float64
@@ -121,11 +122,15 @@ class IndexReader:
         self.snapshot_id = snapshot_id
         self.postings_cache_max_postings = self.POSTINGS_CACHE_MAX
         self.manifest = self._load_validated()
+        self._term_dir: Dict[str, _FileTerms] = {}
         self._reset()
 
     def _reset(self) -> None:
         """Drop every field derived from the loaded snapshot (a new one
-        may add rows to ANY term, tombstones and a new avgdl)."""
+        may add rows to ANY term, tombstones and a new avgdl). Term
+        directory entries of files the new snapshot still commits are
+        kept: a segment file is immutable and its landed name carries
+        its write's unique part name, so a path never changes content."""
         self._df_cache: Dict[str, int] = {}
         self._segments_df: Optional[DataFrame] = None
         self._tombstones: Optional[np.ndarray] = None
@@ -139,11 +144,13 @@ class IndexReader:
         # file a query touched
         root = fmt.segments_dir(self.index_dir)
         self._bucket_files: Dict[str, List[str]] = {}
+        kept: Dict[str, _FileTerms] = {}
         for p in self.manifest.segment_files:  # always '/'-separated
-            self._bucket_files.setdefault(p.split("/", 1)[0], []).append(
-                os.path.join(root, p.replace("/", os.sep))
-            )
-        self._term_dir: Dict[str, _FileTerms] = {}
+            path = os.path.join(root, p.replace("/", os.sep))
+            self._bucket_files.setdefault(p.split("/", 1)[0], []).append(path)
+            if path in self._term_dir:
+                kept[path] = self._term_dir[path]
+        self._term_dir = kept
 
     def _postings_cache_put(self, tid, has_pos: bool, n: int, shards):
         """Insert one term's {shard: _TermPostings} (n = summed df_part),
@@ -325,7 +332,7 @@ class IndexReader:
 
     def _file_terms(self, path: str) -> "_FileTerms":
         """The term directory entry of one committed segment file, read
-        on its first touch in this snapshot."""
+        on its first touch; _reset keeps it while the file is committed."""
         ft = self._term_dir.get(path)
         if ft is None:
             ft = self._term_dir[path] = _FileTerms(path)
@@ -399,7 +406,7 @@ class IndexReader:
 
         Summed on the DRIVER from the term directory (_FileTerms) of
         only the query terms' term_bucket partitions: a file's term_id /
-        df_part columns are read on its first touch in this snapshot,
+        df_part columns are read on its first touch by this reader,
         later lookups open no file — NO Spark job, and df is known
         before any postings byte is read. Falls back to the pruned
         Spark scan if the local read fails (e.g. a non-local filesystem
@@ -450,10 +457,11 @@ class IndexReader:
 
 class _FileTerms:
     """Term directory entry of one committed segment file, read once per
-    snapshot: its parquet footer, its term_id and df_part columns as
-    NumPy arrays ordered by term_id (`order` maps them back to file rows;
-    None when the file is already term-sorted, the usual case — checked,
-    not assumed) and its row-group row ends. 16 B per segment row."""
+    reader while the file stays committed: its parquet footer, its
+    term_id and df_part columns as NumPy arrays ordered by term_id
+    (`order` maps them back to file rows; None when the file is already
+    term-sorted, the usual case — checked, not assumed) and its
+    row-group row ends. 16 B per segment row."""
 
     __slots__ = ("footer", "ids", "df", "order", "rg_ends")
 
@@ -714,12 +722,17 @@ class _TermPostings:
 
 
 def _topk_tiebreak(p: np.ndarray, docs: np.ndarray, k: int) -> np.ndarray:
-    """Indices of the k best scores with ties broken by doc_id asc —
-    the SAME (score desc, doc_id asc) discipline as _shard_scorer's
-    lexsort, so every local selection preserves rank-identity with the
-    full path. A bare np.argpartition keeps an ARBITRARY subset of
-    boundary ties (e.g. duplicated pages with identical tf/dl), which
-    can drop the doc the global merge's tie-break would keep."""
+    """Indices of the k best scores with ties broken by doc_id asc (docs
+    distinct) — the same set as np.lexsort((docs, -p))[:k], the total
+    order of the global merge, without sorting all of p: argpartition
+    finds the kth score and only the docs at or above it are sorted
+    (faster than the full lexsort from ~1,000 docs on, slower below a
+    few hundred, so _score_terms uses it for one-term queries, whose
+    candidates are a whole posting list). A
+    bare np.argpartition keeps an ARBITRARY subset of boundary ties
+    (e.g. duplicated pages with identical tf/dl), which can drop the doc
+    the global merge's tie-break would keep. Unordered when p.size <= k
+    (every index is kept; the merge orders them)."""
     if p.size <= k:
         return np.arange(p.size)
     part = np.argpartition(-p, k - 1)
@@ -986,38 +999,39 @@ def _score_terms(
             terms
         ):
             continue
-        if mode == "and":
-            docs = None
-            for t in terms:
-                d = tp[t].full()[0]
-                docs = d if docs is None else np.intersect1d(
-                    docs, d, assume_unique=True
-                )
-                if docs.size == 0:
-                    break
-            if docs is None or docs.size == 0:
-                continue
-        elif mode == "phrase":
-            docs = _phrase_docs(tp, phrase_seq)
-            if docs.size == 0:
-                continue
-        elif mode == "near":
-            docs = _near_docs(tp, terms, window)
-            if docs.size == 0:
-                continue
-        elif prune and len(present) > 1:
-            docs = _or_candidates_pruned(terms, idfs, tp, avgdl, k)
+        if len(terms) == 1 and mode in ("or", "and"):
+            # one term: its decoded postings are the candidates and its
+            # partial IS the canonical score (0.0 + x == x) — no union,
+            # no selected-block re-decode
+            docs, tfs, dls = tp[terms[0]].full()
+            acc = _partial(idfs[0], tfs, dls, avgdl)
+            idx = _topk_tiebreak(acc, docs, k)
         else:
-            docs = np.unique(
-                np.concatenate([tp[t].full()[0] for t in present])
-            )
-        if docs.size == 0:
-            continue
-        acc = _canonical_scores(terms, idfs, tp, docs, avgdl)
-        order = np.lexsort((docs, -acc))[:k]
-        out_q.extend([query_id] * order.size)
-        out_d.extend(docs[order].tolist())
-        out_s.extend(acc[order].tolist())
+            if mode == "and":
+                docs = tp[terms[0]].full()[0]
+                for t in terms[1:]:
+                    if docs.size == 0:
+                        break
+                    docs = np.intersect1d(
+                        docs, tp[t].full()[0], assume_unique=True
+                    )
+            elif mode == "phrase":
+                docs = _phrase_docs(tp, phrase_seq)
+            elif mode == "near":
+                docs = _near_docs(tp, terms, window)
+            elif prune and len(present) > 1:
+                docs = _or_candidates_pruned(terms, idfs, tp, avgdl, k)
+            else:
+                docs = np.unique(
+                    np.concatenate([tp[t].full()[0] for t in present])
+                )
+            if docs.size == 0:
+                continue
+            acc = _canonical_scores(terms, idfs, tp, docs, avgdl)
+            idx = np.lexsort((docs, -acc))[:k]
+        out_q.extend([query_id] * idx.size)
+        out_d.extend(docs[idx].tolist())
+        out_s.extend(acc[idx].tolist())
     return out_q, out_d, out_s
 
 
@@ -1125,38 +1139,6 @@ def _phase(sink: Optional[Dict[str, float]], key: str, t0: float) -> None:
         sink[key] = sink.get(key, 0.0) + time.perf_counter() - t0
 
 
-def _score_single_term_local(
-    reader: "IndexReader",
-    qplan: Dict[int, List[Tuple[str, float]]],
-    avgdl: float,
-    k: int,
-    phase_sink: Optional[Dict[str, float]] = None,
-):
-    """Driver-side single-term scoring over the reader's term cache
-    (IndexReader.term_postings) -> (query_id, doc_id, score) candidate
-    rows: a top-k per (term, shard), as shards are doc-disjoint. Bounded
-    by DRIVER_SCORE_MAX_POSTINGS. phase_sink accumulates wall seconds of
-    "read_s" (the sidecar read of uncached terms; a cache hit has none)
-    and "score_s" (posting decode + BM25 partial + top-k)."""
-    tps = reader.term_postings(sorted(qplan), False, phase_sink)
-    t1 = time.perf_counter()
-    out: List[Tuple[str, int, float]] = []
-    for tid, shards in tps.items():
-        specs = qplan[tid]
-        for tp in shards.values():
-            docs, tfs, dls = tp.full()
-            if docs.size == 0:
-                continue
-            for query_id, w in specs:
-                p = _partial(w, tfs, dls, avgdl)
-                idx = _topk_tiebreak(p, docs, k)
-                out.extend(
-                    (query_id, int(docs[j]), float(p[j])) for j in idx
-                )
-    _phase(phase_sink, "score_s", t1)
-    return out
-
-
 def _score_shards_local(
     reader: "IndexReader",
     qp: _QueryPlan,
@@ -1168,8 +1150,9 @@ def _score_shards_local(
     the batch's term postings (reader's term cache, positions only for
     phrase/near) grouped by shard, each shard scored by the same
     _score_terms the Spark route runs — no pandas frame. Bounded by
-    DRIVER_SCORE_MAX_POSTINGS; no Spark job. phase_sink records
-    "read_s" and "score_s" as in _score_single_term_local."""
+    DRIVER_SCORE_MAX_POSTINGS; no Spark job. phase_sink accumulates wall
+    seconds of "read_s" (the segment read of uncached terms; a cache hit
+    has none) and "score_s" (posting decode + BM25 + local top-k)."""
     tps = reader.term_postings(qp.hit_ids, qp.need_pos, phase_sink)
     t1 = time.perf_counter()
     by_shard: Dict[int, Dict[int, _TermPostings]] = {}
@@ -1183,42 +1166,6 @@ def _score_shards_local(
     return out
 
 
-def _single_term_scorer(qplan: Dict[int, List[Tuple[str, float]]],
-                        avgdl: float, k: int,
-                        tombs: Optional[np.ndarray] = None):
-    """mapInPandas fn scoring single-term queries row-by-row: every
-    segment row is doc-disjoint from every other row of the same term
-    (doc-sharded build; incremental appends add new docs), so a per-row
-    top-k is an exact local top-k and no shuffle is needed."""
-
-    def score(batches):
-        for pdf in batches:
-            out_q: List[str] = []
-            out_d: List[int] = []
-            out_s: List[float] = []
-            for i in range(len(pdf)):
-                specs = qplan.get(int(pdf["term_id"].iat[i]))
-                if not specs:
-                    continue
-                d, f, l = decode_block_postings(bytes(pdf["postings"].iat[i]))
-                keep = _live_mask(d, tombs)
-                if keep is not None:
-                    d, f, l = d[keep], f[keep], l[keep]
-                if d.size == 0:
-                    continue
-                for query_id, w in specs:
-                    p = _partial(w, f, l, avgdl)
-                    idx = _topk_tiebreak(p, d, k)
-                    out_q.extend([query_id] * idx.size)
-                    out_d.extend(d[idx].tolist())
-                    out_s.extend(p[idx].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, "doc_id": out_d, "score": out_s}
-            )
-
-    return score
-
-
 def bm25_topk_rows(
     spark: SparkSession,
     index_dir: str,
@@ -1230,34 +1177,30 @@ def bm25_topk_rows(
 ) -> List[Tuple[str, int, int, float]]:
     """Low-latency variant: the global merge runs driver-side over the
     candidate rows (the reference's bounded-heap global merge, SURVEY
-    §2.5 T3) instead of a second shuffle. The batch takes one of three
-    routes:
+    §2.5 T3) instead of a second shuffle. The batch takes one of two
+    routes, both scoring each shard group with _score_terms:
 
     - driver_sidecar: the batch's summed df is at most
       DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver
       (reader.tombstones_distributed() is False). The query terms'
       postings come from the reader's term cache (term_postings) and
-      are scored on the driver — NO Spark job: single-term OR/AND
-      batches per (term, shard), any other batch per shard with the
-      same _score_terms the Spark route runs.
-    - scan_stage: a single-term batch above the gate scores inside the
-      scan stage itself (segment rows are doc-disjoint per term) — one
-      shuffle-free stage per batch.
-    - shard_topk: any other batch above the gate, and every batch in
-      the MASS-delete regime — bm25_topk_df's groupBy(shard) route
-      (cogrouped with the tombstones when they are distributed).
+      are grouped by shard on the driver (_score_shards_local) — NO
+      Spark job.
+    - shard_topk: every other batch — bm25_topk_df's groupBy(shard)
+      route (_shard_topk_candidates; cogrouped with the tombstones in
+      the MASS-delete regime).
 
-    Every route is rank- and score-identical to bm25_topk_df (same
+    Both routes are rank- and score-identical to bm25_topk_df (same
     float64 ops, same total order). The driver route falls back to the
-    Spark routes on environmental failures only.
+    Spark route on environmental failures only.
 
     phase_sink: optional dict; when given, accumulates wall seconds per
     phase ("plan_s" df/bucket lookups + weight planning, "read_s"
     driver parquet read of uncached terms, "score_s" decode+score,
-    "merge_s" driver merge; the Spark routes read and score inside
-    their job), counts in "files_read" the segment files whose row
-    groups the driver read (0 on a cache hit and on the Spark routes)
-    and records "path" = driver_sidecar | scan_stage | shard_topk.
+    "merge_s" driver merge; the Spark route reads and scores inside
+    its job), counts in "files_read" the segment files whose row
+    groups the driver read (0 on a cache hit and on the Spark route)
+    and records "path" = driver_sidecar | shard_topk.
 
     -> [(query_id, rank, doc_id, score)]"""
     t_start = time.perf_counter()
@@ -1267,24 +1210,18 @@ def bm25_topk_rows(
     qp = _plan_queries(r, queries)
     if qp is None:
         return []
-    # MASS-delete regime: both driver routes and the scan-stage closure
-    # need the driver numpy tombstone union — above the gate they'd
-    # materialize it, so the batch routes to the cogrouped shard path
-    # instead (exact, fully distributed; higher per-query floor, which
-    # is the documented trade until compaction purges)
-    driver_tombs = not r.tombstones_distributed()
-    single = driver_tombs and all(
-        len(e[2]) == 1 and e[1] in ("or", "and") for e in qp.entries
+    # MASS-delete regime: the driver route needs the driver numpy
+    # tombstone union — above the gate it would materialize it, so the
+    # batch routes to the cogrouped shard path instead (exact, fully
+    # distributed; higher per-query floor, which is the documented
+    # trade until compaction purges)
+    on_driver = (
+        not r.tombstones_distributed()
+        and qp.total_df <= DRIVER_SCORE_MAX_POSTINGS
     )
-    if single:
-        hit = set(qp.hit_ids)
-        qplan: Dict[int, List[Tuple[str, float]]] = {}
-        for query_id, _mode, tids, idfs, _seq, _window in qp.entries:
-            if tids[0] in hit:
-                qplan.setdefault(tids[0], []).append((query_id, idfs[0]))
     _phase(phase_sink, "plan_s", t_start)
     rows = None
-    if driver_tombs and qp.total_df <= DRIVER_SCORE_MAX_POSTINGS:
+    if on_driver:
         # small pruned volume (known exactly from df): score on the
         # driver (~ms, the real latency path). Fallback is for
         # ENVIRONMENTAL failures only (non-local fs, missing pyarrow
@@ -1294,44 +1231,20 @@ def bm25_topk_rows(
         # triage numbers stay attributable.
         saved = dict(phase_sink) if phase_sink is not None else None
         try:
-            if single:
-                rows = _score_single_term_local(
-                    r, qplan, qp.avgdl, k, phase_sink
-                )
-            else:
-                rows = _score_shards_local(r, qp, k, prune, phase_sink)
+            rows = _score_shards_local(r, qp, k, prune, phase_sink)
             path = "driver_sidecar"
         except _LOCAL_READ_ERRORS:
             if phase_sink is not None:
                 phase_sink.clear()
                 phase_sink.update(saved)
     if rows is None:
-        if single:
-            # big terms / non-local fs: shuffle-free scan-stage scoring
-            # (segment rows are doc-disjoint per term -> exact)
-            cand = (
-                r.segments()
-                .where(
-                    F.col("term_bucket").isin(qp.buckets)
-                    & F.col("term_id").isin(sorted(qplan))
-                )
-                .select("term_id", "postings")
-                .mapInPandas(
-                    _single_term_scorer(
-                        qplan, qp.avgdl, k, tombs=r.tombstones()
-                    ),
-                    schema="query_id string, doc_id long, score double",
-                )
-            )
-            path = "scan_stage"
-        else:
-            cand = _shard_topk_candidates(
-                spark, index_dir, queries, k, r, prune, qp
-            )
-            path = "shard_topk"
+        cand = _shard_topk_candidates(
+            spark, index_dir, queries, k, r, prune, qp
+        )
         rows = [
             (row.query_id, row.doc_id, row.score) for row in cand.collect()
         ]
+        path = "shard_topk"
     if phase_sink is not None:
         phase_sink["path"] = path
     t_merge = time.perf_counter()
