@@ -125,7 +125,9 @@ def main() -> None:
     dedup.lsh_candidate_pairs(dedup.minhash_signatures(warm_docs)).count()
     warm_docs.unpersist()
     shutil.rmtree(warm_dir, ignore_errors=True)
-    timed(
+    # "driver" below build.DRIVER_BUILD_MAX_TOKENS (one collect, landed
+    # in process), "spark" above it
+    extra["index_build_route"] = timed(
         "index_build",
         lambda: build_index(
             spark,

@@ -220,46 +220,75 @@ def test_topk_rows_fast_paths_identical(spark, built):
 
 
 def test_topk_tie_break_on_identical_docs(spark, tmp_path):
-    """25 byte-identical docs score identically on a single-term query;
+    """Byte-identical docs score identically on a single-term query;
     every path (DataFrame, driver sidecar, Spark shard route) must keep
-    the k SMALLEST doc_ids — a bare argpartition keeps an arbitrary
-    tied subset and breaks rank-identity between the paths."""
+    the k SMALLEST doc_ids among the docs tied at the kth score — a bare
+    argpartition keeps an arbitrary tied subset and breaks rank-identity
+    between the paths. Run on both sides of the one-term selection's
+    lexsort cut-over (query._TIEBREAK_LEXSORT_MAX): 25 docs, and enough
+    that each of the two shards holds more than the cut-over. The six
+    highest doc_ids score above the tie (tf 2, same dl), so the kth
+    score is a duplicated (tf, dl) one."""
     import text_search_spark.index.query as qm
     from text_search_spark.index.query import bm25_topk_rows
 
-    ix = str(tmp_path / "tie_ix")
-    pdf = spark.createDataFrame(
-        [(i, "alpha beta gamma") for i in range(25)],
-        "doc_id long, text string",
-    )
-    build_index(
-        spark,
-        prepare_corpus(pdf, doc_id_col="doc_id"),
-        ix,
-        n_buckets=4,
-        n_shards=2,
-        bucket_groups=1,
-    )
-    specs = [QuerySpec("q", ["ALPHA"], "or")]
-    want_ids = list(range(10))
-
-    df_rows = sorted(
-        (r.rank, r.doc_id) for r in
-        bm25_topk_df(spark, ix, specs, k=10).collect()
-    )
-    assert [d for _, d in df_rows] == want_ids
-
-    driver_rows = sorted(bm25_topk_rows(spark, ix, specs, k=10))
-    assert [r[2] for r in driver_rows] == want_ids
-
-    old = qm.DRIVER_SCORE_MAX_POSTINGS
-    try:
-        qm.DRIVER_SCORE_MAX_POSTINGS = 0  # force the Spark shard route
-        sink = {}
-        spark_rows = sorted(
-            bm25_topk_rows(spark, ix, specs, k=10, phase_sink=sink)
+    for n in (25, 4 * qm._TIEBREAK_LEXSORT_MAX):
+        ix = str(tmp_path / f"tie_ix{n}")
+        pdf = spark.createDataFrame(
+            [
+                (i, "alpha alpha gamma" if i >= n - 6 else "alpha beta gamma")
+                for i in range(n)
+            ],
+            "doc_id long, text string",
         )
-    finally:
-        qm.DRIVER_SCORE_MAX_POSTINGS = old
-    assert sink["path"] == "shard_topk"
-    assert [r[2] for r in spark_rows] == want_ids
+        build_index(
+            spark,
+            prepare_corpus(pdf, doc_id_col="doc_id"),
+            ix,
+            n_buckets=4,
+            n_shards=2,
+            bucket_groups=1,
+        )
+        specs = [QuerySpec("q", ["ALPHA"], "or")]
+        want_ids = list(range(n - 6, n)) + list(range(4))
+
+        df_rows = sorted(
+            (r.rank, r.doc_id) for r in
+            bm25_topk_df(spark, ix, specs, k=10).collect()
+        )
+        assert [d for _, d in df_rows] == want_ids
+
+        driver_rows = sorted(bm25_topk_rows(spark, ix, specs, k=10))
+        assert [r[2] for r in driver_rows] == want_ids
+
+        old = qm.DRIVER_SCORE_MAX_POSTINGS
+        try:
+            qm.DRIVER_SCORE_MAX_POSTINGS = 0  # force the Spark shard route
+            sink = {}
+            spark_rows = sorted(
+                bm25_topk_rows(spark, ix, specs, k=10, phase_sink=sink)
+            )
+        finally:
+            qm.DRIVER_SCORE_MAX_POSTINGS = old
+        assert sink["path"] == "shard_topk"
+        assert [r[2] for r in spark_rows] == want_ids
+
+
+def test_topk_tiebreak_equals_lexsort_across_cutover():
+    """_topk_tiebreak selects np.lexsort((docs, -p))[:k] on both sides of
+    its lexsort cut-over, with many duplicated scores at the kth one."""
+    import numpy as np
+
+    from text_search_spark.index.query import (
+        _TIEBREAK_LEXSORT_MAX,
+        _topk_tiebreak,
+    )
+
+    rng = np.random.default_rng(7)
+    for n in (11, 50, _TIEBREAK_LEXSORT_MAX, _TIEBREAK_LEXSORT_MAX + 1,
+              3 * _TIEBREAK_LEXSORT_MAX):
+        docs = rng.permutation(10 * n)[:n].astype(np.int64)
+        p = rng.integers(0, 4, n).astype(np.float64)  # heavy ties
+        got = _topk_tiebreak(p, docs, 10)
+        want = np.lexsort((docs, -p))[:10]
+        assert sorted(got.tolist()) == sorted(want.tolist()), n

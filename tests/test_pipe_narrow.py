@@ -2,6 +2,7 @@
 url ids span far beyond int32, and the segment pipe must carry them
 whole so the built index still answers queries with the right ids."""
 
+import text_search_spark.index.build as B
 from text_search_spark.index.build import (
     build_index,
     hash_doc_id_py,
@@ -10,9 +11,10 @@ from text_search_spark.index.build import (
 from text_search_spark.index.query import QuerySpec, bm25_topk_df
 
 
-def test_sparse_hashed_ids_disable_narrowing(spark, tmp_path):
+def test_sparse_hashed_ids_disable_narrowing(spark, tmp_path, monkeypatch):
     """60-bit hashed doc_ids (url ingest) span >> 2^31 — the int64 pipe
     must carry them unchanged and still build a correct index."""
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)  # Spark route
     urls = [f"https://example.com/p{i}" for i in range(30)]
     ids = [hash_doc_id_py(u) for u in urls]
     assert max(ids) - min(ids) > 2**31  # the id space really is sparse

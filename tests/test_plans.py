@@ -118,7 +118,7 @@ def test_filter_pushdown_on_documents(spark):
     assert "lang" in plan.split("PushedFilters", 1)[1].splitlines()[0]
 
 
-def test_no_tokenizer_above_generate(spark, tmp_path):
+def test_no_tokenizer_above_generate(spark, tmp_path, monkeypatch):
     """Regression guard: the tokenizer expression must never appear in an
     operator ABOVE the posexplode Generate (Catalyst's CollapseProject can
     inline e.g. size(tokens) there, re-evaluating the tokenizer once per
@@ -126,6 +126,7 @@ def test_no_tokenizer_above_generate(spark, tmp_path):
     import text_search_spark.index.build as B
     from text_search_spark.index import format as ixfmt
 
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)  # Spark route
     p = str(tmp_path / "pages.parquet")
     spark.createDataFrame(
         [(i, f"word{i} text here", str(i)) for i in range(20)],
@@ -323,6 +324,7 @@ def test_fused_build_single_grouper_scan(spark, tmp_path, monkeypatch):
     the vocab and segment stages (persisted posting relation)."""
     import text_search_spark.index.build as B
 
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)  # Spark route
     calls = {"grouped_terms": 0, "explode_vocab": 0}
     orig_gt = B.grouped_terms
 
@@ -361,6 +363,7 @@ def test_fused_build_gate_falls_back(spark, tmp_path, monkeypatch):
     explode scan), and the segments are the fused build's rows."""
     import text_search_spark.index.build as B
 
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)  # Spark route
     pdf = spark.createDataFrame(
         [(i, f"alpha beta w{i} gamma alpha", str(i)) for i in range(10)],
         "doc_id long, text string, url string",

@@ -47,49 +47,63 @@ def _index_fingerprint(spark, index_dir):
     return [tuple(r) for r in seg], [tuple(r) for r in ds], [tuple(r) for r in ts]
 
 
-def test_kill_and_resume_identical(spark, tmp_path):
+def test_kill_and_resume_identical(spark, tmp_path, monkeypatch):
+    """On both build routes: a build killed after the second of four
+    segment bucket-groups resumes (on the Spark route) to the index an
+    uninterrupted build of the same route gives, and both routes give the
+    same index."""
+    import text_search_spark.index.build as B
+
     corpus = _corpus(spark)
-    clean_dir = str(tmp_path / "clean")
-    resumed_dir = str(tmp_path / "resumed")
+    prints = {}
+    for route, gate in (("spark", -1), ("driver", float("inf"))):
+        monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", gate)
+        clean_dir = str(tmp_path / f"clean_{route}")
+        resumed_dir = str(tmp_path / f"resumed_{route}")
 
-    build_index(
-        spark, corpus, clean_dir, n_buckets=4, n_shards=2, bucket_groups=4
-    )
-
-    # crash after the second of four segment bucket-groups
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(
-            spark,
-            corpus,
-            resumed_dir,
-            n_buckets=4,
-            n_shards=2,
+        assert build_index(
+            spark, corpus, clean_dir, n_buckets=4, n_shards=2,
             bucket_groups=4,
-            fail_after="segments:1",
+        ) == route
+
+        # crash after the second of four segment bucket-groups
+        with pytest.raises(RuntimeError, match="injected failure"):
+            build_index(
+                spark,
+                corpus,
+                resumed_dir,
+                n_buckets=4,
+                n_shards=2,
+                bucket_groups=4,
+                fail_after="segments:1",
+            )
+        man = fmt.load_manifest(resumed_dir)
+        assert not man.complete
+        assert man.stages.get("segments:1") and not man.stages.get(
+            "segments:2"
         )
-    man = fmt.load_manifest(resumed_dir)
-    assert not man.complete
-    assert man.stages.get("segments:1") and not man.stages.get("segments:2")
 
-    # resume (config comes from the on-disk manifest, not the args)
-    build_index(spark, corpus, resumed_dir, run_id="run-resume")
-    man = fmt.load_manifest(resumed_dir)
-    assert man.complete
+        # resume (config comes from the on-disk manifest, not the args)
+        build_index(spark, corpus, resumed_dir, run_id="run-resume")
+        man = fmt.load_manifest(resumed_dir)
+        assert man.complete
 
-    assert _index_fingerprint(spark, resumed_dir) == _index_fingerprint(
-        spark, clean_dir
-    )
+        prints[route] = _index_fingerprint(spark, clean_dir)
+        assert _index_fingerprint(spark, resumed_dir) == prints[route]
 
-    # lineage: the metrics table shows groups 0-1 built by run0 and
-    # groups 2-3 by the resume run — completed work was NOT redone
-    metrics = spark.read.parquet(fmt.metrics_dir(resumed_dir)).collect()
-    by_stage = {r.stage: r for r in metrics if r.stage.startswith("segments")}
-    assert by_stage["segments:0"].run_id == "run0"
-    assert by_stage["segments:1"].run_id == "run0"
-    assert by_stage["segments:2"].run_id == "run-resume"
-    assert by_stage["segments:3"].run_id == "run-resume"
-    stages = [r.stage for r in metrics if r.stage.startswith("segments")]
-    assert len(stages) == len(set(stages))  # no duplicates
+        # lineage: the metrics table shows groups 0-1 built by run0 and
+        # groups 2-3 by the resume run — completed work was NOT redone
+        metrics = spark.read.parquet(fmt.metrics_dir(resumed_dir)).collect()
+        by_stage = {
+            r.stage: r for r in metrics if r.stage.startswith("segments")
+        }
+        assert by_stage["segments:0"].run_id == "run0"
+        assert by_stage["segments:1"].run_id == "run0"
+        assert by_stage["segments:2"].run_id == "run-resume"
+        assert by_stage["segments:3"].run_id == "run-resume"
+        stages = [r.stage for r in metrics if r.stage.startswith("segments")]
+        assert len(stages) == len(set(stages))  # no duplicates
+    assert prints["driver"] == prints["spark"]
 
 
 def test_complete_index_refuses_overwrite(spark, tmp_path):
@@ -100,14 +114,16 @@ def test_complete_index_refuses_overwrite(spark, tmp_path):
         build_index(spark, corpus, d)
 
 
-def test_resume_refuses_other_format_version(spark, tmp_path):
+def test_resume_refuses_other_format_version(spark, tmp_path, monkeypatch):
     """A partial build from another FORMAT_VERSION must fail loudly on
     resume (ADVICE r2: the old behavior silently read stale tmp through
-    the current schema)."""
+    the current schema). Spark route: only it has the tokens stage."""
     import pytest
 
     import text_search_spark.index.build as B
     from text_search_spark.index import format as ixfmt
+
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)
 
     pdf = spark.createDataFrame(
         [(i, f"alpha w{i}", str(i)) for i in range(20)],

@@ -114,6 +114,7 @@ def test_spill_e2e_build_identical(spark, tmp_path, monkeypatch):
         "doc_id long, text string, url string",
     )
     corpus = B.prepare_corpus(pdf, doc_id_col="doc_id")
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)  # Spark route
 
     ix_a = str(tmp_path / "ix_default")
     B.build_index(spark, corpus, ix_a, n_buckets=4, n_shards=2,

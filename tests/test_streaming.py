@@ -89,10 +89,18 @@ def test_streaming_matches_batch(spark, tmp_path):
     assert ts_s == ts_b
 
 
-def test_batch_append_idempotent_under_retry(spark, tmp_path):
+def test_batch_append_idempotent_under_retry(spark, tmp_path, monkeypatch):
     """foreachBatch is at-least-once: re-running a batch (a) after the
     manifest commit is a no-op, (b) after a torn append REPLACES that
-    batch's files rather than double-counting (ADVICE r01)."""
+    batch's files rather than double-counting (ADVICE r01). Pinned to
+    the Spark route; test_driver_build.py runs it on the driver route."""
+    import text_search_spark.index.build as B
+
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)
+    check_batch_append_idempotent_under_retry(spark, tmp_path)
+
+
+def check_batch_append_idempotent_under_retry(spark, tmp_path):
     from text_search_spark.streaming.incremental import _append_batch
 
     pages = generate_pages(60)

@@ -748,16 +748,71 @@ def land(write: Callable[[str], None], root: str, prefix: str) -> List[str]:
     return sorted(out)
 
 
-def put_table(d: str, name: str, table) -> None:
+def put_table(
+    d: str, name: str, table, row_group_bytes: Optional[int] = None
+) -> None:
     """Write one driver-side pyarrow table as d/name: a hidden tmp file,
     then os.replace, so a reader never sees a partial file and a rewrite
-    of the same name replaces it."""
+    of the same name replaces it. row_group_bytes bounds each row group's
+    uncompressed bytes (a row larger than the bound gets a group of its
+    own), as parquet.block.size does for a Spark write."""
     import pyarrow.parquet as pq
 
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
-    pq.write_table(table, tmp)
+    if row_group_bytes is None:
+        pq.write_table(table, tmp)
+    else:
+        with pq.ParquetWriter(tmp, table.schema) as w:
+            for s, e in _row_group_bounds(table, row_group_bytes):
+                w.write_table(table.slice(s, e - s), row_group_size=e - s)
     os.replace(tmp, os.path.join(d, name))
+
+
+def _row_group_bounds(table, max_bytes: int):
+    """(start, end) row ranges of consecutive rows whose uncompressed
+    bytes (variable-width values plus fixed widths) stay <= max_bytes."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    size = np.zeros(table.num_rows, np.int64)
+    for col in table.columns:
+        if pa.types.is_binary(col.type) or pa.types.is_string(col.type):
+            size += pc.binary_length(col).fill_null(0).to_numpy()
+        else:
+            size += col.type.bit_width // 8
+    cum = np.cumsum(size)
+    s = 0
+    while s < table.num_rows:
+        base = cum[s - 1] if s else 0
+        e = max(s + 1, int(np.searchsorted(cum, base + max_bytes, "right")))
+        yield s, e
+        s = e
+
+
+def put_partitioned(
+    root: str, name: str, table, row_group_bytes: Optional[int] = None
+) -> None:
+    """put_table one file root/term_bucket=N/name per term_bucket value
+    of table, holding that bucket's rows in table order without the
+    term_bucket column (the directory carries it, as in a Spark
+    partitionBy write). root exists afterwards even for an empty table."""
+    import numpy as np
+
+    os.makedirs(root, exist_ok=True)
+    bucket = table.column("term_bucket").to_numpy()
+    order = np.argsort(bucket, kind="stable")
+    data = table.drop_columns(["term_bucket"]).take(order)
+    bucket = bucket[order]
+    starts = np.flatnonzero(np.diff(bucket, prepend=-1))
+    for s, e in zip(starts, np.append(starts[1:], bucket.size)):
+        put_table(
+            os.path.join(root, f"term_bucket={bucket[s]}"),
+            name,
+            data.slice(s, e - s),
+            row_group_bytes,
+        )
 
 
 def sweep(

@@ -721,20 +721,29 @@ class _TermPostings:
         return self._pos
 
 
+# candidate count up to which _topk_tiebreak runs the full lexsort. NumPy
+# micro-timing on a 4-core VM, k=10, one thread, lexsort vs argpartition
+# + boundary sort: 20 docs 2.9 vs 12.5 us, 200 docs 7.0 vs 13.2 us,
+# 400 docs 11.5 vs 14.5 us, 500 docs 15.6 vs 14.5 us, 1,000 docs 43.9
+# vs 17.3 us.
+_TIEBREAK_LEXSORT_MAX = 450
+
+
 def _topk_tiebreak(p: np.ndarray, docs: np.ndarray, k: int) -> np.ndarray:
     """Indices of the k best scores with ties broken by doc_id asc (docs
     distinct) — the same set as np.lexsort((docs, -p))[:k], the total
-    order of the global merge, without sorting all of p: argpartition
-    finds the kth score and only the docs at or above it are sorted
-    (faster than the full lexsort from ~1,000 docs on, slower below a
-    few hundred, so _score_terms uses it for one-term queries, whose
-    candidates are a whole posting list). A
-    bare np.argpartition keeps an ARBITRARY subset of boundary ties
-    (e.g. duplicated pages with identical tf/dl), which can drop the doc
-    the global merge's tie-break would keep. Unordered when p.size <= k
+    order of the global merge. Up to _TIEBREAK_LEXSORT_MAX candidates it
+    is that lexsort; above, argpartition finds the kth score and only the
+    docs at or above it are sorted (_score_terms uses it for one-term
+    queries, whose candidates are a whole posting list). A bare
+    np.argpartition keeps an ARBITRARY subset of boundary ties (e.g.
+    duplicated pages with identical tf/dl), which can drop the doc the
+    global merge's tie-break would keep. Unordered when p.size <= k
     (every index is kept; the merge orders them)."""
     if p.size <= k:
         return np.arange(p.size)
+    if p.size <= _TIEBREAK_LEXSORT_MAX:
+        return np.lexsort((docs, -p))[:k]
     part = np.argpartition(-p, k - 1)
     kth = p[part[k - 1]]
     cand = np.flatnonzero(p >= kth)

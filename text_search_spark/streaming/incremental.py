@@ -40,7 +40,7 @@ or after a purge shifted df/cf) and folds consumed deltas into it.
 from __future__ import annotations
 
 import os
-from typing import Optional
+from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,8 +52,12 @@ from ..index.build import (
     _auto_size,
     _segment_builder,
     bucket_expr,
-    shard_expr,
+    collect_if_small,
+    doc_tokens,
     grouped_postings,
+    land_on_driver,
+    n_tokens,
+    shard_expr,
 )
 
 
@@ -63,6 +67,13 @@ def _append_batch(
     index_dir: str,
     batch_id: int,
 ) -> None:
+    """Append one micro-batch of (doc_id, url, text) rows to the index:
+    land its doc_stats, vocab, segment and term_stats-delta files under
+    the batch tag, then commit them in one manifest CAS. A batch holding
+    at most build.DRIVER_BUILD_MAX_TOKENS tokens lands on the driver
+    (build.collect_if_small, build.land_on_driver): one Spark job, the
+    collect, or two when the batch's size has to be measured by
+    materializing its cache first. A larger batch runs the Spark route."""
     man = fmt.load_manifest(index_dir)
     if man is not None and man.stages.get(f"stream:{batch_id}"):
         # this batch already committed (manifest flip is the commit
@@ -87,14 +98,14 @@ def _append_batch(
             format_version=fmt.FORMAT_VERSION,
             run_id=f"stream:{batch_id}",
         )
-    # one materialization feeds every job below that reads the batch
-    # (doc_stats write, stats count, vocab write, posting shuffle) —
-    # without it each job re-reads the micro-batch source. The metrics
-    # row is written on the driver from the stats count. The three
-    # tokenize passes themselves could further fuse via the batch
-    # builder's persisted grouped_terms (build.py fused path) — seam
-    # noted, not done: at micro-batch sizes the source re-read
-    # dominated, not the tokenize.
+    # one materialization feeds every job that reads the batch: the
+    # size-gated collect and, on the Spark route, the doc_stats write,
+    # stats count, vocab write and posting shuffle — without it each of
+    # those jobs re-reads the micro-batch source. A batch under
+    # build.DRIVER_BUILD_MAX_TOKENS is tokenized once, by the collect,
+    # and grouped, encoded and landed on the driver
+    # (build.land_on_driver); above the gate each of the Spark route's
+    # three scans (doc_stats, vocab, postings) tokenizes again.
     batch = batch.select("doc_id", "url", "text").persist()
     try:
         _append_batch_inner(spark, batch, index_dir, batch_id, man)
@@ -109,25 +120,17 @@ def _append_batch_inner(
     batch_id: int,
     man,
 ) -> None:
-
-    # per-batch doc stats (batch-scoped files: retry-safe); same
-    # null-coalesce as the batch builder — text=NULL counts 0, not
-    # NULL (ANSI) / -1 (ansi=false)
-    ds = batch.select(
-        "doc_id",
-        "url",
-        F.size(
-            F.coalesce(
-                spark_tokens(F.col("text")), F.array().cast("array<string>")
-            )
-        ).alias("doc_len"),
-    )
     tag = f"batch{batch_id}-"
-    new_ds_files = fmt.land(
-        lambda p: ds.write.mode("overwrite").parquet(p),
-        fmt.doc_stats_dir(index_dir),
-        tag,
-    )
+    rows = collect_if_small(batch)
+    if rows is not None:
+        b_docs, b_tokens = rows.num_rows, n_tokens(rows)
+    else:
+        # same null-coalesce as the batch builder (build.doc_tokens)
+        ds = batch.select("doc_id", "url", F.size(doc_tokens()).alias("doc_len"))
+        bstats = ds.select(
+            F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0))
+        ).first()
+        b_docs, b_tokens = int(bstats[0]), int(bstats[1])
     # BATCH-ONLY stats (round-6b, review finding): the commit applies
     # them as DELTAS (m2.n_docs += ...), never as absolute values read
     # from the doc_stats directory — an absolute dir read races a
@@ -135,13 +138,9 @@ def _append_batch_inner(
     # re-inflates the stats by the purged docs; the mirror interleaving
     # double-subtracts). Deltas compose under CAS rebase in ANY
     # interleaving: the mutate re-runs against the then-latest
-    # committed totals. Retry-stable too — fmt.land REPLACED any prior
+    # committed totals. Retry-stable too — fmt.land REPLACES any prior
     # attempt's files, and these numbers come from the batch data, not
     # the directory.
-    bstats = ds.select(
-        F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0))
-    ).first()
-    b_docs, b_tokens = int(bstats[0]), int(bstats[1])
     est_total = man.total_tokens + b_tokens
     est_docs = man.n_docs + b_docs
 
@@ -171,72 +170,19 @@ def _append_batch_inner(
     # absorbs by design (query._TermPostings.max_sat).
     batch_avgdl = est_total / est_docs if est_docs else 0.0
 
-    # one row per (doc, term), positions pre-encoded map-side — the same
-    # posting relation the batch builder shuffles (build.grouped_postings)
-    tokens = grouped_postings(batch)
-    # vocab append: this batch's distinct terms (dedup on read)
-    vocab = (
-        batch.select(F.explode(spark_tokens(F.col("text"))).alias("term"))
-        .distinct()
-        .select(
-            "term",
-            F.xxhash64("term").alias("term_id"),
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-            .cast("int")
-            .alias("term_bucket"),
+    if rows is not None:
+        landed = land_on_driver(
+            rows, index_dir, n_buckets, n_shards, batch_avgdl, tag=tag
         )
-    )
-    fmt.land(
-        lambda p: vocab.write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(p),
-        fmt.vocab_dir(index_dir),
-        tag,
-    )
-    seg_schema = "term_bucket int, " + fmt.SEGMENT_SCHEMA
-    seg = (
-        tokens.repartition(
-            max(n_buckets, spark.sparkContext.defaultParallelism),
-            bucket_expr(n_buckets),
-            shard_expr(n_shards),
+    else:
+        landed = _land_batch_on_spark(
+            spark, batch, ds, index_dir, tag, n_buckets, n_shards,
+            batch_avgdl,
         )
-        .sortWithinPartitions("term_id", shard_expr(n_shards), "doc_id")
-        .mapInArrow(
-            _segment_builder(batch_avgdl, n_buckets, n_shards),
-            schema=seg_schema,
-        )
-    )
-    # this batch's landed segment files (batch-tagged; fmt.land
-    # replaced any partial same-batch attempt)
-    new_files = fmt.land(
-        lambda p: seg.write.mode("overwrite")
-        .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
-        .partitionBy("term_bucket")
-        .parquet(p),
-        fmt.segments_dir(index_dir),
-        tag,
-    )
+    new_ds_files = landed["doc_stats"]
+    new_files = landed["segments"]
+    ts_delta_rels = landed["term_stats"]
 
-    # term_stats DELTA (round-7, VERDICT item 7): aggregate df/cf over
-    # JUST this batch's landed segment rows (already partially summed
-    # per shard by the encoder — this job reads batch-sized data, never
-    # the index) and land it batch-tagged under term_stats_deltas/. The
-    # committed view is base (+) deltas (IndexReader.term_stats), so an
-    # append no longer invalidates term_stats; rebuild_term_stats folds
-    # consumed deltas into a fresh base. Same doc_stats-delta discipline
-    # as round-6: the commit records the delta FILES, never absolute
-    # stats, so append-vs-purge races rebase correctly.
-    ts_delta_rels: list = []
-    if new_files:
-        batch_seg = fmt.read_committed(
-            spark, fmt.segments_dir(index_dir), new_files, fmt.SEG_READ_SCHEMA
-        )
-        ts_delta = fmt.term_stats_of(batch_seg, vocab)
-        ts_delta_rels = fmt.land(
-            lambda p: ts_delta.coalesce(1).write.mode("overwrite").parquet(p),
-            fmt.term_stats_deltas_dir(index_dir),
-            tag,
-        )
     # metrics row, batch-named like the data files: a retry replaces it
     _append_metrics(
         index_dir, f"stream:{batch_id}", f"stream_batch:{batch_id}",
@@ -292,6 +238,98 @@ def _append_batch_inner(
         return True
 
     fmt.commit_manifest(index_dir, _commit)
+
+
+def _land_batch_on_spark(
+    spark: SparkSession,
+    batch: DataFrame,
+    ds: DataFrame,
+    index_dir: str,
+    tag: str,
+    n_buckets: int,
+    n_shards: int,
+    batch_avgdl: float,
+) -> Dict[str, List[str]]:
+    """The Spark route of one stream batch: land its doc_stats rows ds,
+    vocab, segments and term_stats delta under tag (fmt.land: a retry
+    replaces the tag's files). Returns the landed files per table, as
+    build.land_on_driver does."""
+    new_ds_files = fmt.land(
+        lambda p: ds.write.mode("overwrite").parquet(p),
+        fmt.doc_stats_dir(index_dir),
+        tag,
+    )
+    # one row per (doc, term), positions pre-encoded map-side — the same
+    # posting relation the batch builder shuffles (build.grouped_postings)
+    tokens = grouped_postings(batch)
+    # vocab append: this batch's distinct terms (dedup on read)
+    vocab = (
+        batch.select(F.explode(spark_tokens(F.col("text"))).alias("term"))
+        .distinct()
+        .select(
+            "term",
+            F.xxhash64("term").alias("term_id"),
+            F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+            .cast("int")
+            .alias("term_bucket"),
+        )
+    )
+    fmt.land(
+        lambda p: vocab.write.mode("overwrite")
+        .partitionBy("term_bucket")
+        .parquet(p),
+        fmt.vocab_dir(index_dir),
+        tag,
+    )
+    seg_schema = "term_bucket int, " + fmt.SEGMENT_SCHEMA
+    seg = (
+        tokens.repartition(
+            max(n_buckets, spark.sparkContext.defaultParallelism),
+            bucket_expr(n_buckets),
+            shard_expr(n_shards),
+        )
+        .sortWithinPartitions("term_id", shard_expr(n_shards), "doc_id")
+        .mapInArrow(
+            _segment_builder(batch_avgdl, n_buckets, n_shards),
+            schema=seg_schema,
+        )
+    )
+    # this batch's landed segment files (batch-tagged; fmt.land
+    # replaced any partial same-batch attempt)
+    new_files = fmt.land(
+        lambda p: seg.write.mode("overwrite")
+        .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
+        .partitionBy("term_bucket")
+        .parquet(p),
+        fmt.segments_dir(index_dir),
+        tag,
+    )
+
+    # term_stats DELTA (round-7, VERDICT item 7): aggregate df/cf over
+    # JUST this batch's landed segment rows (already partially summed
+    # per shard by the encoder — this job reads batch-sized data, never
+    # the index) and land it batch-tagged under term_stats_deltas/. The
+    # committed view is base (+) deltas (IndexReader.term_stats), so an
+    # append no longer invalidates term_stats; rebuild_term_stats folds
+    # consumed deltas into a fresh base. Same doc_stats-delta discipline
+    # as round-6: the commit records the delta FILES, never absolute
+    # stats, so append-vs-purge races rebase correctly.
+    ts_delta_rels: List[str] = []
+    if new_files:
+        batch_seg = fmt.read_committed(
+            spark, fmt.segments_dir(index_dir), new_files, fmt.SEG_READ_SCHEMA
+        )
+        ts_delta = fmt.term_stats_of(batch_seg, vocab)
+        ts_delta_rels = fmt.land(
+            lambda p: ts_delta.coalesce(1).write.mode("overwrite").parquet(p),
+            fmt.term_stats_deltas_dir(index_dir),
+            tag,
+        )
+    return {
+        "doc_stats": new_ds_files,
+        "segments": new_files,
+        "term_stats": ts_delta_rels,
+    }
 
 
 def incremental_index(
