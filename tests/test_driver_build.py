@@ -138,10 +138,39 @@ def test_driver_segment_row_groups_bounded(
 def test_duplicate_urls_raise_doc_id_collision(
     spark, tmp_path, monkeypatch, route
 ):
+    """A repeated url is a repeated doc_id: a build and a stream batch
+    raise on both routes. The batch commits nothing, and the corrected
+    batch then lands under the same batch id."""
     _force(monkeypatch, route)
     dup = [("https://example.com/dup", "alpha beta")] * 2
     with pytest.raises(ValueError, match="doc_id collision"):
         _build(spark, _corpus(spark, 20, dup), str(tmp_path / "ix"))
+
+    ix = str(tmp_path / "stream")
+    _append_batch(spark, _corpus(spark, 20), ix, 0)
+    before = fmt.load_manifest(ix)
+    batch = lambda rows: B.prepare_corpus(
+        spark.createDataFrame(rows, "url string, text string"),
+        url_col="url",
+    )
+    other = ("https://example.com/other", "gamma delta")
+    with pytest.raises(ValueError, match="doc_id collision"):
+        _append_batch(spark, batch(dup + [other]), ix, 1)
+    after = fmt.load_manifest(ix)
+    assert "stream:1" not in after.stages
+    assert (after.n_docs, after.total_tokens) == (
+        before.n_docs, before.total_tokens
+    )
+    assert after.doc_stats_files == before.doc_stats_files
+    assert after.segment_files == before.segment_files
+
+    _append_batch(spark, batch(dup[:1] + [other]), ix, 1)
+    man = fmt.load_manifest(ix)
+    assert man.stages.get("stream:1")
+    assert man.n_docs == before.n_docs + 2
+    assert man.total_tokens == before.total_tokens + 4
+    doc_ids = [r[0] for r in _stream_rows(spark, ix)["doc_stats"]]
+    assert len(doc_ids) == len(set(doc_ids)) == man.n_docs
 
 
 @pytest.mark.parametrize(

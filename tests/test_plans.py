@@ -281,7 +281,8 @@ def test_build_segment_plan_shape(spark):
     from text_search_spark.index.build import (
         _segment_builder,
         bucket_expr,
-        grouped_postings,
+        drop_terms,
+        grouped_terms,
         shard_expr,
     )
 
@@ -296,7 +297,7 @@ def test_build_segment_plan_shape(spark):
         "blockmax binary, bm_avgdl double"
     )
     seg = (
-        grouped_postings(corpus)
+        drop_terms(grouped_terms(corpus))
         .repartition(4, bucket_expr(4), shard_expr(2))
         .sortWithinPartitions("term_id", shard_expr(2), "doc_id")
         .mapInArrow(_segment_builder(3.0, 4, 2), schema=seg_schema)
@@ -410,6 +411,76 @@ def test_fused_build_gate_falls_back(spark, tmp_path, monkeypatch):
 
     got = seg_rows(ix)
     assert got and got == seg_rows(fused_ix)
+
+
+def test_spark_stream_batch_single_grouper_scan(spark, tmp_path, monkeypatch):
+    """A stream batch on the Spark route lands with the build's stages:
+    ONE grouper scan feeds vocab and segments (no separate explode scan
+    for the vocab). Above the fused gate it materializes a tag-scoped
+    tokens_tmp, lands the same rows, and removes the tmp dir."""
+    import os
+
+    import text_search_spark.index.build as B
+    from text_search_spark.streaming.incremental import _append_batch
+
+    monkeypatch.setattr(B, "DRIVER_BUILD_MAX_TOKENS", -1)  # Spark route
+    pdf = spark.createDataFrame(
+        [(i, f"alpha beta w{i} gamma alpha", str(i)) for i in range(12)],
+        "doc_id long, text string, url string",
+    )
+    batch = prepare_corpus(pdf, doc_id_col="doc_id")
+    calls = {"grouped_terms": 0, "explode": 0}
+    orig_gt, orig_explode = B.grouped_terms, F.explode
+
+    def spy_gt(corpus):
+        calls["grouped_terms"] += 1
+        return orig_gt(corpus)
+
+    def spy_explode(col):
+        calls["explode"] += 1
+        return orig_explode(col)
+
+    monkeypatch.setattr(B, "grouped_terms", spy_gt)
+    monkeypatch.setattr(F, "explode", spy_explode)
+
+    def land(ix):
+        calls.update(grouped_terms=0, explode=0)
+        _append_batch(spark, batch, ix, 0)
+        assert calls == {"grouped_terms": 1, "explode": 0}
+        man = ixfmt.load_manifest(ix)
+        assert man.complete and man.stages.get("stream:0")
+        assert not [f for f in os.listdir(ix) if B.TOKENS_TMP in f]
+        read = lambda root, files, schema: sorted(
+            tuple(r)
+            for r in ixfmt.read_committed(spark, root, files, schema).collect()
+        )
+        return {
+            "doc_stats": read(
+                ixfmt.doc_stats_dir(ix), man.doc_stats_files,
+                ixfmt.DOC_STATS_READ_SCHEMA,
+            ),
+            "segments": read(
+                ixfmt.segments_dir(ix), man.segment_files,
+                ixfmt.SEG_READ_SCHEMA,
+            ),
+            "term_stats": read(
+                ixfmt.term_stats_deltas_dir(ix), man.term_stats_delta_files,
+                ixfmt.TERM_STATS_READ_SCHEMA,
+            ),
+            "vocab": sorted(
+                tuple(r)
+                for r in spark.read.schema(ixfmt.VOCAB_READ_SCHEMA)
+                .parquet(ixfmt.vocab_dir(ix))
+                .collect()
+            ),
+            "stats": (man.n_docs, man.total_tokens, man.n_buckets,
+                      man.n_shards),
+        }
+
+    fused = land(str(tmp_path / "fused_ix"))
+    assert fused["segments"] and fused["stats"][:2] == (12, 60)
+    monkeypatch.setattr(B, "_FUSED_PERSIST_MAX_BYTES", 0)
+    assert land(str(tmp_path / "gated_ix")) == fused
 
 
 def test_shingle_minhash_tokenizer_evaluated_once(spark):

@@ -20,7 +20,9 @@ per-job scheduling, not indexing work, is the Spark route's cost: 16
 jobs for a 250-page build, 26 for a 2-page upsert; the driver route runs
 the collect, plus one cache materialization for a stream batch whose
 size the optimizer cannot estimate. Both routes land equal rows
-(tests/test_driver_build.py).
+(tests/test_driver_build.py). Each route is one function, land_on_spark
+or land_on_driver, called alike by build_index and by the stream batch
+append (streaming/incremental.py).
 
 Scale design:
   * `shard = pmod(xxhash64(doc_id), n_shards)` bounds head-term (Zipf) skew:
@@ -55,6 +57,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import shutil
+from functools import partial
 from typing import Callable, Dict, Iterator, List, Optional
 
 import numpy as np
@@ -471,12 +474,6 @@ def drop_terms(rows: DataFrame) -> DataFrame:
         "blob",
         F.xxhash64("term").alias("term_id"),
     )
-
-
-def grouped_postings(corpus: DataFrame) -> DataFrame:
-    """The pre-shuffle posting relation: one row per (doc, term), int64
-    term_id, no strings (grouped_terms -> drop_terms)."""
-    return drop_terms(grouped_terms(corpus))
 
 
 def bucket_expr(n_buckets: int):
@@ -1031,12 +1028,24 @@ def collect_if_small(corpus: DataFrame):
     return rows if n_tokens(rows) <= DRIVER_BUILD_MAX_TOKENS else None
 
 
+def _put(
+    landed: Dict[str, List[str]], tag: Optional[str], table: str, root: str,
+    write: Callable[[str], None],
+) -> None:
+    """Land one table's write for land_on_driver / land_on_spark: tag
+    None writes straight into root (the build's manifest commit
+    publishes it); a tag lands it through fmt.land (a retry replaces the
+    tag's files) and records the landed files in landed[table]."""
+    if tag is None:
+        write(root)
+    else:
+        landed[table] = fmt.land(write, root, tag)
+
+
 def land_on_driver(
     rows,
     index_dir: str,
-    n_buckets: int,
-    n_shards: int,
-    avgdl: float,
+    layout: Callable[[int, int], tuple],
     on_stage: Callable[..., None] = lambda stage, **counts: None,
     tag: Optional[str] = None,
     bucket_groups: int = 1,
@@ -1047,12 +1056,14 @@ def land_on_driver(
     doc_id) in place of the shuffle and sortWithinPartitions, then
     _segment_builder. Each partitioned table gets one file per
     term_bucket=N directory, term-sorted; segment row groups are bounded
-    by fmt.SEGMENT_ROW_GROUP_BYTES. Rows equal the Spark route's
+    by fmt.SEGMENT_ROW_GROUP_BYTES. Rows equal land_on_spark's
     (tests/test_driver_build.py).
 
-    Raises the Spark route's doc_id / term_id collision ValueErrors
-    before writing. on_stage(stage, postings=, nbytes=) runs after each
-    stage's files are in place: doc_stats, vocab, segments:0 ..
+    Raises land_on_spark's doc_id / term_id collision ValueErrors before
+    writing. layout(n_docs, n_tokens) -> (n_buckets, n_shards, avgdl) is
+    the caller's sizing, called once with the rows' counts.
+    on_stage(stage, postings=, nbytes=) runs after each stage's files
+    are in place: doc_stats, vocab, segments:0 ..
     segments:{bucket_groups-1} (each with its bucket group's postings and
     postings bytes), term_stats.
 
@@ -1069,14 +1080,9 @@ def land_on_driver(
 
     name = "part-00000.parquet"
     landed: Dict[str, List[str]] = {
-        "doc_stats": [], "segments": [], "term_stats": []
+        "doc_stats": [], "vocab": [], "segments": [], "term_stats": []
     }
-
-    def put(table: str, root: str, write) -> None:
-        if tag is None:
-            write(root)
-        else:
-            landed[table] = fmt.land(write, root, tag)
+    put = partial(_put, landed, tag)
 
     n_docs = rows.num_rows
     n_ids = pc.count_distinct(rows.column("doc_id")).as_py()
@@ -1085,6 +1091,7 @@ def land_on_driver(
             f"doc_id collision detected: {n_docs} docs, "
             f"{n_ids} distinct doc_ids"
         )
+    n_buckets, n_shards, avgdl = layout(n_docs, n_tokens(rows))
     grouped = list(
         _doc_grouper(rows.select(["doc_id", "tokens"]).to_batches())
     )
@@ -1200,6 +1207,283 @@ def land_on_driver(
     return landed
 
 
+def land_on_spark(
+    corpus: DataFrame,
+    index_dir: str,
+    layout: Callable[[int, int], tuple],
+    on_stage: Callable[..., None] = lambda stage, **counts: None,
+    tag: Optional[str] = None,
+    bucket_groups: int = 1,
+    done: Optional[Dict[str, bool]] = None,
+    cleanup_tmp: bool = True,
+) -> Dict[str, List[str]]:
+    """Land a (doc_id, url, text) corpus as the doc_stats, vocab, segment
+    and term_stats tables with the Spark stages: the Spark twin of
+    land_on_driver, with its layout / on_stage / tag contract.
+
+    The doc_stats stage writes (doc_id, url, doc_len) and counts what it
+    landed; a doc_id collision raises before any other table is written,
+    and layout(n_docs, n_tokens) -> (n_buckets, n_shards, avgdl) then
+    sizes the posting stages. The vocab stage raises on a term_id
+    collision. on_stage runs after each stage: doc_stats, tokens (the
+    materialized path only), vocab, segments:0 ..
+    segments:{bucket_groups-1} (postings=, nbytes= of the group, observed
+    on the write job), term_stats.
+
+    tag None: a build; files go straight into the table dirs and stages
+    that `done` (the build manifest's stages) marks complete are skipped
+    (a resume recounts the landed doc_stats, with no tokenize, to size
+    the stages left). tag
+    "batch{N}-": a stream batch (bucket_groups 1); each table lands
+    through fmt.land under the tag, term_stats is one delta file under
+    term_stats_deltas/, and the landed files are returned per table. The
+    materialized path's tokens_tmp dir is tag-scoped and, with
+    cleanup_tmp, removed once the corpus has landed."""
+    spark = corpus.sparkSession
+    done = done or {}
+    landed: Dict[str, List[str]] = {
+        "doc_stats": [], "vocab": [], "segments": [], "term_stats": []
+    }
+    put = partial(_put, landed, tag)
+
+    def read(table: str, root: str, schema: str) -> DataFrame:
+        # what this landing wrote: a build's whole table dir, a batch's
+        # tagged files only
+        if tag is None:
+            return spark.read.schema(schema).parquet(root)
+        return fmt.read_committed(spark, root, landed[table], schema)
+
+    tokens_path = os.path.join(index_dir, (tag or "") + TOKENS_TMP)
+
+    # Unsplittable input guard: a corpus arriving in fewer partitions than
+    # cores (e.g. one single-row-group parquet file) would serialize the
+    # tokenize stages. One narrow-ish shuffle here keeps every downstream
+    # scan parallel; at real scale (many input files) the branch is skipped.
+    par = spark.sparkContext.defaultParallelism
+    if corpus.rdd.getNumPartitions() < max(2, par // 2):
+        corpus = corpus.repartition(par)
+
+    # ---- stage: doc_stats (scan 1: tokenize-count only, no explode) ----
+    if not done.get("doc_stats"):
+        ds = corpus.select(
+            "doc_id", "url", F.size(doc_tokens()).alias("doc_len")
+        )
+        put(
+            "doc_stats",
+            fmt.doc_stats_dir(index_dir),
+            lambda d: ds.write.mode("overwrite").parquet(d),
+        )
+    n_docs, total_tokens, n_ids = (
+        read("doc_stats", fmt.doc_stats_dir(index_dir),
+             fmt.DOC_STATS_READ_SCHEMA)
+        .select(
+            F.count("*"),
+            F.coalesce(F.sum("doc_len"), F.lit(0)),
+            F.countDistinct("doc_id"),
+        )
+        .first()
+    )
+    if n_docs != n_ids:
+        # a silent collision would merge two documents' postings
+        # (60-bit hashed ids: birthday bound ~2^30 docs) — fail the
+        # landing instead; callers can re-id or widen the id
+        raise ValueError(
+            f"doc_id collision detected: {n_docs} docs, "
+            f"{n_ids} distinct doc_ids"
+        )
+    total_tokens = int(total_tokens)
+    n_buckets, n_shards, avgdl = layout(int(n_docs), total_tokens)
+    if not done.get("doc_stats"):
+        on_stage("doc_stats")
+
+    # ---- segment input: two shapes. The posting shuffle carries ONE
+    # ROW PER (doc, term) from the map-side grouper (grouped_terms ->
+    # drop_terms: int64 term_id, never strings; doc_len computed
+    # in-batch, no doc_stats join — see
+    # tests/test_plans.py::test_no_tokenizer_above_generate).
+    #   * fused (one resumable unit, posting relation under the size
+    #     gate): the grouper output is persisted (serialized,
+    #     disk-backed) for the landing's duration and feeds both the
+    #     vocab and segment stages — one corpus tokenize scan, no
+    #     write+read of the posting relation. The gate bounds it by
+    #     ~24 B x total_tokens (8B doc_id + 8B term-string avg + blob +
+    #     overhead).
+    #   * materialized (several units, or above the gate): the grouper
+    #     output is written once to tokens_tmp, partitioned by
+    #     term_bucket; vocab and every bucket-group unit read it back,
+    #     so a resume never re-tokenizes the corpus. The tmp keeps the
+    #     term STRING (same bytes as the id it would replace) so the
+    #     vocab stage derives the dictionary from it. ----
+    fused = bucket_groups == 1 and total_tokens * 24 <= _FUSED_PERSIST_MAX_BYTES
+    fused_rows = None
+    if fused:
+        from pyspark import StorageLevel
+
+        fused_rows = grouped_terms(corpus).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+    elif not done.get("tokens"):
+        (
+            grouped_terms(corpus)
+            .withColumn(
+                "term_bucket",
+                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
+            )
+            .repartition(
+                max(n_buckets, par), "term_bucket", shard_expr(n_shards)
+            )
+            .write.mode("overwrite")
+            .partitionBy("term_bucket")
+            .parquet(tokens_path)
+        )
+        on_stage("tokens")
+
+    def tokens_tmp() -> DataFrame:
+        return spark.read.schema(TOKENS_TMP_SCHEMA).parquet(tokens_path)
+
+    _POM_KEY = "spark.sql.sources.partitionOverwriteMode"
+    _prev_pom = spark.conf.get(_POM_KEY, None)
+    try:
+        # ---- stage: vocab (the term dictionary; distinct terms only, so the
+        # map-side-combined shuffle is tiny next to the posting shuffle;
+        # sourced from the already-tokenized doc-term rows) ----
+        if not done.get("vocab"):
+            terms_src = fused_rows if fused else tokens_tmp()
+            vocab = terms_src.select("term").distinct().select(
+                "term",
+                F.xxhash64("term").alias("term_id"),
+                F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+                .cast("int")
+                .alias("term_bucket"),
+            )
+            put(
+                "vocab",
+                fmt.vocab_dir(index_dir),
+                lambda d: vocab.write.mode("overwrite")
+                .partitionBy("term_bucket")
+                .parquet(d),
+            )
+            n_terms, n_term_ids = (
+                read("vocab", fmt.vocab_dir(index_dir),
+                     fmt.VOCAB_READ_SCHEMA)
+                .select(F.count("*"), F.countDistinct("term_id"))
+                .first()
+            )
+            if n_terms != n_term_ids:
+                raise ValueError(
+                    f"term_id collision: {n_terms} terms, {n_term_ids} ids — "
+                    "switch to a 128-bit id"
+                )
+            on_stage("vocab")
+
+        # ---- stage: segments, in resumable bucket-group units ----
+        from pyspark.sql import Observation
+
+        seg_schema = "term_bucket int, " + fmt.SEGMENT_SCHEMA
+        # dynamic mode scopes each group's overwrite to the partitions it
+        # writes; saved before the try and restored in its finally so the
+        # session-wide overwrite semantics of the CALLER's later
+        # partitioned writes are not silently changed
+        spark.conf.set(_POM_KEY, "dynamic")
+        for gi in range(bucket_groups):
+            stage_name = f"segments:{gi}"
+            if done.get(stage_name):
+                continue
+            buckets = list(range(gi, n_buckets, bucket_groups))
+            if fused:
+                toks = drop_terms(fused_rows)  # cached: no re-tokenize
+            else:
+                toks = drop_terms(
+                    tokens_tmp().where(
+                        F.col("term_bucket").isin(buckets)  # partition-pruned
+                    )
+                )
+            obs = Observation(f"seg_metrics_{gi}")
+            seg = (
+                toks.repartition(
+                    _partition_count(
+                        total_tokens, par, len(buckets) * n_shards,
+                        bucket_groups,
+                    ),
+                    bucket_expr(n_buckets),
+                    shard_expr(n_shards),
+                )
+                .sortWithinPartitions("term_id", shard_expr(n_shards), "doc_id")
+                .mapInArrow(
+                    _segment_builder(avgdl, n_buckets, n_shards),
+                    schema=seg_schema,
+                )
+                # metrics ride the write job itself — re-reading the
+                # segments just written would be a second full scan of
+                # the new index data per bucket-group
+                .observe(
+                    obs,
+                    # postings emitted = one per (term, doc) = sum of the
+                    # per-segment-row df partials; docs-tokenized belongs
+                    # to the doc_stats stage row, not a bucket group
+                    F.coalesce(F.sum("df_part"), F.lit(0)).alias(
+                        "postings"
+                    ),
+                    F.coalesce(F.sum(F.length("postings")), F.lit(0)).alias(
+                        "nbytes"
+                    ),
+                )
+            )
+            put(
+                "segments",
+                fmt.segments_dir(index_dir),
+                # bounded row groups keep the sidecar point read's
+                # term_id pruning effective whatever the partition
+                # size (fmt.SEGMENT_ROW_GROUP_BYTES rationale)
+                lambda d: seg.write.mode("overwrite")
+                .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
+                .partitionBy("term_bucket")
+                .parquet(d),
+            )
+            got = obs.get
+            on_stage(stage_name, postings=got["postings"], nbytes=got["nbytes"])
+
+    finally:
+        if _prev_pom is None:
+            spark.conf.unset(_POM_KEY)
+        else:
+            spark.conf.set(_POM_KEY, _prev_pom)
+        # unpersist even on an injected/real failure — a leaked
+        # cached posting relation would shadow the next attempt's
+        # block-manager budget for the session's lifetime
+        if fused_rows is not None:
+            fused_rows.unpersist()
+
+    # ---- stage: term_stats (small agg over segment rows ⋈ vocab) ----
+    if not done.get("term_stats"):
+        if tag is None:
+            os.makedirs(fmt.segments_dir(index_dir), exist_ok=True)
+        ts = fmt.term_stats_of(
+            read("segments", fmt.segments_dir(index_dir),
+                 fmt.SEG_READ_SCHEMA),
+            read("vocab", fmt.vocab_dir(index_dir), fmt.VOCAB_READ_SCHEMA),
+        )
+        if tag is None:
+            put(
+                "term_stats",
+                fmt.term_stats_dir(index_dir),
+                lambda d: ts.write.mode("overwrite")
+                .partitionBy("term_bucket")
+                .parquet(d),
+            )
+        elif landed["segments"]:
+            put(
+                "term_stats",
+                fmt.term_stats_deltas_dir(index_dir),
+                lambda d: ts.coalesce(1).write.mode("overwrite").parquet(d),
+            )
+        on_stage("term_stats")
+
+    if cleanup_tmp and os.path.isdir(tokens_path):
+        shutil.rmtree(tokens_path)
+    return landed
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -1218,14 +1502,18 @@ def build_index(
     A fresh build whose corpus holds at most DRIVER_BUILD_MAX_TOKENS
     tokens (collect_if_small) lands on the driver (land_on_driver): one
     Spark job, the corpus collect. Every other build, and every resume of
-    a partial one, runs the Spark stages.
+    a partial one, lands with the Spark stages (land_on_spark), skipping
+    the stages the manifest marks done. Both routes size the layout
+    after counting the corpus and checkpoint each stage in the manifest;
+    the manifest commit publishes the build.
 
     corpus: (doc_id, url, text) from prepare_corpus().
     n_buckets/n_shards: None -> auto-sized from corpus volume (_auto_size).
     fail_after: test hook — raise after checkpointing the named stage,
-    simulating a mid-build crash for the resume test. The driver route
-    checkpoints doc_stats, vocab, every segments:g and term_stats; only
-    the Spark route has a tokens stage.
+    simulating a mid-build crash for the resume test. Both routes
+    checkpoint doc_stats, vocab, every segments:g and term_stats; the
+    Spark route's materialized path (bucket_groups > 1, or a corpus
+    above _FUSED_PERSIST_MAX_BYTES) also checkpoints tokens.
     stage_sink: optional dict; when given, records wall seconds per
     checkpointed stage (doc_stats / tokens / vocab / segments:g /
     term_stats) — the scaling benches use it to attribute efficiency
@@ -1233,7 +1521,6 @@ def build_index(
     item 5). On the driver route doc_stats includes the collect.
     """
     man = fmt.load_manifest(index_dir)
-    auto = n_buckets is None or n_shards is None
     fresh = man is None
     if man is None or man.complete:
         # fresh build (a complete index is never silently overwritten by
@@ -1259,20 +1546,43 @@ def build_index(
                 f"v{man.format_version}, engine is v{fmt.FORMAT_VERSION} — "
                 "delete the directory and rebuild"
             )
-        n_buckets, n_shards = man.n_buckets, man.n_shards
-        auto = n_buckets == 0  # crashed before doc_stats sized it
         # the 'segments:{g}' checkpoints are only valid under the group
         # layout that wrote them — adopt the persisted bucket_groups
-        # (like n_buckets/n_shards above) so a resume with a different
-        # caller value cannot skip that layout's unbuilt buckets
+        # (like n_buckets/n_shards) so a resume with a different caller
+        # value cannot skip that layout's unbuilt buckets
         if man.bucket_groups:
             bucket_groups = man.bucket_groups
+    # None sizes, or a resume that crashed before doc_stats sized them
+    auto = not (man.n_buckets and man.n_shards)
 
     import time as _time
 
     _t_last = [_time.perf_counter()]
 
-    def checkpoint(stage: str) -> None:
+    def layout(n_docs: int, total_tokens: int) -> tuple:
+        man.n_docs, man.total_tokens = n_docs, total_tokens
+        man.avgdl = total_tokens / n_docs if n_docs else 0.0
+        if auto:
+            man.n_buckets, man.n_shards = _auto_size(
+                total_tokens, spark.sparkContext.defaultParallelism
+            )
+        return man.n_buckets, man.n_shards, man.avgdl
+
+    def on_stage(stage: str, postings: int = 0, nbytes: int = 0) -> None:
+        if stage == "doc_stats":
+            # snapshot-track the doc_stats file set (round-6b): the purge
+            # and vacuum flip/expire it like segments
+            man.doc_stats_files = fmt.list_doc_stats_files(index_dir)
+            _append_metrics(
+                index_dir, run_id, stage, "all", man.n_docs, 0, 0
+            )
+        elif stage.startswith("segments:"):
+            g = int(stage.split(":")[1])
+            buckets = list(range(g, man.n_buckets, bucket_groups))
+            _append_metrics(
+                index_dir, run_id, stage, f"buckets:{buckets}", 0,
+                postings, nbytes,
+            )
         if stage_sink is not None:
             now = _time.perf_counter()
             stage_sink[stage] = (
@@ -1284,295 +1594,20 @@ def build_index(
         if fail_after == stage:
             raise RuntimeError(f"injected failure after stage {stage}")
 
-    def commit() -> None:
-        # snapshot the committed segment file set (Iceberg-style): readers
-        # open exactly these files, so a later in-flight streaming append
-        # can never surface half a batch to a concurrent query
-        man.segment_files = fmt.list_segment_files(index_dir)
-        man.complete = True
-        fmt.save_manifest(index_dir, man)
-
     rows = collect_if_small(corpus) if fresh else None
     if rows is not None:
-        man.n_docs, man.total_tokens = rows.num_rows, n_tokens(rows)
-        man.avgdl = man.total_tokens / man.n_docs if man.n_docs else 0.0
-        if auto:
-            man.n_buckets, man.n_shards = _auto_size(
-                man.total_tokens, spark.sparkContext.defaultParallelism
-            )
-
-        def on_stage(stage: str, postings: int = 0, nbytes: int = 0):
-            if stage == "doc_stats":
-                man.doc_stats_files = fmt.list_doc_stats_files(index_dir)
-                _append_metrics(
-                    index_dir, run_id, stage, "all", man.n_docs, 0, 0
-                )
-            elif stage.startswith("segments:"):
-                g = int(stage.split(":")[1])
-                buckets = list(range(g, man.n_buckets, bucket_groups))
-                _append_metrics(
-                    index_dir, run_id, stage, f"buckets:{buckets}", 0,
-                    postings, nbytes,
-                )
-            checkpoint(stage)
-
         land_on_driver(
-            rows, index_dir, man.n_buckets, man.n_shards, man.avgdl,
-            on_stage, bucket_groups=bucket_groups,
+            rows, index_dir, layout, on_stage, bucket_groups=bucket_groups
         )
-        commit()
-        return "driver"
-
-    tokens_path = os.path.join(index_dir, TOKENS_TMP)
-
-    # Unsplittable input guard: a corpus arriving in fewer partitions than
-    # cores (e.g. one single-row-group parquet file) would serialize the
-    # tokenize stages. One narrow-ish shuffle here keeps every downstream
-    # scan parallel; at real scale (many input files) the branch is skipped.
-    par = spark.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < max(2, par // 2):
-        corpus = corpus.repartition(par)
-
-    # ---- stage: doc_stats (scan 1: tokenize-count only, no explode) ----
-    if not man.stages.get("doc_stats"):
-        (
-            corpus.select(
-                "doc_id",
-                "url",
-                F.size(doc_tokens()).alias("doc_len"),
-            )
-            .write.mode("overwrite")
-            .parquet(fmt.doc_stats_dir(index_dir))
+    else:
+        land_on_spark(
+            corpus, index_dir, layout, on_stage, bucket_groups=bucket_groups,
+            done=man.stages, cleanup_tmp=cleanup_tmp,
         )
-        ds = spark.read.parquet(fmt.doc_stats_dir(index_dir))
-        n_docs, total_tokens, n_distinct = ds.select(
-            F.count("*"),
-            F.coalesce(F.sum("doc_len"), F.lit(0)),
-            F.countDistinct("doc_id"),
-        ).first()
-        if int(n_docs) != int(n_distinct):
-            # a silent collision would merge two documents' postings
-            # (60-bit hashed ids: birthday bound ~2^30 docs) — fail the
-            # build instead; callers can re-id or widen the id
-            raise ValueError(
-                f"doc_id collision detected: {n_docs} docs, "
-                f"{n_distinct} distinct doc_ids"
-            )
-        man.n_docs = int(n_docs)
-        man.total_tokens = int(total_tokens)
-        man.avgdl = man.total_tokens / man.n_docs if man.n_docs else 0.0
-        if auto:
-            n_buckets, n_shards = _auto_size(
-                man.total_tokens, spark.sparkContext.defaultParallelism
-            )
-            man.n_buckets, man.n_shards = n_buckets, n_shards
-        # snapshot-track the doc_stats file set (round-6b): the purge
-        # and vacuum flip/expire it like segments
-        man.doc_stats_files = fmt.list_doc_stats_files(index_dir)
-        _append_metrics(index_dir, run_id, "doc_stats", "all", n_docs, 0, 0)
-        checkpoint("doc_stats")
-
-    # ---- segment input: two shapes. The posting shuffle carries ONE
-    # ROW PER (doc, term) from the map-side grouper (grouped_terms ->
-    # drop_terms: int64 term_id, never strings; doc_len computed
-    # in-batch, no doc_stats join — see
-    # tests/test_plans.py::test_no_tokenizer_above_generate).
-    #   * fused (one resumable unit, posting relation under the size
-    #     gate): the grouper output is persisted (serialized,
-    #     disk-backed) for the build's duration and feeds both the vocab
-    #     and segment stages — one corpus tokenize scan, no write+read
-    #     of the posting relation. The gate bounds it by ~24 B x
-    #     total_tokens (8B doc_id + 8B term-string avg + blob + overhead).
-    #   * materialized (several units, or above the gate): the grouper
-    #     output is written once to tokens_tmp, partitioned by
-    #     term_bucket; vocab and every bucket-group unit read it back,
-    #     so a resume never re-tokenizes the corpus. The tmp keeps the
-    #     term STRING (same bytes as the id it would replace) so the
-    #     vocab stage derives the dictionary from it. ----
-    fused = (
-        bucket_groups == 1
-        and man.total_tokens * 24 <= _FUSED_PERSIST_MAX_BYTES
-    )
-    materialize = not fused
-    fused_rows = None
-    if fused:
-        from pyspark import StorageLevel
-
-        fused_rows = grouped_terms(corpus).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    if materialize and not man.stages.get("tokens"):
-        (
-            grouped_terms(corpus)
-            .withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
-            )
-            .repartition(
-                max(n_buckets, spark.sparkContext.defaultParallelism),
-                "term_bucket",
-                shard_expr(n_shards),
-            )
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(tokens_path)
-        )
-        checkpoint("tokens")
-
-    _POM_KEY = "spark.sql.sources.partitionOverwriteMode"
-    _prev_pom = spark.conf.get(_POM_KEY, None)
-    try:
-        # ---- stage: vocab (the term dictionary; distinct terms only, so the
-        # map-side-combined shuffle is tiny next to the posting shuffle;
-        # sourced from the already-tokenized doc-term rows) ----
-        if not man.stages.get("vocab"):
-            if materialize:
-                terms_src = (
-                    spark.read.schema(TOKENS_TMP_SCHEMA)
-                    .parquet(tokens_path)
-                    .select("term")
-                    .distinct()
-                )
-            else:
-                terms_src = fused_rows.select("term").distinct()
-            vocab = terms_src.select(
-                "term",
-                F.xxhash64("term").alias("term_id"),
-                F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-                .cast("int")
-                .alias("term_bucket"),
-            )
-            vocab.write.mode("overwrite").partitionBy("term_bucket").parquet(
-                fmt.vocab_dir(index_dir)
-            )
-            v = spark.read.schema(fmt.VOCAB_READ_SCHEMA).parquet(
-                fmt.vocab_dir(index_dir)
-            )
-            n_terms, n_ids = v.select(
-                F.count("*"), F.countDistinct("term_id")
-            ).first()
-            if n_terms != n_ids:
-                raise ValueError(
-                    f"term_id collision: {n_terms} terms, {n_ids} ids — "
-                    "switch to a 128-bit id"
-                )
-            checkpoint("vocab")
-
-        # ---- stage: segments, in resumable bucket-group units ----
-        groups: List[List[int]] = [
-            list(range(g, n_buckets, bucket_groups)) for g in range(bucket_groups)
-        ]
-        seg_schema = "term_bucket int, " + fmt.SEGMENT_SCHEMA
-        # dynamic mode scopes each group's overwrite to the partitions it
-        # writes; saved before the try and restored in its finally so the
-        # session-wide overwrite semantics of the CALLER's later
-        # partitioned writes are not silently changed
-        spark.conf.set(_POM_KEY, "dynamic")
-        for gi, buckets in enumerate(groups):
-            stage_name = f"segments:{gi}"
-            if man.stages.get(stage_name):
-                continue
-            if materialize:
-                toks = drop_terms(
-                    spark.read.schema(TOKENS_TMP_SCHEMA)
-                    .parquet(tokens_path)
-                    .where(
-                        F.col("term_bucket").isin(buckets)  # partition-pruned
-                    )
-                )
-            else:
-                toks = drop_terms(fused_rows)  # cached: no re-tokenize
-            from pyspark.sql import Observation
-
-            obs = Observation(f"seg_metrics_{gi}")
-            sorted_toks = toks.repartition(
-                _partition_count(
-                    man.total_tokens,
-                    spark.sparkContext.defaultParallelism,
-                    len(buckets) * n_shards,
-                    bucket_groups,
-                ),
-                bucket_expr(n_buckets),
-                shard_expr(n_shards),
-            ).sortWithinPartitions(
-                "term_id", shard_expr(n_shards), "doc_id"
-            )
-            seg = (
-                sorted_toks.mapInArrow(
-                    _segment_builder(man.avgdl, n_buckets, n_shards),
-                    schema=seg_schema,
-                )
-                # metrics ride the write job itself — re-reading the segments
-                # just written would be a second full scan of the new index
-                # data per bucket-group (expensive at scale, pure overhead
-                # locally)
-                .observe(
-                    obs,
-                    # postings emitted = one per (term, doc) = sum of the
-                    # per-segment-row df partials; docs-tokenized belongs
-                    # to the doc_stats stage row, not a bucket group
-                    F.coalesce(F.sum("df_part"), F.lit(0)).alias(
-                        "postings"
-                    ),
-                    F.coalesce(F.sum(F.length("postings")), F.lit(0)).alias(
-                        "nbytes"
-                    ),
-                )
-            )
-            (
-                seg.write.mode("overwrite")
-                # bounded row groups keep the sidecar point read's
-                # term_id pruning effective whatever the partition
-                # size (fmt.SEGMENT_ROW_GROUP_BYTES rationale)
-                .option(
-                    "parquet.block.size",
-                    str(fmt.SEGMENT_ROW_GROUP_BYTES),
-                )
-                .partitionBy("term_bucket")
-                .parquet(fmt.segments_dir(index_dir))
-            )
-            got = obs.get
-            _append_metrics(
-                index_dir,
-                run_id,
-                stage_name,
-                f"buckets:{buckets}",
-                0,
-                got["postings"],
-                got["nbytes"],
-            )
-            checkpoint(stage_name)
-
-    finally:
-        if _prev_pom is None:
-            spark.conf.unset(_POM_KEY)
-        else:
-            spark.conf.set(_POM_KEY, _prev_pom)
-        # unpersist even on an injected/real failure — a leaked
-        # cached posting relation would shadow the next attempt's
-        # block-manager budget for the session's lifetime
-        if fused_rows is not None:
-            fused_rows.unpersist()
-
-    # ---- stage: term_stats (small agg over segment rows ⋈ vocab) ----
-    if not man.stages.get("term_stats"):
-        os.makedirs(fmt.segments_dir(index_dir), exist_ok=True)
-        seg = spark.read.schema(fmt.SEG_READ_SCHEMA).parquet(
-            fmt.segments_dir(index_dir)
-        )
-        vocab = spark.read.schema(fmt.VOCAB_READ_SCHEMA).parquet(
-            fmt.vocab_dir(index_dir)
-        )
-        (
-            fmt.term_stats_of(seg, vocab)
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(fmt.term_stats_dir(index_dir))
-        )
-        checkpoint("term_stats")
-
-    if cleanup_tmp and os.path.isdir(tokens_path):
-        shutil.rmtree(tokens_path)
-    commit()
-    return "spark"
+    # snapshot the committed segment file set (Iceberg-style): readers
+    # open exactly these files, so a later in-flight streaming append
+    # can never surface half a batch to a concurrent query
+    man.segment_files = fmt.list_segment_files(index_dir)
+    man.complete = True
+    fmt.save_manifest(index_dir, man)
+    return "spark" if rows is None else "driver"

@@ -14,7 +14,15 @@ Usage:
 
 stream_df: a STREAMING DataFrame with (doc_id long, url string, text
 string). Caller guarantees doc_ids are new (exactly-once feed or upstream
-dedup); re-ingesting a doc_id double-counts it.
+dedup); re-ingesting a doc_id double-counts it. A doc_id repeated WITHIN
+a batch raises the build's doc_id collision error and the batch commits
+nothing.
+
+Each batch lands through the build's own landing functions, under the
+file-name tag "batch{N}-": build.land_on_driver for a batch of at most
+build.DRIVER_BUILD_MAX_TOKENS tokens, build.land_on_spark above it. This
+module holds no segment pipeline of its own; it sizes the batch (the
+first batch with tokens fixes the stream's layout) and commits it.
 
 Consistency model: each micro-batch writes segments + doc_stats +
 metrics first, then commits the manifest (single JSON rename) carrying
@@ -40,24 +48,18 @@ or after a purge shifted df/cf) and folds consumed deltas into it.
 from __future__ import annotations
 
 import os
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..textnorm import spark_tokens
 from ..index import format as fmt
 from ..index.build import (
     _append_metrics,
     _auto_size,
-    _segment_builder,
-    bucket_expr,
     collect_if_small,
-    doc_tokens,
-    grouped_postings,
     land_on_driver,
-    n_tokens,
-    shard_expr,
+    land_on_spark,
 )
 
 
@@ -73,7 +75,11 @@ def _append_batch(
     at most build.DRIVER_BUILD_MAX_TOKENS tokens lands on the driver
     (build.collect_if_small, build.land_on_driver): one Spark job, the
     collect, or two when the batch's size has to be measured by
-    materializing its cache first. A larger batch runs the Spark route."""
+    materializing its cache first. A larger batch lands with the build's
+    own Spark stages (build.land_on_spark), sized by the stream layout
+    rule over the committed and batch totals. Either route raises on a
+    doc_id or term_id collision before the commit, so a failed batch
+    commits nothing and a retry under the same id replaces its files."""
     man = fmt.load_manifest(index_dir)
     if man is not None and man.stages.get(f"stream:{batch_id}"):
         # this batch already committed (manifest flip is the commit
@@ -99,13 +105,13 @@ def _append_batch(
             run_id=f"stream:{batch_id}",
         )
     # one materialization feeds every job that reads the batch: the
-    # size-gated collect and, on the Spark route, the doc_stats write,
-    # stats count, vocab write and posting shuffle — without it each of
-    # those jobs re-reads the micro-batch source. A batch under
-    # build.DRIVER_BUILD_MAX_TOKENS is tokenized once, by the collect,
-    # and grouped, encoded and landed on the driver
-    # (build.land_on_driver); above the gate each of the Spark route's
-    # three scans (doc_stats, vocab, postings) tokenizes again.
+    # size-gated collect and, on the Spark route, the doc_stats write
+    # and the grouper scan — without it each of those jobs re-reads the
+    # micro-batch source. A batch under build.DRIVER_BUILD_MAX_TOKENS is
+    # tokenized once, by the collect, and grouped, encoded and landed on
+    # the driver (build.land_on_driver); above the gate
+    # build.land_on_spark tokenizes it twice, once for doc_stats and
+    # once for the grouper output that feeds both vocab and segments.
     batch = batch.select("doc_id", "url", "text").persist()
     try:
         _append_batch_inner(spark, batch, index_dir, batch_id, man)
@@ -121,67 +127,55 @@ def _append_batch_inner(
     man,
 ) -> None:
     tag = f"batch{batch_id}-"
+    counts: Dict[str, int] = {}
+
+    def layout(b_docs: int, b_tokens: int) -> tuple:
+        # BATCH-ONLY stats (round-6b, review finding), counted from the
+        # batch's landed doc_stats: the commit applies them as DELTAS
+        # (m2.n_docs += ...), never as absolute values read from the
+        # doc_stats directory — an absolute dir read races a concurrent
+        # compaction purge (count pre-swap and commit post-purge
+        # re-inflates the stats by the purged docs; the mirror
+        # interleaving double-subtracts). Deltas compose under CAS rebase
+        # in ANY interleaving: the mutate re-runs against the then-latest
+        # committed totals. Retry-stable too — fmt.land REPLACES any prior
+        # attempt's files, and these numbers come from the batch data,
+        # not the directory.
+        counts.update(docs=b_docs, tokens=b_tokens)
+        est_total = man.total_tokens + b_tokens
+        est_docs = man.n_docs + b_docs
+        # the FIRST batch WITH TOKENS fixes the layout: sizing from an
+        # empty/blank leading batch (possible on recovery or a no-data
+        # trigger) would lock the whole stream's lifetime at the minimum
+        # n_buckets/n_shards. Until tokens arrive the floor layout is
+        # provisional (no segment/vocab rows exist to invalidate) and is
+        # re-derived each batch.
+        if man.n_buckets == 0 or (
+            man.total_tokens == 0 and not man.stages.get("layout_from_data")
+        ):
+            # man.total_tokens is the PRE-batch committed cumulative: once
+            # any tokens have been indexed, segments exist under the fixed
+            # layout and it must never be re-derived (covers pre-flag
+            # manifests too)
+            man.n_buckets, man.n_shards = _auto_size(
+                max(est_total, 1) * 4,  # leave headroom for growth
+                spark.sparkContext.defaultParallelism,
+            )
+        # bm_avgdl stamped on this batch's segment rows: best estimate of
+        # the corpus avgdl at encode time. A racing purge/append makes it
+        # slightly stale, which the per-row bm_avgdl bound correction
+        # absorbs by design (query._TermPostings.max_sat).
+        return (
+            man.n_buckets, man.n_shards,
+            est_total / est_docs if est_docs else 0.0,
+        )
+
     rows = collect_if_small(batch)
     if rows is not None:
-        b_docs, b_tokens = rows.num_rows, n_tokens(rows)
+        landed = land_on_driver(rows, index_dir, layout, tag=tag)
     else:
-        # same null-coalesce as the batch builder (build.doc_tokens)
-        ds = batch.select("doc_id", "url", F.size(doc_tokens()).alias("doc_len"))
-        bstats = ds.select(
-            F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0))
-        ).first()
-        b_docs, b_tokens = int(bstats[0]), int(bstats[1])
-    # BATCH-ONLY stats (round-6b, review finding): the commit applies
-    # them as DELTAS (m2.n_docs += ...), never as absolute values read
-    # from the doc_stats directory — an absolute dir read races a
-    # concurrent compaction purge (count pre-swap and commit post-purge
-    # re-inflates the stats by the purged docs; the mirror interleaving
-    # double-subtracts). Deltas compose under CAS rebase in ANY
-    # interleaving: the mutate re-runs against the then-latest
-    # committed totals. Retry-stable too — fmt.land REPLACES any prior
-    # attempt's files, and these numbers come from the batch data, not
-    # the directory.
-    est_total = man.total_tokens + b_tokens
-    est_docs = man.n_docs + b_docs
-
-    # the FIRST batch WITH TOKENS fixes the layout: sizing from an
-    # empty/blank leading batch (possible on recovery or a no-data
-    # trigger) would lock the whole stream's lifetime at the minimum
-    # n_buckets/n_shards. Until tokens arrive the floor layout is
-    # provisional (no segment/vocab rows exist to invalidate) and is
-    # re-derived each batch.
-    if man.n_buckets == 0 or (
-        man.total_tokens == 0 and not man.stages.get("layout_from_data")
-    ):
-        # man.total_tokens is the PRE-batch committed cumulative: once
-        # any tokens have been indexed, segments exist under the fixed
-        # layout and it must never be re-derived (covers pre-flag
-        # manifests too)
-        man.n_buckets, man.n_shards = _auto_size(
-            max(est_total, 1) * 4,  # leave headroom for growth
-            spark.sparkContext.defaultParallelism,
-        )
-    if est_total > 0:
-        man.stages["layout_from_data"] = True
-    n_buckets, n_shards = man.n_buckets, man.n_shards
-    # bm_avgdl stamped on this batch's segment rows: best estimate of
-    # the corpus avgdl at encode time. A racing purge/append makes it
-    # slightly stale, which the per-row bm_avgdl bound correction
-    # absorbs by design (query._TermPostings.max_sat).
-    batch_avgdl = est_total / est_docs if est_docs else 0.0
-
-    if rows is not None:
-        landed = land_on_driver(
-            rows, index_dir, n_buckets, n_shards, batch_avgdl, tag=tag
-        )
-    else:
-        landed = _land_batch_on_spark(
-            spark, batch, ds, index_dir, tag, n_buckets, n_shards,
-            batch_avgdl,
-        )
-    new_ds_files = landed["doc_stats"]
-    new_files = landed["segments"]
-    ts_delta_rels = landed["term_stats"]
+        landed = land_on_spark(batch, index_dir, layout, tag=tag)
+    b_docs, b_tokens = counts["docs"], counts["tokens"]
 
     # metrics row, batch-named like the data files: a retry replaces it
     _append_metrics(
@@ -206,14 +200,14 @@ def _append_batch_inner(
         ):
             # first real commit (or provisional pre-token layout):
             # persist the layout this batch's segment job actually used
-            m2.n_buckets, m2.n_shards = n_buckets, n_shards
+            m2.n_buckets, m2.n_shards = man.n_buckets, man.n_shards
         if m2.total_tokens + b_tokens > 0:
             m2.stages["layout_from_data"] = True
         m2.segment_files = sorted(
-            set(m2.segment_files or []) | set(new_files)
+            set(m2.segment_files or []) | set(landed["segments"])
         )
         m2.doc_stats_files = sorted(
-            set(m2.doc_stats_files or []) | set(new_ds_files)
+            set(m2.doc_stats_files or []) | set(landed["doc_stats"])
         )
         if not m2.complete and m2.n_docs == 0:
             # brand-new index: stamp the current format. An EXISTING
@@ -232,104 +226,13 @@ def _append_batch_inner(
         # files join the committed view (base + deltas). A never-built
         # base (stage False/absent) stays stale until the first rebuild.
         m2.term_stats_delta_files = sorted(
-            set(m2.term_stats_delta_files or []) | set(ts_delta_rels)
+            set(m2.term_stats_delta_files or [])
+            | set(landed["term_stats"])
         )
         m2.complete = True
         return True
 
     fmt.commit_manifest(index_dir, _commit)
-
-
-def _land_batch_on_spark(
-    spark: SparkSession,
-    batch: DataFrame,
-    ds: DataFrame,
-    index_dir: str,
-    tag: str,
-    n_buckets: int,
-    n_shards: int,
-    batch_avgdl: float,
-) -> Dict[str, List[str]]:
-    """The Spark route of one stream batch: land its doc_stats rows ds,
-    vocab, segments and term_stats delta under tag (fmt.land: a retry
-    replaces the tag's files). Returns the landed files per table, as
-    build.land_on_driver does."""
-    new_ds_files = fmt.land(
-        lambda p: ds.write.mode("overwrite").parquet(p),
-        fmt.doc_stats_dir(index_dir),
-        tag,
-    )
-    # one row per (doc, term), positions pre-encoded map-side — the same
-    # posting relation the batch builder shuffles (build.grouped_postings)
-    tokens = grouped_postings(batch)
-    # vocab append: this batch's distinct terms (dedup on read)
-    vocab = (
-        batch.select(F.explode(spark_tokens(F.col("text"))).alias("term"))
-        .distinct()
-        .select(
-            "term",
-            F.xxhash64("term").alias("term_id"),
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-            .cast("int")
-            .alias("term_bucket"),
-        )
-    )
-    fmt.land(
-        lambda p: vocab.write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(p),
-        fmt.vocab_dir(index_dir),
-        tag,
-    )
-    seg_schema = "term_bucket int, " + fmt.SEGMENT_SCHEMA
-    seg = (
-        tokens.repartition(
-            max(n_buckets, spark.sparkContext.defaultParallelism),
-            bucket_expr(n_buckets),
-            shard_expr(n_shards),
-        )
-        .sortWithinPartitions("term_id", shard_expr(n_shards), "doc_id")
-        .mapInArrow(
-            _segment_builder(batch_avgdl, n_buckets, n_shards),
-            schema=seg_schema,
-        )
-    )
-    # this batch's landed segment files (batch-tagged; fmt.land
-    # replaced any partial same-batch attempt)
-    new_files = fmt.land(
-        lambda p: seg.write.mode("overwrite")
-        .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
-        .partitionBy("term_bucket")
-        .parquet(p),
-        fmt.segments_dir(index_dir),
-        tag,
-    )
-
-    # term_stats DELTA (round-7, VERDICT item 7): aggregate df/cf over
-    # JUST this batch's landed segment rows (already partially summed
-    # per shard by the encoder — this job reads batch-sized data, never
-    # the index) and land it batch-tagged under term_stats_deltas/. The
-    # committed view is base (+) deltas (IndexReader.term_stats), so an
-    # append no longer invalidates term_stats; rebuild_term_stats folds
-    # consumed deltas into a fresh base. Same doc_stats-delta discipline
-    # as round-6: the commit records the delta FILES, never absolute
-    # stats, so append-vs-purge races rebase correctly.
-    ts_delta_rels: List[str] = []
-    if new_files:
-        batch_seg = fmt.read_committed(
-            spark, fmt.segments_dir(index_dir), new_files, fmt.SEG_READ_SCHEMA
-        )
-        ts_delta = fmt.term_stats_of(batch_seg, vocab)
-        ts_delta_rels = fmt.land(
-            lambda p: ts_delta.coalesce(1).write.mode("overwrite").parquet(p),
-            fmt.term_stats_deltas_dir(index_dir),
-            tag,
-        )
-    return {
-        "doc_stats": new_ds_files,
-        "segments": new_files,
-        "term_stats": ts_delta_rels,
-    }
 
 
 def incremental_index(
