@@ -65,19 +65,22 @@ def _cached_manifest(d: str):
     return man
 
 
+def _build_fresh(spark: SparkSession, sf_dir: str, d: str) -> None:
+    """(Re)build the inverted index over documents(doc_id, text) at d."""
+    import shutil
+
+    shutil.rmtree(d, ignore_errors=True)
+    corpus = prepare_corpus(
+        _t(spark, sf_dir, "documents"), doc_id_col="doc_id"
+    )
+    build_index(spark, corpus, d, n_buckets=8, n_shards=4, bucket_groups=2)
+
+
 def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the inverted index over documents(doc_id, text)."""
     d = _index_dir_for(sf_dir)
     if _cached_manifest(d) is None:
-        import shutil
-
-        shutil.rmtree(d, ignore_errors=True)
-        corpus = prepare_corpus(
-            _t(spark, sf_dir, "documents"), doc_id_col="doc_id"
-        )
-        build_index(
-            spark, corpus, d, n_buckets=8, n_shards=4, bucket_groups=2
-        )
+        _build_fresh(spark, sf_dir, d)
     return d
 
 
@@ -88,16 +91,10 @@ def _ensure_deleted_index(spark: SparkSession, sf_dir: str) -> str:
     d = _index_dir_for(sf_dir) + "_del"
     man = _cached_manifest(d)
     if man is None or not man.tombstone_files:
-        import shutil
-
         from text_search_spark.index.delete import delete_docs
 
-        shutil.rmtree(d, ignore_errors=True)
+        _build_fresh(spark, sf_dir, d)
         docs = _t(spark, sf_dir, "documents")
-        corpus = prepare_corpus(docs, doc_id_col="doc_id")
-        build_index(
-            spark, corpus, d, n_buckets=8, n_shards=4, bucket_groups=2
-        )
         delete_docs(
             spark, d, docs.where(F.col("doc_id") % 5 == 2).select("doc_id")
         )
@@ -226,15 +223,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["bm25_single"] = _bm25_engine_query("single", 5)
 
     def _ensure_merged(spark, sf_dir):
-        import shutil
+        # a second build of the same corpus, its 4 shards compacted in
+        # place to 2
+        from text_search_spark.index.merge import compact_in_place
 
-        from text_search_spark.index.merge import merge_shards
-
-        ix = _ensure_index(spark, sf_dir)
-        merged = ix + "_m2"
-        if _cached_manifest(merged) is None:
-            shutil.rmtree(merged, ignore_errors=True)
-            merge_shards(spark, ix, merged, factor=2)
+        merged = _index_dir_for(sf_dir) + "_m2"
+        man = _cached_manifest(merged)
+        if man is None or man.n_shards != 2:
+            _build_fresh(spark, sf_dir, merged)
+            compact_in_place(spark, merged, factor=2)
         return merged
 
     def bm25_after_merge(spark, sf_dir):

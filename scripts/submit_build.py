@@ -13,17 +13,21 @@ The north-rule deployment shape: the package ships as a zip via
       --py-files dist/text_search_spark.zip \
       scripts/submit_build.py \
       --input  s3://bucket/commoncrawl/pages/   \
-      --index  s3://bucket/indexes/cc-main/     \
+      --index  /shared/indexes/cc-main          \
       --url-col url --text-col text \
       --bucket-groups 16
 
 --input takes a PARQUET directory (read via spark.read.parquet); for an
 Iceberg or other catalog table use `--input-table catalog.db.pages`
-instead. The index lands at --index
-as the engine's term-partitioned layout with the manifest as the atomic
-commit. Re-running the same command after a failure RESUMES from the
-last completed stage (bucket-group lineage in the manifest). Sizing
-(n_buckets x n_shards) auto-derives from corpus volume unless given.
+instead. The index lands at --index as the engine's term-partitioned
+layout with the manifest as the atomic commit. --index must be a LOCAL
+(or locally-mounted, e.g. NFS/fuse) path that every executor sees: an
+object-store URI (s3://, gs://, ...) is rejected at startup, since the
+manifest and the data-file landing use os-level IO
+(format.require_local_index). Re-running the same command after a
+failure RESUMES from the last completed stage (bucket-group lineage in
+the manifest). Sizing (n_buckets x n_shards) auto-derives from corpus
+volume unless given.
 """
 
 from __future__ import annotations
@@ -36,7 +40,9 @@ def main() -> None:
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="path of the corpus (parquet dir)")
     src.add_argument("--input-table", help="catalog table (e.g. Iceberg)")
-    ap.add_argument("--index", required=True, help="output index directory")
+    ap.add_argument("--index", required=True,
+                    help="output index directory (local/mounted path; URI "
+                         "schemes other than file:// are rejected)")
     ap.add_argument("--url-col", default="url")
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--doc-id-col", default=None,
@@ -47,6 +53,13 @@ def main() -> None:
                     help="resumable units; >1 materializes tokens_tmp")
     ap.add_argument("--run-id", default="submit")
     args = ap.parse_args()
+
+    from text_search_spark.index import format as fmt
+
+    try:
+        args.index = fmt.require_local_index(args.index)
+    except ValueError as e:
+        ap.error(str(e))
 
     from pyspark.sql import SparkSession
 

@@ -15,10 +15,10 @@ time travel):
 manifest, snapshot-claim, tombstone, and vacuum IO go through os-level
 primitives (the CAS claim is an atomic hardlink — see
 index/format.py's backend note). An object-store URI (s3://, gs://,
-...) is rejected at startup rather than silently creating a LOCAL
-'s3:/bucket/...' directory and reporting a takedown applied that never
-touched the real index. --ids-parquet MAY be any Spark-readable URI —
-it is read by Spark, not os APIs.
+...) is rejected at startup (format.require_local_index) rather than
+silently creating a LOCAL 's3:/bucket/...' directory and reporting a
+takedown applied that never touched the real index. --ids-parquet MAY
+be any Spark-readable URI — it is read by Spark, not os APIs.
 
 Every mutating subcommand commits through the optimistic-CAS protocol
 (index/format.py), so it is safe to run while an indexing or upsert
@@ -30,27 +30,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import re
-import sys
-
-
-def _require_local_index(path: str) -> str:
-    """Reject URI-scheme index paths: every manifest/tombstone/vacuum
-    op here uses local os APIs, so 's3://bucket/ix' would silently
-    operate on a fresh LOCAL directory named 's3:/bucket/ix' (takedowns
-    reported applied but not applied; vacuum/expire no-op). 'file://'
-    is accepted and stripped; Windows drive letters ('C:/...') pass."""
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://(.*)$", path)
-    if m is None:
-        return path
-    if m.group(1).lower() == "file":
-        return "/" + m.group(2).lstrip("/") if m.group(2) else "/"
-    sys.exit(
-        f"error: --index {path!r} has URI scheme {m.group(1)!r}, but "
-        "index maintenance IO is local-filesystem only (atomic-hardlink "
-        "CAS claims; see index/format.py). Mount the store locally or "
-        "run maintenance where the index directory is a real path."
-    )
 
 
 def main() -> None:
@@ -91,9 +70,13 @@ def main() -> None:
     sub.add_parser("history", help="list retained snapshots")
 
     args = ap.parse_args()
-    args.index = _require_local_index(args.index)
 
     from text_search_spark.index import format as fmt
+
+    try:
+        args.index = fmt.require_local_index(args.index)
+    except ValueError as e:
+        ap.error(str(e))
 
     if args.cmd == "expire":
         n = fmt.expire_snapshots(args.index, retain_last=args.retain_last)

@@ -405,7 +405,9 @@ def test_mass_delete_cogrouped_readers_match_driver_regime(
     assert got_multi == want_multi
     # plan pin: the scorer really is the cogrouped variant
     cand_plan = (
-        query_mod._shard_topk_candidates(spark, ix, specs, 10, r2, True)
+        query_mod._shard_topk_candidates(
+            r2, query_mod._plan_queries(r2, specs), 10, True
+        )
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "FlatMapCoGroupsInPandas" in cand_plan

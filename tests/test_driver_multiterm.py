@@ -6,6 +6,7 @@ shard) and with tombstoned docs."""
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -26,6 +27,7 @@ from text_search_spark.index.query import (
 )
 from text_search_spark.oracle import bm25_topk, build_oracle_index
 from text_search_spark.streaming.incremental import upsert_batch
+from text_search_spark.textnorm import tokenize
 
 N_DOCS = 300
 K = 10
@@ -195,49 +197,93 @@ def test_distributed_tombstones_route_to_cogrouped_path(
     assert sink["path"] == "shard_topk"
     assert got == want
     plan = (
-        qmod._shard_topk_candidates(spark, ix, specs, K, r, True)
+        qmod._shard_topk_candidates(r, qmod._plan_queries(r, specs), K, True)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "FlatMapCoGroupsInPandas" in plan
 
 
-def test_environmental_failure_falls_back_and_rolls_back_phases(
+def _raises_without_a_job(spark, group, exc, fn):
+    """fn() raises exc, and no Spark job ran under the job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(exc) as info:
+            fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    return info
+
+
+def test_driver_read_errors_propagate_without_a_spark_job(
     spark, states, monkeypatch
 ):
+    """A failed driver read is a defect of the index or of its disk (the
+    data plane is local-filesystem only): the error propagates as
+    raised, from the postings read and from the df lookup alike, and
+    no Spark route runs in its place."""
     ix = states["build"][0]
     specs = _specs()
-    want, _sink, _jobs = _run(spark, ix, specs, True, "drv-ok")
+
+    def query():
+        return bm25_topk_rows(
+            spark, ix, specs, k=K, reader=IndexReader(spark, ix)
+        )
 
     def broken(reader, qp, k, prune, phase_sink=None):
-        phase_sink["read_s"] = 1e9  # a partial timing the rollback drops
         raise OSError("no local filesystem")
 
-    monkeypatch.setattr(qmod, "_score_shards_local", broken)
-    got, sink, jobs = _run(spark, ix, specs, True, "drv-fallback")
-    assert sink["path"] == "shard_topk" and jobs > 0
-    assert "read_s" not in sink
-    assert got == want
+    with monkeypatch.context() as m:
+        m.setattr(qmod, "_score_shards_local", broken)
+        _raises_without_a_job(spark, "drv-oserror", OSError, query)
 
-    # the df lookup falls back on the same environmental errors only: a
-    # defect in the sidecar read surfaces instead of a silent Spark scan
     def df_scan_raising(exc):
         def scan(self, id_list, blist):
             raise exc
 
         return scan
 
-    monkeypatch.setattr(
-        IndexReader, "_df_sidecar_scan", df_scan_raising(ValueError("codec"))
+    for exc in (ValueError("codec"), OSError("no fs")):
+        with monkeypatch.context() as m:
+            m.setattr(IndexReader, "_df_sidecar_scan", df_scan_raising(exc))
+            info = _raises_without_a_job(
+                spark, f"df-{type(exc).__name__}", type(exc), query
+            )
+        assert info.value is exc
+
+
+def test_truncated_segment_file_raises_pyarrow_error(spark, tmp_path):
+    """A truncated committed segment file fails the query with pyarrow's
+    own error on both entry points — not a JVM trace from a Spark scan
+    run in the driver read's place — and starts no Spark job."""
+    pages = generate_pages(60)
+    ix = str(tmp_path / "trunc_ix")
+    corpus = prepare_corpus(
+        spark.createDataFrame(
+            [(p.url, p.text) for p in pages], "url string, text string"
+        ),
+        url_col="url",
     )
-    with pytest.raises(ValueError, match="codec"):
-        _run(spark, ix, specs, True, "df-defect", reader=IndexReader(spark, ix))
-    monkeypatch.setattr(
-        IndexReader, "_df_sidecar_scan", df_scan_raising(OSError("no fs"))
+    build_index(spark, corpus, ix, n_buckets=2, n_shards=2, bucket_groups=1)
+    specs = [QuerySpec("q", ["the"], "or")]
+    assert bm25_topk_rows(spark, ix, specs, k=K)
+
+    reader = IndexReader(spark, ix)
+    path = reader.segment_files_for_buckets(
+        reader.buckets_for(tokenize("the")).values()
+    )[0]
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    _raises_without_a_job(
+        spark, "trunc-rows", pa.ArrowException,
+        lambda: bm25_topk_rows(spark, ix, specs, k=K),
     )
-    got, _sink, _jobs = _run(
-        spark, ix, specs, True, "df-fallback", reader=IndexReader(spark, ix)
+    _raises_without_a_job(
+        spark, "trunc-df", pa.ArrowException,
+        lambda: qmod.bm25_topk_df(spark, ix, specs, k=K),
     )
-    assert got == want
 
 
 @pytest.mark.parametrize("state", ("build", "upsert"))

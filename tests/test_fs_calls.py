@@ -17,8 +17,8 @@ FS_CALL = re.compile(
     r"|shutil\.(rmtree|move|copy)"
 )
 # build.py: the encoder's spool unlink, the term_stats stage's makedirs,
-# the tokens_tmp cleanup; merge.py: merge_shards' term_stats makedirs
-MAX_CALLS = 4
+# the tokens_tmp cleanup
+MAX_CALLS = 3
 
 
 def test_direct_fs_calls_only_shrink():

@@ -173,11 +173,12 @@ def test_topk_rows_identical_to_df(spark, built):
     assert rows == df_rows
 
 
-def test_topk_rows_fast_paths_identical(spark, built):
+def test_topk_rows_fast_paths_identical(spark, built, monkeypatch):
     """Single-term batches and mixed single- plus multi-term batches are
-    rank- and score-identical to the DataFrame path and to the NumPy
-    oracle on both bm25_topk_rows routes: the driver scorer, and the
-    Spark shard route the batch takes above the postings threshold."""
+    rank- and score-identical to the NumPy oracle on both routes of
+    both entry points: the driver scorer, and the Spark shard route the
+    batch takes above the postings threshold (bm25_topk_df's window
+    merge). bm25_topk_df keeps its schema on both routes."""
     import text_search_spark.index.query as qm
     from text_search_spark.index.query import bm25_topk_rows
 
@@ -185,38 +186,37 @@ def test_topk_rows_fast_paths_identical(spark, built):
     queries = generate_queries()
     single = [q for q in queries if len(set(q.terms)) == 1]
     assert len(single) >= 5 and len(single) < len(queries)
+    default_gate = qm.DRIVER_SCORE_MAX_POSTINGS
     for batch in (single, queries):
         specs = [QuerySpec(q.query_id, q.terms, q.mode) for q in batch]
-        df_rows = sorted(
-            (r.query_id, r.rank, r.doc_id, r.score)
-            for r in bm25_topk_df(spark, index_dir, specs, k=10).collect()
-        )
-        sink = {}
-        rows_driver = sorted(
-            bm25_topk_rows(spark, index_dir, specs, k=10, phase_sink=sink)
-        )
-        assert sink["path"] == "driver_sidecar"
-        assert rows_driver == df_rows
-        old = qm.DRIVER_SCORE_MAX_POSTINGS
-        try:
-            qm.DRIVER_SCORE_MAX_POSTINGS = 0  # force the Spark shard route
+        results = {}
+        for gate, path in ((default_gate, "driver_sidecar"),
+                           (-1, "shard_topk")):
+            monkeypatch.setattr(qm, "DRIVER_SCORE_MAX_POSTINGS", gate)
             sink = {}
-            rows_spark = sorted(
+            results[("rows", path)] = sorted(
                 bm25_topk_rows(spark, index_dir, specs, k=10, phase_sink=sink)
             )
-        finally:
-            qm.DRIVER_SCORE_MAX_POSTINGS = old
-        assert sink["path"] == "shard_topk"
-        assert rows_spark == df_rows
-        got = {}
-        for qid, _rank, doc, score in rows_driver:
-            got.setdefault(qid, []).append((doc, score))
-        for q in batch:
-            exp = bm25_topk(oracle_ix, q.terms, k=10, mode=q.mode)
-            mine = got.get(q.query_id, [])
-            assert [d for d, _ in mine] == [d for d, _ in exp], q
-            for (_, sg), (_, se) in zip(mine, exp):
-                assert abs(sg - se) <= 1e-6, (q.query_id, sg, se)
+            assert sink["path"] == path
+            out = bm25_topk_df(spark, index_dir, specs, k=10)
+            assert out.dtypes == [
+                ("query_id", "string"), ("rank", "int"),
+                ("doc_id", "bigint"), ("score", "double"),
+            ]
+            results[("df", path)] = sorted(
+                (r.query_id, r.rank, r.doc_id, r.score) for r in out.collect()
+            )
+        for rows in results.values():
+            assert rows == results[("rows", "driver_sidecar")]
+            got = {}
+            for qid, _rank, doc, score in rows:
+                got.setdefault(qid, []).append((doc, score))
+            for q in batch:
+                exp = bm25_topk(oracle_ix, q.terms, k=10, mode=q.mode)
+                mine = got.get(q.query_id, [])
+                assert [d for d, _ in mine] == [d for d, _ in exp], q
+                for (_, sg), (_, se) in zip(mine, exp):
+                    assert abs(sg - se) <= 1e-6, (q.query_id, sg, se)
 
 
 def test_topk_tie_break_on_identical_docs(spark, tmp_path):

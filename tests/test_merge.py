@@ -1,6 +1,7 @@
-"""Hierarchical shard merge: merged index must be BYTE-identical to one
-built directly at the target shard count (same docs -> same gaps -> same
-varbyte), across one and two merge levels."""
+"""Hierarchical shard merge: an index compacted in place to fewer shards
+must be BYTE-identical to one built directly at the target shard count
+(same docs -> same gaps -> same varbyte), across one and two merge
+levels."""
 
 import os
 
@@ -10,17 +11,22 @@ from pyspark.sql import functions as F
 from text_search_spark.corpus import generate_pages
 from text_search_spark.index import format as fmt
 from text_search_spark.index.build import build_index, prepare_corpus
-from text_search_spark.index.merge import merge_shards
+from text_search_spark.index.merge import compact_in_place
 from text_search_spark.index.query import QuerySpec, bm25_topk_df
 
 N_DOCS = 300
 
 
 def _fingerprint(spark, d):
+    """The committed snapshot's segment rows (compaction leaves the old
+    files on disk until vacuum)."""
+    seg = fmt.read_committed(
+        spark, fmt.segments_dir(d), fmt.load_manifest(d).segment_files,
+        fmt.SEG_READ_SCHEMA,
+    )
     return sorted(
         tuple(r)
-        for r in spark.read.parquet(fmt.segments_dir(d))
-        .select(
+        for r in seg.select(
             "term_id",
             "shard",
             "df_part",
@@ -45,13 +51,14 @@ def test_merge_matches_direct_build(spark, tmp_path):
         build_index(spark, corpus, d, n_buckets=4, n_shards=s, bucket_groups=1)
         dirs[s] = d
 
-    m2 = str(tmp_path / "m2")
-    merge_shards(spark, dirs[4], m2, factor=2)
-    assert _fingerprint(spark, m2) == _fingerprint(spark, dirs[2])
-
-    m1 = str(tmp_path / "m1")
-    merge_shards(spark, m2, m1, factor=2)
-    assert _fingerprint(spark, m1) == _fingerprint(spark, dirs[1])
+    # a second build at 4 shards, compacted in place: 4 -> 2 -> 1
+    m = str(tmp_path / "m")
+    build_index(spark, corpus, m, n_buckets=4, n_shards=4, bucket_groups=1)
+    compact_in_place(spark, m, factor=2)
+    assert _fingerprint(spark, m) == _fingerprint(spark, dirs[2])
+    compact_in_place(spark, m, factor=2)
+    assert fmt.load_manifest(m).n_shards == 1
+    assert _fingerprint(spark, m) == _fingerprint(spark, dirs[1])
 
     # and the merged index answers queries identically
     specs = [
@@ -66,7 +73,7 @@ def test_merge_matches_direct_build(spark, tmp_path):
             for r in bm25_topk_df(spark, d, specs, k=10).collect()
         )
 
-    assert res(m1) == res(dirs[4]) == res(dirs[1])
+    assert res(m) == res(dirs[4]) == res(dirs[1])
 
 
 def test_compact_in_place_snapshot_lifecycle(spark, tmp_path):
@@ -149,8 +156,8 @@ def test_compact_in_place_snapshot_lifecycle(spark, tmp_path):
 
 
 def test_compact_in_place_factor_merges_shards(spark, tmp_path):
-    """factor=n_shards compacts to one shard in place — equivalent to
-    merge_shards but without a new directory; answers identical."""
+    """factor=n_shards compacts to one shard in place; answers
+    identical."""
     from text_search_spark.corpus import generate_pages
     from text_search_spark.index import format as fmt
     from text_search_spark.index.build import build_index, prepare_corpus
@@ -180,7 +187,5 @@ def test_compact_in_place_factor_merges_shards(spark, tmp_path):
     man5 = fmt.load_manifest(ix5)
     with pytest.raises(ValueError, match="factor 2"):
         compact_in_place(spark, ix5, factor=2)
-    with pytest.raises(ValueError, match="factor 2"):
-        merge_shards(spark, ix5, str(tmp_path / "cipf_m5"), factor=2)
     assert fmt.load_manifest(ix5) == man5
     assert not [f for f in os.listdir(ix5) if f.startswith(".compact")]

@@ -149,24 +149,31 @@ def test_submit_maintain_rejects_object_store_uri(tmp_path):
     """Round-7 ADVICE fix: '--index s3://bucket/ix delete' used to
     create a LOCAL 's3:/bucket/ix' directory, write the tombstone
     there, and print success — a takedown reported applied but never
-    applied. Pinned: non-file URI schemes exit loudly BEFORE any IO;
-    file:// is accepted and stripped."""
+    applied. Pinned: non-file URI schemes exit loudly BEFORE any IO, in
+    the maintenance and the build script alike; file:// is accepted and
+    stripped."""
     import pytest
 
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     try:
+        import submit_build
         import submit_maintain
 
         for bad in ("s3://bucket/ix", "gs://b/ix", "hdfs://nn/ix",
                     "s3a://b/ix"):
-            old = sys.argv
-            sys.argv = ["submit_maintain.py", "--index", bad, "history"]
-            try:
-                with pytest.raises(SystemExit) as ei:
-                    submit_maintain.main()
-                assert ei.value.code not in (0, None)
-            finally:
-                sys.argv = old
+            for script, argv in (
+                (submit_maintain, ["--index", bad, "history"]),
+                (submit_build, ["--input", str(tmp_path / "in"),
+                                "--index", bad]),
+            ):
+                old = sys.argv
+                sys.argv = [script.__name__ + ".py"] + argv
+                try:
+                    with pytest.raises(SystemExit) as ei:
+                        script.main()
+                    assert ei.value.code not in (0, None)
+                finally:
+                    sys.argv = old
         # nothing got created under a URI-shaped local path
         assert not os.path.exists("s3:") and not os.path.exists("s3:/")
 
@@ -187,8 +194,7 @@ def test_submit_maintain_rejects_object_store_uri(tmp_path):
         finally:
             sys.argv = old
 
-        assert submit_maintain._require_local_index("/plain/path") \
-            == "/plain/path"
-        assert submit_maintain._require_local_index("rel/path") == "rel/path"
+        assert ixfmt.require_local_index("/plain/path") == "/plain/path"
+        assert ixfmt.require_local_index("rel/path") == "rel/path"
     finally:
         sys.path.pop(0)

@@ -14,6 +14,7 @@ import pyarrow as pa
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 import text_search_spark.index.query as qmod
 from text_search_spark.corpus import NEEDLES, generate_pages
@@ -139,7 +140,17 @@ def test_df_and_postings_match_reference_reads(spark, states, state):
     ids = r.ids_for(terms)
     buckets = r.buckets_for(terms)
     df = r.df_for(terms, buckets)
-    spark_df = r._df_spark_scan(list(ids.values()), sorted(set(buckets.values())))
+    spark_df = {
+        row.term_id: row.df
+        for row in r.segments()
+        .where(
+            F.col("term_bucket").isin(sorted(set(buckets.values())))
+            & F.col("term_id").isin(list(ids.values()))
+        )
+        .groupBy("term_id")
+        .agg(F.sum("df_part").alias("df"))
+        .collect()
+    }
     assert df == {t: spark_df.get(ids[t], 0) for t in terms}
     assert df["zzzz-not-a-term"] == 0 and sum(df.values()) > 0
 

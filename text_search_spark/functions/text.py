@@ -13,11 +13,6 @@ from pyspark.sql import functions as F
 from ..textnorm import spark_tokens  # noqa: F401  (re-export)
 
 
-def md5_prefix_long(col: Column, nchars: int = 15) -> Column:
-    """First `nchars` hex chars of md5 as a non-negative long (<= 60 bits)."""
-    return F.conv(F.substring(F.md5(col), 1, nchars), 16, 10).cast("long")
-
-
 def minhash_col(term_col: Column, i: int) -> Column:
     """Per-term hash for minhash slot i: md5('<i>|' || term), kept as the
     hex string — lexicographic min over hex == numeric min, and hex strings

@@ -210,6 +210,25 @@ class CommitBackend:
         raise NotImplementedError
 
 
+def require_local_index(path: str) -> str:
+    """An index root as a local path, or ValueError for a URI-scheme
+    one: the manifest, the snapshot claims and every data-file landing
+    use local os APIs (the backend note above), so 's3://bucket/ix'
+    would silently read and write a LOCAL directory 's3:/bucket/ix'
+    while Spark writes to the store. 'file://' is accepted and
+    stripped; Windows drive letters ('C:/...') pass."""
+    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://(.*)$", path)
+    if m is None:
+        return path
+    if m.group(1).lower() == "file":
+        return "/" + m.group(2).lstrip("/") if m.group(2) else "/"
+    raise ValueError(
+        f"index {path!r} has URI scheme {m.group(1)!r}, but index IO is "
+        "local-filesystem only (atomic-hardlink CAS claims; see "
+        "index/format.py). Mount the store locally or use a real path."
+    )
+
+
 class LocalFSCommitBackend(CommitBackend):
     """Default backend: POSIX rename/link atomicity."""
 

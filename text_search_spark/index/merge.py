@@ -1,13 +1,14 @@
 """Hierarchical segment merge (SURVEY.md §4 custom-work item 4; north star:
 "hierarchically merged into term-partitioned index shards").
 
-merge_shards halves (or /f) the shard count of an index: every f doc-
-disjoint (term, shard) segments merge into one. Because shard = hash(doc_id)
-% S and S_new divides S, `new_shard = shard % S_new` equals hash(doc_id) %
-S_new — the doc-sharded query invariant survives the merge, and a merged
-index is BYTE-IDENTICAL to one built directly at S_new (asserted in
-tests/test_merge.py): the merged doc list is the same sorted sequence, so
-gaps, blocks, block-max and positions re-encode to the same bytes.
+compact_in_place(factor=f) divides the shard count of an index by f:
+every f doc-disjoint (term, shard) segments merge into one. Because
+shard = hash(doc_id) % S and S_new divides S, `new_shard = shard % S_new`
+equals hash(doc_id) % S_new — the doc-sharded query invariant survives
+the merge, and a merged index is BYTE-IDENTICAL to one built directly at
+S_new (asserted in tests/test_merge.py): the merged doc list is the same
+sorted sequence, so gaps, blocks, block-max and positions re-encode to
+the same bytes.
 
 Repeated application gives the log-depth merge tree: S -> S/f -> ... -> 1.
 Each level is one Spark job over segment ROWS (already compressed — orders
@@ -240,59 +241,6 @@ def _merged_shard_count(man: "fmt.IndexManifest", factor: int) -> int:
     )
 
 
-def merge_shards(
-    spark: SparkSession, index_dir: str, out_dir: str, factor: int = 2
-) -> None:
-    """Produce a new index at out_dir with n_shards /= factor."""
-    man = _load_complete(index_dir)
-    s_new = _merged_shard_count(man, factor)
-    avgdl = man.avgdl
-
-    merged = _merged_segments(spark, seg=_read_committed_segments(
-        spark, index_dir, man
-    ), avgdl=avgdl, n_buckets=man.n_buckets, s_new=s_new)
-    (
-        merged.write.mode("overwrite")
-        .option("parquet.block.size", str(fmt.SEGMENT_ROW_GROUP_BYTES))
-        .partitionBy("term_bucket")
-        .parquet(fmt.segments_dir(out_dir))
-    )
-    # stats tables + manifest carry over (doc space unchanged). Explicit
-    # schemas + makedirs: a streaming-built index has no term_stats dir
-    # until rebuild_term_stats runs (the merged copy is then empty and
-    # likewise needs a rebuild), and an all-blank index has empty dirs —
-    # neither may crash the merge on schema inference / missing path.
-    os.makedirs(fmt.term_stats_dir(index_dir), exist_ok=True)
-    fmt.read_committed(
-        spark, fmt.doc_stats_dir(index_dir), man.doc_stats_files,
-        fmt.DOC_STATS_READ_SCHEMA,
-    ).write.mode("overwrite").parquet(fmt.doc_stats_dir(out_dir))
-    spark.read.schema(fmt.VOCAB_READ_SCHEMA).parquet(
-        fmt.vocab_dir(index_dir)
-    ).write.mode(
-        "overwrite"
-    ).partitionBy("term_bucket").parquet(fmt.vocab_dir(out_dir))
-    spark.read.schema(fmt.TERM_STATS_READ_SCHEMA).parquet(
-        fmt.term_stats_dir(index_dir)
-    ).write.mode(
-        "overwrite"
-    ).partitionBy("term_bucket").parquet(fmt.term_stats_dir(out_dir))
-    new_man = fmt.IndexManifest(
-        format_version=fmt.FORMAT_VERSION,
-        n_docs=man.n_docs,
-        total_tokens=man.total_tokens,
-        avgdl=man.avgdl,
-        n_buckets=man.n_buckets,
-        n_shards=s_new,
-        run_id=man.run_id + f"+merge{factor}",
-        complete=True,
-        stages={"merged_from": True},
-    )
-    new_man.segment_files = fmt.list_segment_files(out_dir)
-    new_man.doc_stats_files = fmt.list_doc_stats_files(out_dir)
-    fmt.save_manifest(out_dir, new_man)
-
-
 def compact_in_place(
     spark: SparkSession,
     index_dir: str,
@@ -301,12 +249,12 @@ def compact_in_place(
 ) -> None:
     """Compact an index IN PLACE under snapshot isolation: rewrite the
     committed segment rows (merging the multi-row (term, shard) groups
-    incremental appends accumulate; factor>1 also merges shards like
-    merge_shards), land the new files NEXT TO the old ones, then flip
-    the manifest to list only the new file set. Readers holding the old
-    manifest keep answering from the old files (Iceberg snapshot
-    semantics — this is what manifest.segment_files buys); new readers
-    see only the compacted files. Old files stay on disk until
+    incremental appends accumulate; factor>1 also merges every factor
+    doc-disjoint shards into one), land the new files NEXT TO the old
+    ones, then flip the manifest to list only the new file set. Readers
+    holding the old manifest keep answering from the old files (Iceberg
+    snapshot semantics — this is what manifest.segment_files buys); new
+    readers see only the compacted files. Old files stay on disk until
     vacuum_segments() expires them — run it when no reader older than
     the current snapshot remains.
 

@@ -16,14 +16,15 @@ Query plan:
      first touch and kept while a snapshot commits it; binary search
      after that); idf weights.
   2. read only the query terms' segment rows; the positions column is
-     read ONLY for phrase/near queries. bm25_topk_rows has two routes:
-     the driver route reads them from the reader's term cache
+     read ONLY for phrase/near queries. One route choice
+     (_topk_candidates) serves bm25_topk_rows and bm25_topk_df: the
+     driver route reads them from the reader's term cache
      (IndexReader.term_postings: for uncached terms, only the files
      whose directory holds them and only the row groups holding their
      rows) when the batch's summed df is at most
      DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver — no
-     Spark job; the Spark route (always taken by bm25_topk_df) scans
-     with term_bucket partition pruning + term_id predicate pushdown.
+     Spark job; the Spark route scans with term_bucket partition
+     pruning + term_id predicate pushdown.
   3. per shard: each shard holds a doc-disjoint slice of EVERY term's
      postings (shard = hash(doc_id), build.py), so one group computes
      exact final BM25 scores for its docs with a FIXED per-term float64
@@ -40,8 +41,9 @@ Query plan:
      are re-accumulated in canonical term order -> exact, rank-identical
      top-k.
   4. global merge: k*n_shards candidate rows per query -> top-k by
-     (score desc, doc_id asc): a window in bm25_topk_df, a driver sort
-     in bm25_topk_rows.
+     (score desc, doc_id asc): a driver sort (_merge_rows) on the
+     driver route and in bm25_topk_rows; a window in bm25_topk_df's
+     Spark route, which stays lazy.
 
 On the Spark route no posting list ever crosses the network to another
 shard's scorer, and the driver only ever sees k rows per query and shard.
@@ -79,11 +81,6 @@ from . import format as fmt
 # K1/B live in codec (imported above): the block-max bounds stored at
 # build time (codec.tf_saturation) and the scoring here MUST share one
 # definition or the MaxScore caps stop being upper bounds.
-
-# the environmental failures of a driver-side pyarrow read (non-local
-# filesystem, missing handler): only these fall back to a Spark route —
-# a codec or manifest defect must surface
-_LOCAL_READ_ERRORS = (OSError, NotImplementedError, pa.ArrowException)
 
 
 @dataclass
@@ -408,19 +405,15 @@ class IndexReader:
         only the query terms' term_bucket partitions: a file's term_id /
         df_part columns are read on its first touch by this reader,
         later lookups open no file — NO Spark job, and df is known
-        before any postings byte is read. Falls back to the pruned
-        Spark scan if the local read fails (e.g. a non-local filesystem
-        without a pyarrow handler); any other error is a defect and
-        propagates."""
+        before any postings byte is read. A failed read (a truncated or
+        missing segment file) propagates as pyarrow's error."""
         ids = self.ids_for(terms)
         missing = [t for t in set(terms) if t not in self._df_cache]
         if missing:
-            blist = sorted({buckets[t] for t in missing})
-            id_list = [ids[t] for t in missing]
-            try:
-                found = self._df_sidecar_scan(id_list, blist)
-            except _LOCAL_READ_ERRORS:
-                found = self._df_spark_scan(id_list, blist)
+            found = self._df_sidecar_scan(
+                [ids[t] for t in missing],
+                sorted({buckets[t] for t in missing}),
+            )
             for t in missing:
                 self._df_cache[t] = found.get(ids[t], 0)
         return {t: self._df_cache[t] for t in set(terms)}
@@ -438,21 +431,6 @@ class IndexReader:
             for tid, lo, hi in ft.spans(want):
                 out[tid] = out.get(tid, 0) + int(ft.df[lo:hi].sum())
         return out
-
-    def _df_spark_scan(
-        self, id_list: List[int], blist: List[int]
-    ) -> Dict[int, int]:
-        rows = (
-            self.segments()
-            .where(
-                F.col("term_bucket").isin(blist)
-                & F.col("term_id").isin(id_list)
-            )
-            .groupBy("term_id")
-            .agg(F.sum("df_part").alias("df"))
-            .collect()
-        )
-        return {r.term_id: int(r.df) for r in rows}
 
 
 class _FileTerms:
@@ -1045,22 +1023,10 @@ def _score_terms(
 
 
 def _shard_topk_candidates(
-    spark: SparkSession,
-    index_dir: str,
-    queries: Sequence[QuerySpec],
-    k: int,
-    reader: Optional[IndexReader],
-    prune: bool,
-    qp: Optional[_QueryPlan] = None,
-) -> Optional[DataFrame]:
+    r: IndexReader, qp: _QueryPlan, k: int, prune: bool
+) -> DataFrame:
     """Spark route: pruned segments scan -> per-shard exact top-k rows
-    (query_id, doc_id, score), k rows per (query, shard). None = no
-    query term hits the index. qp: the batch's plan when the caller
-    already built it."""
-    r = reader or IndexReader(spark, index_dir)
-    qp = qp or _plan_queries(r, queries)
-    if qp is None:
-        return None
+    (query_id, doc_id, score), k rows per (query, shard)."""
     man = r.manifest
     plan, avgdl = qp.entries, qp.avgdl
     seg = r.segments().where(
@@ -1107,33 +1073,6 @@ def _shard_topk_candidates(
     )
 
 
-def bm25_topk_df(
-    spark: SparkSession,
-    index_dir: str,
-    queries: Sequence[QuerySpec],
-    k: int = 10,
-    reader: Optional[IndexReader] = None,
-    prune: bool = True,
-) -> DataFrame:
-    """-> DataFrame(query_id string, rank int, doc_id long, score double).
-
-    Composable (stays a DataFrame for downstream joins); the global
-    merge is a window over k*n_shards candidate rows per query."""
-    cand = _shard_topk_candidates(spark, index_dir, queries, k, reader, prune)
-    if cand is None:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double"
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
 # above this pruned-postings volume (the summed df of a batch's terms) a
 # bm25_topk_rows batch stays on executors (a stop-word term at 10^12
 # docs must never be pulled to the driver); below it, driver-side
@@ -1175,6 +1114,73 @@ def _score_shards_local(
     return out
 
 
+def _topk_candidates(
+    spark: SparkSession,
+    index_dir: str,
+    queries: Sequence[QuerySpec],
+    k: int,
+    reader: Optional[IndexReader],
+    prune: bool,
+    phase_sink: Optional[Dict[str, float]] = None,
+):
+    """The one route choice of bm25_topk_rows and bm25_topk_df: plan
+    the batch, then score it on one of two routes, both scoring each
+    shard group with _score_terms:
+
+    - driver_sidecar: the batch's summed df is at most
+      DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver
+      (reader.tombstones_distributed() is False). The query terms'
+      postings come from the reader's term cache (term_postings) and
+      are grouped by shard on the driver (_score_shards_local) — NO
+      Spark job. -> [(query_id, doc_id, score)]
+    - shard_topk: every other batch — the groupBy(shard) scan
+      (_shard_topk_candidates; cogrouped with the tombstones in the
+      MASS-delete regime), not yet run. -> DataFrame(query_id, doc_id,
+      score)
+
+    -> (route, candidates): k candidates per (query, shard); None when
+    no query term hits the index."""
+    t_start = time.perf_counter()
+    r = reader or IndexReader(spark, index_dir)
+    qp = _plan_queries(r, queries)
+    if qp is None:
+        return None
+    # MASS-delete regime: the driver route needs the driver numpy
+    # tombstone union — above the gate it would materialize it, so the
+    # batch routes to the cogrouped shard path instead (exact, fully
+    # distributed; higher per-query floor, which is the documented
+    # trade until compaction purges)
+    on_driver = (
+        not r.tombstones_distributed()
+        and qp.total_df <= DRIVER_SCORE_MAX_POSTINGS
+    )
+    _phase(phase_sink, "plan_s", t_start)
+    if on_driver:
+        return "driver_sidecar", _score_shards_local(
+            r, qp, k, prune, phase_sink
+        )
+    return "shard_topk", _shard_topk_candidates(r, qp, k, prune)
+
+
+def _merge_rows(
+    rows: Iterable[Tuple[str, int, float]], k: int
+) -> List[Tuple[str, int, int, float]]:
+    """The driver's global merge: candidate (query_id, doc_id, score)
+    rows -> each query's top-k (query_id, rank, doc_id, score) by
+    (score desc, doc_id asc), queries in id order."""
+    by_q: Dict[str, List[Tuple[float, int]]] = {}
+    for qid, doc_id, score in rows:
+        by_q.setdefault(qid, []).append((score, doc_id))
+    out: List[Tuple[str, int, int, float]] = []
+    for qid in sorted(by_q):
+        best = sorted(by_q[qid], key=lambda x: (-x[0], x[1]))[:k]
+        out.extend(
+            (qid, rank, doc_id, score)
+            for rank, (score, doc_id) in enumerate(best, start=1)
+        )
+    return out
+
+
 def bm25_topk_rows(
     spark: SparkSession,
     index_dir: str,
@@ -1186,22 +1192,11 @@ def bm25_topk_rows(
 ) -> List[Tuple[str, int, int, float]]:
     """Low-latency variant: the global merge runs driver-side over the
     candidate rows (the reference's bounded-heap global merge, SURVEY
-    §2.5 T3) instead of a second shuffle. The batch takes one of two
-    routes, both scoring each shard group with _score_terms:
-
-    - driver_sidecar: the batch's summed df is at most
-      DRIVER_SCORE_MAX_POSTINGS and its tombstones fit the driver
-      (reader.tombstones_distributed() is False). The query terms'
-      postings come from the reader's term cache (term_postings) and
-      are grouped by shard on the driver (_score_shards_local) — NO
-      Spark job.
-    - shard_topk: every other batch — bm25_topk_df's groupBy(shard)
-      route (_shard_topk_candidates; cogrouped with the tombstones in
-      the MASS-delete regime).
-
-    Both routes are rank- and score-identical to bm25_topk_df (same
-    float64 ops, same total order). The driver route falls back to the
-    Spark route on environmental failures only.
+    §2.5 T3) on either route of _topk_candidates; the shard_topk
+    route's candidates are collected first. Both routes are rank- and
+    score-identical to bm25_topk_df (same float64 ops, same total
+    order). A failed driver read (e.g. a truncated segment file)
+    propagates as pyarrow's error and starts no Spark job.
 
     phase_sink: optional dict; when given, accumulates wall seconds per
     phase ("plan_s" df/bucket lookups + weight planning, "read_s"
@@ -1212,60 +1207,60 @@ def bm25_topk_rows(
     and records "path" = driver_sidecar | shard_topk.
 
     -> [(query_id, rank, doc_id, score)]"""
-    t_start = time.perf_counter()
     if phase_sink is not None:
         phase_sink.setdefault("files_read", 0)
-    r = reader or IndexReader(spark, index_dir)
-    qp = _plan_queries(r, queries)
-    if qp is None:
-        return []
-    # MASS-delete regime: the driver route needs the driver numpy
-    # tombstone union — above the gate it would materialize it, so the
-    # batch routes to the cogrouped shard path instead (exact, fully
-    # distributed; higher per-query floor, which is the documented
-    # trade until compaction purges)
-    on_driver = (
-        not r.tombstones_distributed()
-        and qp.total_df <= DRIVER_SCORE_MAX_POSTINGS
+    routed = _topk_candidates(
+        spark, index_dir, queries, k, reader, prune, phase_sink
     )
-    _phase(phase_sink, "plan_s", t_start)
-    rows = None
-    if on_driver:
-        # small pruned volume (known exactly from df): score on the
-        # driver (~ms, the real latency path). Fallback is for
-        # ENVIRONMENTAL failures only (non-local fs, missing pyarrow
-        # handler) — a genuine defect (codec corruption, bad manifest)
-        # must surface, not silently downgrade to the Spark path; the
-        # failed attempt's partial phase timings are rolled back so
-        # triage numbers stay attributable.
-        saved = dict(phase_sink) if phase_sink is not None else None
-        try:
-            rows = _score_shards_local(r, qp, k, prune, phase_sink)
-            path = "driver_sidecar"
-        except _LOCAL_READ_ERRORS:
-            if phase_sink is not None:
-                phase_sink.clear()
-                phase_sink.update(saved)
-    if rows is None:
-        cand = _shard_topk_candidates(
-            spark, index_dir, queries, k, r, prune, qp
-        )
-        rows = [
-            (row.query_id, row.doc_id, row.score) for row in cand.collect()
-        ]
-        path = "shard_topk"
+    if routed is None:
+        return []
+    path, cand = routed
+    if path == "shard_topk":
+        cand = [(r.query_id, r.doc_id, r.score) for r in cand.collect()]
     if phase_sink is not None:
         phase_sink["path"] = path
     t_merge = time.perf_counter()
-    by_q: Dict[str, List[Tuple[float, int]]] = {}
-    for qid, doc_id, score in rows:
-        by_q.setdefault(qid, []).append((score, doc_id))
-    out: List[Tuple[str, int, int, float]] = []
-    for qid in sorted(by_q):
-        best = sorted(by_q[qid], key=lambda x: (-x[0], x[1]))[:k]
-        out.extend(
-            (qid, rank, doc_id, score)
-            for rank, (score, doc_id) in enumerate(best, start=1)
-        )
+    out = _merge_rows(cand, k)
     _phase(phase_sink, "merge_s", t_merge)
     return out
+
+
+def bm25_topk_df(
+    spark: SparkSession,
+    index_dir: str,
+    queries: Sequence[QuerySpec],
+    k: int = 10,
+    reader: Optional[IndexReader] = None,
+    prune: bool = True,
+) -> DataFrame:
+    """-> DataFrame(query_id string, rank int, doc_id long, score double),
+    composable for downstream joins, on _topk_candidates' route:
+
+    - driver_sidecar: the driver's merged rows (_merge_rows) as an
+      Arrow-backed local DataFrame — no Spark job. The index is read
+      when bm25_topk_df is called, not when the DataFrame is acted on;
+      the reader pins its snapshot, so the answer is the same either
+      way, but read errors surface here.
+    - shard_topk: stays lazy and distributed — the global merge is a
+      window over the k*n_shards candidate rows per query."""
+    routed = _topk_candidates(spark, index_dir, queries, k, reader, prune)
+    if routed is None:
+        return spark.createDataFrame(
+            [], "query_id string, rank int, doc_id long, score double"
+        )
+    path, cand = routed
+    if path == "driver_sidecar":
+        cols = list(zip(*_merge_rows(cand, k))) or [()] * 4
+        types = (pa.string(), pa.int32(), pa.int64(), pa.float64())
+        return spark.createDataFrame(pa.table(
+            [pa.array(c, t) for c, t in zip(cols, types)],
+            names=["query_id", "rank", "doc_id", "score"],
+        ))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", "score")
+    )

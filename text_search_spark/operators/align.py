@@ -25,7 +25,6 @@ from typing import Iterator, List
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..kernels import (
     create_suffix_array,
@@ -271,32 +270,3 @@ def subtitle_align(
             )
 
     return pairs.mapInPandas(run, schema=SUBTITLE_SCHEMA)
-
-
-def search_and_align(
-    spark,
-    index_dir: str,
-    queries: List[tuple],
-    corpus: DataFrame,
-    k: int = 3,
-) -> DataFrame:
-    """End-to-end reference-capability composite (J5 `align_queries`):
-    BM25 top-k candidate retrieval through the inverted index, then exact
-    span alignment of each query against its candidates.
-
-    queries: [(query_id, query_text)]; corpus: (doc_id, text).
-    The candidate->text join is an equi hash join on doc_id (the snippet
-    fetch the reference does by slicing its in-memory array)."""
-    from ..index.query import QuerySpec, bm25_topk_df
-
-    specs = [QuerySpec(qid, text.split(), "or") for qid, text in queries]
-    topk = bm25_topk_df(spark, index_dir, specs, k=k)
-    qdf = spark.createDataFrame(
-        queries, "query_id string, query_text string"
-    )
-    pairs = (
-        topk.join(F.broadcast(qdf), "query_id")
-        .join(corpus.select("doc_id", F.col("text").alias("doc_text")), "doc_id")
-        .select("query_id", "query_text", "doc_id", "doc_text")
-    )
-    return align_spans(pairs)

@@ -582,11 +582,6 @@ def simhash(
     return summed.select(F.col(id_col), sim.alias("simhash"))
 
 
-def hamming64(a, b):
-    """Hamming distance between two long columns (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",

@@ -53,10 +53,6 @@ def host_col(url_col) -> F.Column:
     return F.lower(F.regexp_extract(url_col, _HOST_RE, 1))
 
 
-def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
-    return df.withColumn("host", host_col(F.col(url_col)))
-
-
 def latest_snapshot(
     df: DataFrame,
     url_col: str = "url",

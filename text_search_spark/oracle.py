@@ -185,25 +185,3 @@ def bm25_topk(
             scores[doc_id] = scores.get(doc_id, 0.0) + w * (f * (K1 + 1.0)) / denom
     ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
     return ranked[:k]
-
-
-def bm25_all_queries(
-    index: OracleIndex, queries, k: int = 10
-) -> List[Tuple[str, int, int, float]]:
-    """[(query_id, rank, doc_id, score)] for a corpus.Query list,
-    forwarding a per-query `window` when the query carries one (a NEAR
-    query scored with the default window would diverge silently)."""
-    rows = []
-    for q in queries:
-        for rank, (doc_id, score) in enumerate(
-            bm25_topk(
-                index,
-                q.terms,
-                k=k,
-                mode=q.mode,
-                window=getattr(q, "window", 8),
-            ),
-            start=1,
-        ):
-            rows.append((q.query_id, rank, doc_id, score))
-    return rows
