@@ -15,6 +15,8 @@ doc_id tie-break, so cross-engine last-ulp noise cannot flip a rank.
 
 from __future__ import annotations
 
+import functools
+import glob
 import hashlib
 import math
 import os
@@ -42,8 +44,26 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+@functools.lru_cache(maxsize=None)
+def _source_fingerprint() -> str:
+    """md5 over the text_search_spark package's .py sources (relative
+    path and bytes): a cached index built by other code is never
+    reused."""
+    root = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "text_search_spark")
+    h = hashlib.md5()
+    for p in sorted(glob.glob(os.path.join(root, "**", "*.py"),
+                              recursive=True)):
+        h.update(os.path.relpath(p, root).encode())
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def _index_dir_for(sf_dir: str) -> str:
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    key = hashlib.md5(
+        (sf_dir + _source_fingerprint()).encode()
+    ).hexdigest()[:10]
     return os.path.join(
         os.environ.get("TSS_CACHE", "/tmp/tss_cache"), f"ix_{key}"
     )
@@ -104,7 +124,7 @@ def _ensure_deleted_index(spark: SparkSession, sf_dir: str) -> str:
 def _top_terms(spark: SparkSession, index_dir: str, k: int, min_len: int = 5):
     """Deterministic query-term derivation: top-k terms by (cf desc, term
     asc) among terms of length >= min_len. Same rule as the SQL oracles."""
-    ts = spark.read.parquet(ixfmt.term_stats_dir(index_dir))
+    ts = IndexReader(spark, index_dir).term_stats()
     rows = (
         ts.where(F.length("term") >= min_len)
         .orderBy(F.desc("cf"), F.asc("term"))
@@ -279,20 +299,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the streaming append path pinned through the driver gate: the
         # corpus arrives as TWO micro-batches through the foreachBatch
         # body (streaming/incremental._append_batch — same code the
-        # Structured Streaming query runs), term_stats rebuilt, then the
-        # same single-term workload — must equal the batch-built oracle
-        # exactly (scoring stats come from the final manifest; segments
-        # append per batch and the scorer merges rows per (term, shard))
+        # Structured Streaming query runs), then the same single-term
+        # workload — must equal the batch-built oracle exactly (scoring
+        # stats come from the final manifest; segments append per batch
+        # and the scorer merges rows per (term, shard))
         import shutil
 
-        from text_search_spark.streaming.incremental import (
-            _append_batch,
-            rebuild_term_stats,
-        )
+        from text_search_spark.streaming.incremental import _append_batch
 
         d = _index_dir_for(sf_dir) + "_inc"
         man = _cached_manifest(d)
-        if man is None or not man.stages.get("term_stats"):
+        if man is None or not man.stages.get("stream:1"):
             shutil.rmtree(d, ignore_errors=True)
             docs = prepare_corpus(
                 _t(spark, sf_dir, "documents"), doc_id_col="doc_id"
@@ -301,7 +318,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             rest = docs.where(F.col("doc_id") % 2 == 1)
             _append_batch(spark, half, d, 0)
             _append_batch(spark, rest, d, 1)
-            rebuild_term_stats(spark, d)
         terms = _top_terms(spark, d, 5)
         specs = [QuerySpec(t, [t], "or") for t in terms]
         out = bm25_topk_df(spark, d, specs, k=10)

@@ -40,7 +40,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from text_search_spark.index import format as ixfmt
     from text_search_spark.index.build import build_index, prepare_corpus
     from text_search_spark.index.query import (
         IndexReader,
@@ -141,7 +140,7 @@ def main() -> None:
     extra["index_docs_per_sec"] = round(n_docs / timings["index_build"], 1)
 
     # derive a deterministic query workload from the index's term stats
-    ts = spark.read.parquet(ixfmt.term_stats_dir(index_dir))
+    ts = IndexReader(spark, index_dir).term_stats()
     terms = [
         r.term
         for r in ts.where(F.length("term") >= 4)

@@ -143,7 +143,7 @@ def main() -> None:
     total_s = build1_s + resume_s
 
     # ---- oracle spot-check: single-term BM25 top-10 on head terms ----
-    ts = spark.read.parquet(ixfmt.term_stats_dir(INDEX_DIR))
+    ts = IndexReader(spark, INDEX_DIR).term_stats()
     terms = [
         r.term
         for r in ts.where(F.length("term") >= 5)

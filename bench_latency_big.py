@@ -179,7 +179,7 @@ def main() -> None:
     out["n_buckets"], out["n_shards"] = man.n_buckets, man.n_shards
 
     # deterministic head-term workload (same rule as bench.py):
-    # term_stats view is exact across the appends (round-7 deltas)
+    # term_stats is a view of the committed segments, exact across appends
     reader = IndexReader(spark, INDEX_DIR)
     terms = [
         r.term

@@ -214,7 +214,7 @@ def child(cores: int) -> None:
     build_s = min(runs)
     cold_s = runs[0]
 
-    ts = spark.read.parquet(ixfmt.term_stats_dir(ix))
+    ts = IndexReader(spark, ix).term_stats()
     terms = [
         r.term
         for r in ts.where(F.length("term") >= 5)

@@ -8,8 +8,11 @@ time travel):
   ... vacuum [--grace-s 3600] [--retain-last 1]
   ... expire [--retain-last 2]
   ... delete --ids-parquet /data/takedowns.parquet [--id-col doc_id]
-  ... stats (--fold [--max-delta-files 64] | --rebuild)
   ... history
+
+Per-term df/cf needs no maintenance subcommand: IndexReader.term_stats
+sums the committed segment rows at read time, so it is exact after
+every append, delete and purge.
 
 --index must be a LOCAL (or locally-mounted, e.g. NFS/fuse) path:
 manifest, snapshot-claim, tombstone, and vacuum IO go through os-level
@@ -41,8 +44,6 @@ def main() -> None:
 
     c = sub.add_parser("compact", help="in-place compaction (+ purge)")
     c.add_argument("--factor", type=int, default=1)
-    c.add_argument("--multi-file-buckets", action="store_true",
-                   help="skip the one-file-per-bucket rewrite")
 
     v = sub.add_parser("vacuum", help="expire unreferenced data files")
     v.add_argument("--grace-s", type=float, default=3600.0)
@@ -54,18 +55,6 @@ def main() -> None:
     d = sub.add_parser("delete", help="tombstone doc_ids from a parquet")
     d.add_argument("--ids-parquet", required=True)
     d.add_argument("--id-col", default="doc_id")
-
-    s = sub.add_parser(
-        "stats",
-        help="term_stats maintenance: --fold bounds the per-batch "
-             "delta-file list (cheap, batch-sized); --rebuild "
-             "re-baselines from a full segment scan (first build or "
-             "post-purge)",
-    )
-    g = s.add_mutually_exclusive_group(required=True)
-    g.add_argument("--fold", action="store_true")
-    g.add_argument("--rebuild", action="store_true")
-    s.add_argument("--max-delta-files", type=int, default=64)
 
     sub.add_parser("history", help="list retained snapshots")
 
@@ -92,12 +81,7 @@ def main() -> None:
     if args.cmd == "compact":
         from text_search_spark.index.merge import compact_in_place
 
-        compact_in_place(
-            spark,
-            args.index,
-            factor=args.factor,
-            one_file_per_bucket=not args.multi_file_buckets,
-        )
+        compact_in_place(spark, args.index, factor=args.factor)
         man = fmt.load_manifest(args.index)
         print(json.dumps({
             "snapshot_id": man.snapshot_id,
@@ -117,28 +101,6 @@ def main() -> None:
         ids = spark.read.parquet(args.ids_parquet)
         n = delete_docs(spark, args.index, ids, id_col=args.id_col)
         print(json.dumps({"tombstoned": n}))
-    elif args.cmd == "stats":
-        from text_search_spark.streaming.incremental import (
-            fold_term_stats_deltas,
-            rebuild_term_stats,
-        )
-
-        if args.rebuild:
-            rebuild_term_stats(spark, args.index)
-            man = fmt.load_manifest(args.index)
-            print(json.dumps({
-                "rebuilt": True,
-                "term_stats_valid": bool(man.stages.get("term_stats")),
-            }))
-        else:
-            ran = fold_term_stats_deltas(
-                spark, args.index, max_delta_files=args.max_delta_files
-            )
-            man = fmt.load_manifest(args.index)
-            print(json.dumps({
-                "folded": ran,
-                "delta_files": len(man.term_stats_delta_files or []),
-            }))
     spark.stop()
 
 

@@ -1,6 +1,6 @@
 """The driver build route (build.land_on_driver) against the Spark route:
 with the token gate forced each way, a fresh build and a stream batch
-land the same doc_stats, vocab, segment and term_stats rows, keep the
+land the same doc_stats, vocab and segment rows, keep the
 Spark route's collision errors, checkpoints, metrics rows and retry
 semantics, and run only the corpus collect as a Spark job."""
 
@@ -63,7 +63,6 @@ def _build_rows(spark, ix):
             fmt.SEG_READ_SCHEMA, SEG_COLS,
         ),
         "vocab": rd(fmt.vocab_dir(ix), fmt.VOCAB_READ_SCHEMA),
-        "term_stats": rd(fmt.term_stats_dir(ix), fmt.TERM_STATS_READ_SCHEMA),
         "metrics": sorted(
             (r.stage, r.unit, r.docs, r.postings, r.bytes)
             for r in spark.read.parquet(fmt.metrics_dir(ix)).collect()
@@ -176,7 +175,7 @@ def test_duplicate_urls_raise_doc_id_collision(
 @pytest.mark.parametrize(
     "stage",
     ["doc_stats", "vocab", "segments:0", "segments:1", "segments:2",
-     "segments:3", "term_stats"],
+     "segments:3"],
 )
 def test_driver_fail_after_then_resume(
     spark, tmp_path, monkeypatch, spark_built, stage
@@ -192,7 +191,7 @@ def test_driver_fail_after_then_resume(
     assert man.stages.get(stage) and not man.complete
     assert _build(spark, corpus, ix, run_id="resume") == "spark"
     got = _build_rows(spark, ix)
-    for table in ("doc_stats", "segments", "vocab", "term_stats", "stats"):
+    for table in ("doc_stats", "segments", "vocab", "stats"):
         assert got[table] == spark_built[4][table], table
 
 
@@ -212,10 +211,6 @@ def _stream_rows(spark, ix):
             for r in spark.read.schema(fmt.VOCAB_READ_SCHEMA)
             .parquet(fmt.vocab_dir(ix))
             .collect()
-        ),
-        "term_stats": _read(
-            spark, fmt.term_stats_deltas_dir(ix),
-            man.term_stats_delta_files, fmt.TERM_STATS_READ_SCHEMA,
         ),
         "stats": (man.n_docs, man.total_tokens, man.avgdl, man.n_buckets,
                   man.n_shards, sorted(man.stages)),

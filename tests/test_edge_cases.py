@@ -100,7 +100,7 @@ def test_all_blank_corpus_builds_and_queries_empty(spark, tmp_path):
     parquet schema inference on the empty segments/vocab/tokens_tmp dirs
     (explicit read schemas; regression for round-2 fix)."""
     from text_search_spark.index import format as ixfmt
-    from text_search_spark.index.query import bm25_topk_rows
+    from text_search_spark.index.query import IndexReader, bm25_topk_rows
 
     pdf = spark.createDataFrame(
         [(1, "..."), (2, ""), (3, "!!! ???")],
@@ -130,6 +130,7 @@ def test_all_blank_corpus_builds_and_queries_empty(spark, tmp_path):
             ).count()
             == 0
         )
+        assert IndexReader(spark, ix).term_stats().count() == 0
 
 
 def test_dedup_lines_cross_doc(spark):

@@ -52,6 +52,16 @@ def test_census_is_exactly_the_checked_window():
     )
 
 
+def test_index_cache_dir_keys_on_source_fingerprint(monkeypatch):
+    """A cached index is reused only by the package sources that built
+    it: another source fingerprint gives another cache dir for the same
+    sf_dir."""
+    d = entry_mod._index_dir_for(SF_DIR)
+    assert entry_mod._index_dir_for(SF_DIR) == d
+    monkeypatch.setattr(entry_mod, "_source_fingerprint", lambda: "edited")
+    assert entry_mod._index_dir_for(SF_DIR) != d
+
+
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_entry_vs_duckdb(spark, ddb, name):
     assert name in _QUERIES, f"oracle_sql has {name} but queries() doesn't"

@@ -16,9 +16,8 @@ FS_CALL = re.compile(
     r"os\.(rename|replace|remove|unlink|link|makedirs|walk|listdir)\("
     r"|shutil\.(rmtree|move|copy)"
 )
-# build.py: the encoder's spool unlink, the term_stats stage's makedirs,
-# the tokens_tmp cleanup
-MAX_CALLS = 3
+# build.py: the encoder's spool unlink, the tokens_tmp cleanup
+MAX_CALLS = 2
 
 
 def test_direct_fs_calls_only_shrink():

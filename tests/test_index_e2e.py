@@ -15,7 +15,11 @@ from text_search_spark.index.build import (
     hash_doc_id_py,
     prepare_corpus,
 )
-from text_search_spark.index.query import QuerySpec, bm25_topk_df
+from text_search_spark.index.query import (
+    IndexReader,
+    QuerySpec,
+    bm25_topk_df,
+)
 from text_search_spark.oracle import bm25_topk, build_oracle_index
 
 N_DOCS = 800
@@ -48,7 +52,7 @@ def test_manifest_and_stats(spark, built):
     assert man.n_docs == N_DOCS == oracle_ix.n_docs
     assert math.isclose(man.avgdl, oracle_ix.avgdl, rel_tol=0, abs_tol=0)
 
-    ts = spark.read.parquet(fmt.term_stats_dir(index_dir))
+    ts = IndexReader(spark, index_dir).term_stats()
     rows = {r.term: (r.df, r.cf) for r in ts.collect()}
     assert len(rows) == len(oracle_ix.tf)
     for term, docs in oracle_ix.tf.items():

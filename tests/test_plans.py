@@ -463,10 +463,6 @@ def test_spark_stream_batch_single_grouper_scan(spark, tmp_path, monkeypatch):
                 ixfmt.segments_dir(ix), man.segment_files,
                 ixfmt.SEG_READ_SCHEMA,
             ),
-            "term_stats": read(
-                ixfmt.term_stats_deltas_dir(ix), man.term_stats_delta_files,
-                ixfmt.TERM_STATS_READ_SCHEMA,
-            ),
             "vocab": sorted(
                 tuple(r)
                 for r in spark.read.schema(ixfmt.VOCAB_READ_SCHEMA)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from text_search_spark.corpus import generate_pages
 from text_search_spark.index import format as fmt
 from text_search_spark.index.build import build_index, prepare_corpus
+from text_search_spark.index.query import IndexReader
 
 N_DOCS = 300
 
@@ -40,9 +41,7 @@ def _index_fingerprint(spark, index_dir):
         .collect()
     )
     ts = (
-        spark.read.parquet(fmt.term_stats_dir(index_dir))
-        .orderBy("term_id")
-        .collect()
+        IndexReader(spark, index_dir).term_stats().orderBy("term_id").collect()
     )
     return [tuple(r) for r in seg], [tuple(r) for r in ds], [tuple(r) for r in ts]
 

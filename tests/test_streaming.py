@@ -16,10 +16,7 @@ from text_search_spark.index.build import (
 )
 from text_search_spark.index.query import IndexReader, QuerySpec, bm25_topk_df
 from text_search_spark.textnorm import tokenize
-from text_search_spark.streaming.incremental import (
-    incremental_index,
-    rebuild_term_stats,
-)
+from text_search_spark.streaming.incremental import incremental_index
 
 N_DOCS = 400
 
@@ -76,17 +73,15 @@ def test_streaming_matches_batch(spark, tmp_path):
 
     assert result(stream_dir) == result(batch_dir)
 
-    # derived stats rebuild works
-    rebuild_term_stats(spark, stream_dir)
-    ts_s = {
-        (r.term, r.df, r.cf)
-        for r in spark.read.parquet(fmt.term_stats_dir(stream_dir)).collect()
-    }
-    ts_b = {
-        (r.term, r.df, r.cf)
-        for r in spark.read.parquet(fmt.term_stats_dir(batch_dir)).collect()
-    }
-    assert ts_s == ts_b
+    # the term_stats view of the streamed segments equals the batch's
+    ts_s, ts_b = (
+        {
+            (r.term, r.df, r.cf)
+            for r in IndexReader(spark, ix).term_stats().collect()
+        }
+        for ix in (stream_dir, batch_dir)
+    )
+    assert ts_s and ts_s == ts_b
 
 
 def test_batch_append_idempotent_under_retry(spark, tmp_path, monkeypatch):
@@ -388,206 +383,3 @@ def test_auto_compact_bounds_file_count_and_stays_identical(
         )
 
     assert result(maintained) == result(plain)
-
-
-def test_incremental_term_stats_deltas(spark, tmp_path):
-    """Round-7 (VERDICT item 7): streamed appends maintain term_stats
-    as base (+) per-batch delta files — the committed view stays
-    EXACTLY equal to a fresh rebuild without ever running one, the
-    validity flag survives appends, and a rebuild folds the consumed
-    deltas into the new base and removes them."""
-    from text_search_spark.streaming.incremental import _append_batch
-
-    pages = generate_pages(120)
-    pdf = spark.createDataFrame(
-        [(p.url, p.text) for p in pages], "url string, text string"
-    )
-    corpus = prepare_corpus(pdf, url_col="url")
-    rows = corpus.collect()
-    dfs = [
-        spark.createDataFrame(c, "doc_id long, url string, text string")
-        for c in (rows[:40], rows[40:80], rows[80:])
-    ]
-
-    ix = str(tmp_path / "ts_ix")
-    _append_batch(spark, dfs[0], ix, batch_id=0)
-    # never-rebuilt base: the view is the sum of deltas alone
-    view0 = {
-        (r.term, r.df, r.cf)
-        for r in IndexReader(spark, ix).term_stats().collect()
-    }
-    rebuild_term_stats(spark, ix)
-    man = fmt.load_manifest(ix)
-    assert man.stages.get("term_stats") and not man.term_stats_delta_files
-    base0 = {
-        (r.term, r.df, r.cf)
-        for r in IndexReader(spark, ix).term_stats().collect()
-    }
-    assert view0 == base0, "delta-only view diverged from rebuilt base"
-
-    # two more appends: NO rebuild — flag stays up, deltas recorded
-    _append_batch(spark, dfs[1], ix, batch_id=1)
-    _append_batch(spark, dfs[2], ix, batch_id=2)
-    man = fmt.load_manifest(ix)
-    assert man.stages.get("term_stats") is True
-    assert len(man.term_stats_delta_files) >= 2
-    view = {
-        (r.term, r.df, r.cf)
-        for r in IndexReader(spark, ix).term_stats().collect()
-    }
-
-    # ground truth: a batch build over the identical full corpus
-    batch_dir = str(tmp_path / "ts_batch_ix")
-    build_index(spark, corpus, batch_dir, n_buckets=4, n_shards=2,
-                bucket_groups=1)
-    want = {
-        (r.term, r.df, r.cf)
-        for r in spark.read.parquet(
-            fmt.term_stats_dir(batch_dir)
-        ).collect()
-    }
-    assert view == want
-
-    # rebuild folds the deltas: same values, delta list cleared, files
-    # physically removed (delta_grace_s=0 — the production default
-    # keeps them for a landing-window grace, ADVICE round-8)
-    rebuild_term_stats(spark, ix, delta_grace_s=0)
-    man = fmt.load_manifest(ix)
-    assert man.stages.get("term_stats") and not man.term_stats_delta_files
-    base2 = {
-        (r.term, r.df, r.cf)
-        for r in IndexReader(spark, ix).term_stats().collect()
-    }
-    assert base2 == want
-    assert not [
-        f
-        for f in os.listdir(fmt.term_stats_deltas_dir(ix))
-        if f.endswith(".parquet")
-    ]
-
-
-def test_fold_term_stats_deltas(spark, tmp_path):
-    """Round-7: folding bounds the per-batch delta-file list — after
-    the fold the view is unchanged (equals a fresh rebuild), consumed
-    files are gone, and the validity flag is untouched."""
-    from text_search_spark.streaming.incremental import (
-        _append_batch,
-        fold_term_stats_deltas,
-    )
-
-    pages = generate_pages(90)
-    pdf = spark.createDataFrame(
-        [(p.url, p.text) for p in pages], "url string, text string"
-    )
-    corpus = prepare_corpus(pdf, url_col="url")
-    rows = corpus.collect()
-
-    ix = str(tmp_path / "fold_ts_ix")
-    for b in range(3):
-        _append_batch(
-            spark,
-            spark.createDataFrame(
-                rows[30 * b: 30 * (b + 1)],
-                "doc_id long, url string, text string",
-            ),
-            ix,
-            batch_id=b,
-        )
-    man = fmt.load_manifest(ix)
-    n_before = len(man.term_stats_delta_files)
-    assert n_before >= 3
-    want = {
-        (r.term, r.df, r.cf)
-        for r in IndexReader(spark, ix).term_stats().collect()
-    }
-
-    # delta_grace_s=0: this single-process test asserts immediate
-    # physical removal; the production default keeps consumed files for
-    # a landing-window grace so readers pinned to the prior snapshot
-    # don't lose their delta union mid-life (ADVICE round-8)
-    assert not fold_term_stats_deltas(
-        spark, ix, max_delta_files=8, delta_grace_s=0
-    )
-    assert fold_term_stats_deltas(
-        spark, ix, max_delta_files=2, delta_grace_s=0
-    )
-    man = fmt.load_manifest(ix)
-    assert len(man.term_stats_delta_files) == 1
-    assert man.term_stats_delta_files[0].startswith("fold-")
-    got = {
-        (r.term, r.df, r.cf)
-        for r in IndexReader(spark, ix).term_stats().collect()
-    }
-    assert got == want
-    # consumed per-batch files physically removed; only the fold stays
-    left = [
-        f
-        for f in os.listdir(fmt.term_stats_deltas_dir(ix))
-        if f.endswith(".parquet")
-    ]
-    assert len(left) == 1 and left[0].startswith("fold-")
-    # still exact against a rebuild
-    rebuild_term_stats(spark, ix)
-    man = fmt.load_manifest(ix)
-    assert man.stages.get("term_stats") and not man.term_stats_delta_files
-    base = {
-        (r.term, r.df, r.cf)
-        for r in IndexReader(spark, ix).term_stats().collect()
-    }
-    assert base == want
-
-
-def test_term_stats_maintenance_serialized(spark, tmp_path):
-    """Round-8 ADVICE fix: fold and rebuild are one-at-a-time on
-    .term_stats.lock — a fold racing a rebuild would double-count df/cf
-    (the rebuild bakes consumed deltas into the new base while the
-    fold's rebased commit re-adds the same sums as a fold file). A held
-    live lock makes the opportunistic fold a no-op and the explicit
-    rebuild a loud error; a stale lock (dead owner, same host) is
-    broken and the claim proceeds."""
-    import os
-    import socket
-
-    from text_search_spark.streaming.incremental import (
-        _append_batch,
-        fold_term_stats_deltas,
-        rebuild_term_stats,
-    )
-
-    pages = generate_pages(40)
-    pdf = spark.createDataFrame(
-        [(p.url, p.text) for p in pages], "url string, text string"
-    )
-    rows = prepare_corpus(pdf, url_col="url").collect()
-    ix = str(tmp_path / "ts_lock_ix")
-    for b in range(3):
-        _append_batch(
-            spark,
-            spark.createDataFrame(
-                rows[10 * b: 10 * (b + 1)],
-                "doc_id long, url string, text string",
-            ),
-            ix,
-            batch_id=b,
-        )
-
-    lock = os.path.join(ix, ".term_stats.lock")
-    me = f"{os.getpid()}@{socket.gethostname()}"  # this pid IS alive
-    with open(lock, "w") as fh:
-        fh.write(me)
-    # live lock: fold skips (False even though >2 deltas accumulated),
-    # rebuild refuses loudly
-    assert not fold_term_stats_deltas(
-        spark, ix, max_delta_files=2, delta_grace_s=0
-    )
-    with pytest.raises(RuntimeError, match="one-at-a-time"):
-        rebuild_term_stats(spark, ix)
-    os.remove(lock)
-
-    # stale lock (dead pid on this host): broken atomically, fold runs
-    with open(lock, "w") as fh:
-        fh.write(f"999999999@{socket.gethostname()}")
-    assert fold_term_stats_deltas(
-        spark, ix, max_delta_files=2, delta_grace_s=0
-    )
-    assert not os.path.exists(lock)  # released after the fold

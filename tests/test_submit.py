@@ -120,13 +120,6 @@ def test_submit_maintain_cli(spark, tmp_path, monkeypatch):
         ids = str(tmp_path / "takedowns.parquet")
         pd.DataFrame({"doc_id": list(range(0, 60, 3))}).to_parquet(ids)
         run(submit_maintain, ["--index", ix, "delete", "--ids-parquet", ids])
-        # stats ops (round-7): rebuild re-baselines; fold is a no-op at
-        # this delta count and a fold when forced down to 0
-        run(submit_maintain, ["--index", ix, "stats", "--rebuild"])
-        assert ixfmt.load_manifest(ix).stages.get("term_stats")
-        run(submit_maintain, [
-            "--index", ix, "stats", "--fold", "--max-delta-files", "0",
-        ])
         run(submit_maintain, ["--index", ix, "compact"])
         run(submit_maintain, ["--index", ix, "expire", "--retain-last", "1"])
         run(submit_maintain, [

@@ -1050,9 +1050,9 @@ def land_on_driver(
     tag: Optional[str] = None,
     bucket_groups: int = 1,
 ) -> Dict[str, List[str]]:
-    """Land collected (doc_id, url, tokens) rows as the doc_stats, vocab,
-    segment and term_stats tables, in process, with the Spark route's own
-    Arrow code: _doc_grouper, then one NumPy lexsort on (term_id, shard,
+    """Land collected (doc_id, url, tokens) rows as the doc_stats, vocab
+    and segment tables, in process, with the Spark route's own Arrow
+    code: _doc_grouper, then one NumPy lexsort on (term_id, shard,
     doc_id) in place of the shuffle and sortWithinPartitions, then
     _segment_builder. Each partitioned table gets one file per
     term_bucket=N directory, term-sorted; segment row groups are bounded
@@ -1065,14 +1065,13 @@ def land_on_driver(
     on_stage(stage, postings=, nbytes=) runs after each stage's files
     are in place: doc_stats, vocab, segments:0 ..
     segments:{bucket_groups-1} (each with its bucket group's postings and
-    postings bytes), term_stats.
+    postings bytes).
 
     tag None: a fresh build; files go straight into the table dirs (the
-    manifest commit publishes them) and term_stats is the partitioned
-    base table. tag "batch{N}-": a stream batch; each table lands through
-    fmt.land under the tag (a retry replaces the tag's files), term_stats
-    is one unpartitioned delta file under term_stats_deltas/, and the
-    landed files are returned per table for the caller's commit."""
+    manifest commit publishes them). tag "batch{N}-": a stream batch;
+    each table lands through fmt.land under the tag (a retry replaces
+    the tag's files), and the landed files are returned per table for
+    the caller's commit."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1080,7 +1079,7 @@ def land_on_driver(
 
     name = "part-00000.parquet"
     landed: Dict[str, List[str]] = {
-        "doc_stats": [], "vocab": [], "segments": [], "term_stats": []
+        "doc_stats": [], "vocab": [], "segments": []
     }
     put = partial(_put, landed, tag)
 
@@ -1174,36 +1173,6 @@ def land_on_driver(
             nbytes=int(nbytes[in_g].sum()),
         )
 
-    # df/cf per term: segment rows come out in term_id order, so one
-    # reduceat per column sums a term's per-shard partials
-    tid = seg.column("term_id").to_numpy()
-    starts = np.flatnonzero(np.diff(tid, prepend=tid[:1] - 1))
-    ts_ids = tid[starts]
-    sorter = np.argsort(term_ids)
-    term_stats = pa.table(
-        {
-            "term": terms.take(
-                sorter[np.searchsorted(term_ids, ts_ids, sorter=sorter)]
-            ),
-            "term_id": ts_ids,
-            "df": np.add.reduceat(df_part, starts),
-            "cf": np.add.reduceat(seg.column("cf_part").to_numpy(), starts),
-            "term_bucket": bucket_of(ts_ids),
-        }
-    )
-    if tag is None:
-        put(
-            "term_stats",
-            fmt.term_stats_dir(index_dir),
-            lambda d: fmt.put_partitioned(d, name, term_stats),
-        )
-    elif seg.num_rows:
-        put(
-            "term_stats",
-            fmt.term_stats_deltas_dir(index_dir),
-            lambda d: fmt.put_table(d, name, term_stats),
-        )
-    on_stage("term_stats")
     return landed
 
 
@@ -1217,8 +1186,8 @@ def land_on_spark(
     done: Optional[Dict[str, bool]] = None,
     cleanup_tmp: bool = True,
 ) -> Dict[str, List[str]]:
-    """Land a (doc_id, url, text) corpus as the doc_stats, vocab, segment
-    and term_stats tables with the Spark stages: the Spark twin of
+    """Land a (doc_id, url, text) corpus as the doc_stats, vocab and
+    segment tables with the Spark stages: the Spark twin of
     land_on_driver, with its layout / on_stage / tag contract.
 
     The doc_stats stage writes (doc_id, url, doc_len) and counts what it
@@ -1228,21 +1197,20 @@ def land_on_spark(
     collision. on_stage runs after each stage: doc_stats, tokens (the
     materialized path only), vocab, segments:0 ..
     segments:{bucket_groups-1} (postings=, nbytes= of the group, observed
-    on the write job), term_stats.
+    on the write job).
 
     tag None: a build; files go straight into the table dirs and stages
     that `done` (the build manifest's stages) marks complete are skipped
     (a resume recounts the landed doc_stats, with no tokenize, to size
-    the stages left). tag
-    "batch{N}-": a stream batch (bucket_groups 1); each table lands
-    through fmt.land under the tag, term_stats is one delta file under
-    term_stats_deltas/, and the landed files are returned per table. The
-    materialized path's tokens_tmp dir is tag-scoped and, with
-    cleanup_tmp, removed once the corpus has landed."""
+    the stages left). tag "batch{N}-": a stream batch (bucket_groups
+    1); each table lands through fmt.land under the tag, and the landed
+    files are returned per table. The materialized path's tokens_tmp
+    dir is tag-scoped and, with cleanup_tmp, removed once the corpus
+    has landed."""
     spark = corpus.sparkSession
     done = done or {}
     landed: Dict[str, List[str]] = {
-        "doc_stats": [], "vocab": [], "segments": [], "term_stats": []
+        "doc_stats": [], "vocab": [], "segments": []
     }
     put = partial(_put, landed, tag)
 
@@ -1454,31 +1422,6 @@ def land_on_spark(
         if fused_rows is not None:
             fused_rows.unpersist()
 
-    # ---- stage: term_stats (small agg over segment rows ⋈ vocab) ----
-    if not done.get("term_stats"):
-        if tag is None:
-            os.makedirs(fmt.segments_dir(index_dir), exist_ok=True)
-        ts = fmt.term_stats_of(
-            read("segments", fmt.segments_dir(index_dir),
-                 fmt.SEG_READ_SCHEMA),
-            read("vocab", fmt.vocab_dir(index_dir), fmt.VOCAB_READ_SCHEMA),
-        )
-        if tag is None:
-            put(
-                "term_stats",
-                fmt.term_stats_dir(index_dir),
-                lambda d: ts.write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(d),
-            )
-        elif landed["segments"]:
-            put(
-                "term_stats",
-                fmt.term_stats_deltas_dir(index_dir),
-                lambda d: ts.coalesce(1).write.mode("overwrite").parquet(d),
-            )
-        on_stage("term_stats")
-
     if cleanup_tmp and os.path.isdir(tokens_path):
         shutil.rmtree(tokens_path)
     return landed
@@ -1511,14 +1454,13 @@ def build_index(
     n_buckets/n_shards: None -> auto-sized from corpus volume (_auto_size).
     fail_after: test hook — raise after checkpointing the named stage,
     simulating a mid-build crash for the resume test. Both routes
-    checkpoint doc_stats, vocab, every segments:g and term_stats; the
+    checkpoint doc_stats, vocab and every segments:g; the
     Spark route's materialized path (bucket_groups > 1, or a corpus
     above _FUSED_PERSIST_MAX_BYTES) also checkpoints tokens.
     stage_sink: optional dict; when given, records wall seconds per
-    checkpointed stage (doc_stats / tokens / vocab / segments:g /
-    term_stats) — the scaling benches use it to attribute efficiency
-    loss to a stage instead of to the whole build (round-7, VERDICT
-    item 5). On the driver route doc_stats includes the collect.
+    checkpointed stage (doc_stats / tokens / vocab / segments:g) — the
+    scaling benches use it to attribute efficiency loss to a stage
+    instead of to the whole build (round-7, VERDICT item 5). On the driver route doc_stats includes the collect.
     """
     man = fmt.load_manifest(index_dir)
     fresh = man is None

@@ -20,8 +20,10 @@ atomicity point, and an append-only metrics table for lineage):
   vocab/                     (term string, term_id long, term_bucket int)
       distinct terms (the dictionary) — built from a map-side-combined
       distinct pass, tiny next to the posting shuffle.
-  term_stats/                (term string, term_id long, df long, cf long,
-                              term_bucket int)
+  (no term_stats table)      per-term df/cf is a read-time view of the
+      committed segment rows (IndexReader.term_stats, term_stats_of), so
+      it matches the engine's df at every snapshot. term_stats/ and
+      term_stats_deltas/ dirs that older builds left are never read.
   metrics/                   (run_id, stage, unit, docs long, postings long,
                               bytes long, status, updated_at) — per-partition
       lineage + counters; append-only (north rule: metrics table).
@@ -124,13 +126,11 @@ class IndexManifest:
     # manifest JSON); doc_stats_files_ref mirrors segment_files_ref.
     doc_stats_files: Optional[List[str]] = None
     doc_stats_files_ref: Optional[str] = None
-    # incremental term_stats (round-7, VERDICT item 7): per-batch df/cf
-    # delta files under term_stats_deltas/, '/'-normalized relative
-    # paths. The committed term_stats view = base table (+) sum of
-    # these deltas, so streamed appends no longer go through
-    # rebuild_term_stats's full segment scan; a rebuild folds the
-    # deltas it consumed back into the base and clears them. None/[] =
-    # base table is the whole view (batch builds, post-rebuild).
+    # No writer sets this any more (term_stats is a read-time view of
+    # the segments, IndexReader.term_stats); older manifests may still
+    # carry per-batch delta files here, which nothing reads. The field
+    # stays so those manifests load and perfbench keeps reporting its
+    # length (always 0 for an index written now).
     term_stats_delta_files: Optional[List[str]] = None
 
 
@@ -314,8 +314,7 @@ def try_claim_pid_lock(lock: str) -> bool:
     break (the losers' replace fails, source gone) and O_EXCL then
     decides the claim; with remove, a slow breaker could delete the
     winner's freshly-claimed lock and both would run (round-8, ADVICE
-    fix). Shared by compaction (.compact{gen}.lock, merge.py) and
-    term_stats maintenance (.term_stats.lock, streaming/incremental)."""
+    fix). Used by compaction (.compact{gen}.lock, merge.py)."""
     import socket
 
     me = f"{os.getpid()}@{socket.gethostname()}"
@@ -671,10 +670,10 @@ SEG_READ_SCHEMA = (
 
 VOCAB_READ_SCHEMA = "term string, term_id long, term_bucket int"
 
-# same explicit-schema discipline for the stats tables: a streaming-built
-# index has no term_stats until rebuild_term_stats runs, and an all-blank
-# corpus writes empty dirs — inference over zero files throws where an
-# empty relation is the correct answer.
+# same explicit-schema discipline for doc_stats (an all-blank corpus
+# writes empty dirs — inference over zero files throws where an empty
+# relation is the correct answer) and for the term_stats view's empty
+# frame (an index with no vocab files has no terms).
 DOC_STATS_READ_SCHEMA = "doc_id long, url string, doc_len int"
 TERM_STATS_READ_SCHEMA = (
     "term string, term_id long, df long, cf long, term_bucket int"
@@ -874,37 +873,12 @@ def term_stats_of(seg, vocab):
     )
 
 
-def fold_term_stats(ts):
-    """Sum term_stats rows that share a term_id (a base table unioned
-    with per-batch deltas, or the deltas alone) into one row each."""
-    from pyspark.sql import functions as F
-
-    return (
-        ts.groupBy("term_id")
-        .agg(
-            F.min("term").alias("term"),
-            F.sum("df").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.min("term_bucket").alias("term_bucket"),
-        )
-        .select("term", "term_id", "df", "cf", "term_bucket")
-    )
-
-
 def segments_dir(index_dir: str) -> str:
     return os.path.join(index_dir, "segments")
 
 
 def doc_stats_dir(index_dir: str) -> str:
     return os.path.join(index_dir, "doc_stats")
-
-
-def term_stats_dir(index_dir: str) -> str:
-    return os.path.join(index_dir, "term_stats")
-
-
-def term_stats_deltas_dir(index_dir: str) -> str:
-    return os.path.join(index_dir, "term_stats_deltas")
 
 
 def tombstones_dir(index_dir: str) -> str:

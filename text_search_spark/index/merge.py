@@ -245,7 +245,6 @@ def compact_in_place(
     spark: SparkSession,
     index_dir: str,
     factor: int = 1,
-    one_file_per_bucket: bool = True,
 ) -> None:
     """Compact an index IN PLACE under snapshot isolation: rewrite the
     committed segment rows (merging the multi-row (term, shard) groups
@@ -267,12 +266,12 @@ def compact_in_place(
     crash before it leaves half-landed compact files that no manifest
     references (invisible to every reader); a rerun replaces them
     (same-generation strays are cleaned FIRST) and vacuum removes any
-    strays. one_file_per_bucket adds a second small
-    shuffle of the MERGED rows (already compressed — tiny next to the
-    corpus), sorted within partitions on (term_bucket, term_id, shard)
-    so the dynamic-partition writer's required partition-column
-    ordering is already satisfied — no writer-injected unstable re-sort
-    — and term_id clustering (parquet row-group pruning, the measured
+    strays. Each bucket lands as one file: a second small shuffle of
+    the MERGED rows (already compressed — tiny next to the corpus),
+    sorted within partitions on (term_bucket, term_id, shard) so the
+    dynamic-partition writer's required partition-column ordering is
+    already satisfied — no writer-injected unstable re-sort — and
+    term_id clustering (parquet row-group pruning, the measured
     8.4→2.8 ms win) survives even when several bucket values hash into
     one partition.
 
@@ -315,9 +314,7 @@ def compact_in_place(
             f"commits at {index_dir}; retry when the index quiesces"
         )
     try:
-        _compact_in_place_locked(
-            spark, index_dir, man, gen, factor, one_file_per_bucket
-        )
+        _compact_in_place_locked(spark, index_dir, man, gen, factor)
     finally:
         fmt.release_lock(lock)
 
@@ -328,7 +325,6 @@ def _compact_in_place_locked(
     man: "fmt.IndexManifest",
     gen: int,
     factor: int,
-    one_file_per_bucket: bool,
 ) -> None:
     s_new = _merged_shard_count(man, factor)
     # landing under the generation prefix also removes a previous
@@ -411,10 +407,9 @@ def _compact_in_place_locked(
             else None
         ),
     )
-    if one_file_per_bucket:
-        merged = merged.repartition(
-            man.n_buckets, F.col("term_bucket")
-        ).sortWithinPartitions("term_bucket", "term_id", "shard")
+    merged = merged.repartition(
+        man.n_buckets, F.col("term_bucket")
+    ).sortWithinPartitions("term_bucket", "term_id", "shard")
 
     # bounded row groups: one file per bucket would otherwise be one
     # 100+ MB row group (fmt.SEGMENT_ROW_GROUP_BYTES rationale)
@@ -473,9 +468,6 @@ def _compact_in_place_locked(
             m2.avgdl = (
                 m2.total_tokens / m2.n_docs if m2.n_docs > 0 else 0.0
             )
-            # derived df/cf changed with the purge — same staleness
-            # marker the append commit uses
-            m2.stages["term_stats"] = False
 
     fmt.commit_manifest(index_dir, _commit)
 

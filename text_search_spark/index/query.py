@@ -336,28 +336,19 @@ class IndexReader:
         return ft
 
     def term_stats(self) -> DataFrame:
-        """df/cf per term: the rebuilt base table (+) this snapshot's
-        committed per-batch deltas (round-7 — streamed appends maintain
-        term_stats without rebuild_term_stats's full segment scan). The
-        re-aggregation only exists when deltas do; a batch-built or
-        freshly-rebuilt index reads the base table straight through."""
-        ts_dir = fmt.term_stats_dir(self.index_dir)
-        if os.path.isdir(ts_dir):
-            base = self.spark.read.schema(
-                fmt.TERM_STATS_READ_SCHEMA
-            ).parquet(ts_dir)
-        else:
-            base = self.spark.createDataFrame(
-                [], fmt.TERM_STATS_READ_SCHEMA
-            )
-        deltas = self.manifest.term_stats_delta_files
-        if not deltas:
-            return base
-        ddf = fmt.read_committed(
-            self.spark, fmt.term_stats_deltas_dir(self.index_dir), deltas,
-            fmt.TERM_STATS_READ_SCHEMA,
+        """df/cf per term of this snapshot, summed from its committed
+        segment rows (the df the scorer reads) and named through the
+        vocab table, one row per term_id (every appended batch lands its
+        own vocab rows). No vocab files: an empty frame."""
+        vocab_dir = fmt.vocab_dir(self.index_dir)
+        if not os.path.isdir(vocab_dir):
+            return self.spark.createDataFrame([], fmt.TERM_STATS_READ_SCHEMA)
+        vocab = (
+            self.spark.read.schema(fmt.VOCAB_READ_SCHEMA)
+            .parquet(vocab_dir)
+            .dropDuplicates(["term_id"])
         )
-        return fmt.fold_term_stats(base.unionByName(ddf))
+        return fmt.term_stats_of(self.segments(), vocab)
 
     def doc_stats(self) -> DataFrame:
         """This snapshot's doc_stats — opens exactly the manifest-

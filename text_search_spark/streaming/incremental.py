@@ -37,17 +37,13 @@ CRASHES (a retry replaces the batch's files, never duplicates), every
 read is a consistent committed snapshot, and refresh() flips a live
 reader to the newest commit. At 10^12-doc scale the file list lives in
 Iceberg manifest-list files instead of one JSON array; the commit
-protocol is the same. term_stats is maintained incrementally: each
-batch commits a tiny df/cf DELTA file aggregated from its own segment
-rows (round-7), and IndexReader.term_stats serves base (+) deltas, so
-a stream never needs rebuild_term_stats just because it appended —
-the rebuild remains the way to (re)establish the base (first build,
-or after a purge shifted df/cf) and folds consumed deltas into it.
+protocol is the same. Per-term df/cf is not stored: IndexReader.term_stats
+sums the committed segment rows at read time, so an append, a delete or
+a purge never leaves a second copy of those sums to maintain.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,8 +66,8 @@ def _append_batch(
     batch_id: int,
 ) -> None:
     """Append one micro-batch of (doc_id, url, text) rows to the index:
-    land its doc_stats, vocab, segment and term_stats-delta files under
-    the batch tag, then commit them in one manifest CAS. A batch holding
+    land its doc_stats, vocab and segment files under the batch tag,
+    then commit them in one manifest CAS. A batch holding
     at most build.DRIVER_BUILD_MAX_TOKENS tokens lands on the driver
     (build.collect_if_small, build.land_on_driver): one Spark job, the
     collect, or two when the batch's size has to be measured by
@@ -222,13 +218,6 @@ def _append_batch_inner(
             m2.total_tokens / m2.n_docs if m2.n_docs else 0.0
         )
         m2.stages[f"stream:{batch_id}"] = True
-        # term_stats stays VALID across this append: the batch's delta
-        # files join the committed view (base + deltas). A never-built
-        # base (stage False/absent) stays stale until the first rebuild.
-        m2.term_stats_delta_files = sorted(
-            set(m2.term_stats_delta_files or [])
-            | set(landed["term_stats"])
-        )
         m2.complete = True
         return True
 
@@ -262,9 +251,6 @@ def incremental_index(
             maybe_compact(
                 spark, index_dir, max_files_per_bucket=auto_compact_files
             )
-            # same inline-maintenance slot bounds the term_stats delta
-            # list (manifest-length check; a no-op almost every batch)
-            fold_term_stats_deltas(spark, index_dir)
 
     writer = stream_df.writeStream.foreachBatch(_on_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -272,190 +258,6 @@ def incremental_index(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-# consumed delta files survive on disk this long after the commit that
-# unreferenced them: a long-lived IndexReader pinned to the PRIOR
-# snapshot still unions the old delta set on its next term_stats()
-# call, and an immediate unlink turned that into path-does-not-exist
-# (round-8, ADVICE fix — same landing-window discipline as
-# vacuum_segments' grace_s). 0 = immediate (tests / single-process).
-TERM_STATS_DELTA_GRACE_S = 600.0
-
-
-def _term_stats_lock_path(index_dir: str) -> str:
-    return os.path.join(index_dir, ".term_stats.lock")
-
-
-def _sweep_unreferenced_deltas(index_dir: str, grace_s: float) -> None:
-    """Remove delta files no CURRENT manifest references, once older
-    than grace_s (mtime). Also sweeps crash leftovers from interrupted
-    folds/rebuilds. Best-effort: a lost race with a concurrent remover
-    is fine."""
-    import time as _time
-
-    man = fmt.load_manifest(index_dir)
-    ref = set(man.term_stats_delta_files or []) if man is not None else set()
-    now = _time.time()
-    fmt.sweep(
-        fmt.term_stats_deltas_dir(index_dir),
-        lambda f, p: f.startswith(".")
-        or f in ref
-        or (grace_s > 0 and now - os.path.getmtime(p) <= grace_s),
-    )
-
-
-def fold_term_stats_deltas(
-    spark: SparkSession,
-    index_dir: str,
-    max_delta_files: int = 64,
-    delta_grace_s: float = TERM_STATS_DELTA_GRACE_S,
-) -> bool:
-    """Fold the snapshot's term_stats delta files into ONE combined
-    delta once more than max_delta_files have accumulated (a long
-    stream commits one tiny delta per batch; the reader view unions
-    them all, so an unbounded list slowly inflates every term_stats()
-    plan). Returns whether a fold ran.
-
-    Cost: reads ONLY the delta files (batch-sized sums, never the
-    index), writes one combined file, CAS-swaps the list. The mutate
-    is a rebase: deltas committed by appends racing the fold were not
-    in the consumed set and survive (same discipline as
-    rebuild_term_stats). The manifest-only length check makes this
-    safe to call after every micro-batch (incremental_index does).
-    Consumed files are swept best-effort after a `delta_grace_s`
-    landing window (readers pinned to the prior snapshot keep reading
-    them until they refresh — ADVICE round-8); a crash before the
-    sweep leaves unreferenced files a later fold's sweep collects.
-
-    Fold and rebuild are serialized on `.term_stats.lock` (round-8,
-    ADVICE fix): a fold racing a rebuild double-counted df/cf — the
-    rebuild bakes the consumed deltas into the new base while the
-    fold's CAS-rebased commit re-adds the same sums as a fold file
-    (the rebase protects list membership, not that semantic
-    conflict). The fold is opportunistic, so a held lock just means
-    "maintenance already running" and returns False."""
-    lock = _term_stats_lock_path(index_dir)
-    if not fmt.try_claim_pid_lock(lock):
-        return False
-    try:
-        return _fold_term_stats_locked(
-            spark, index_dir, max_delta_files, delta_grace_s
-        )
-    finally:
-        fmt.release_lock(lock)
-
-
-def _fold_term_stats_locked(
-    spark: SparkSession,
-    index_dir: str,
-    max_delta_files: int,
-    delta_grace_s: float,
-) -> bool:
-    import uuid as _uuid
-
-    man0 = fmt.load_manifest(index_dir)
-    if man0 is None:
-        return False
-    deltas = list(man0.term_stats_delta_files or [])
-    if len(deltas) <= max_delta_files:
-        return False
-    td = fmt.term_stats_deltas_dir(index_dir)
-    folded = fmt.fold_term_stats(
-        fmt.read_committed(spark, td, deltas, fmt.TERM_STATS_READ_SCHEMA)
-    )
-    rels = fmt.land(
-        lambda p: folded.coalesce(1).write.mode("overwrite").parquet(p),
-        td,
-        f"fold-{_uuid.uuid4().hex[:12]}-",
-    )
-    consumed = set(deltas)
-
-    def _commit(m2: "fmt.IndexManifest") -> None:
-        cur = set(m2.term_stats_delta_files or [])
-        m2.term_stats_delta_files = sorted(
-            (cur - consumed) | set(rels)
-        ) or None
-
-    fmt.commit_manifest(index_dir, _commit)
-    _sweep_unreferenced_deltas(index_dir, delta_grace_s)
-    return True
-
-
-def rebuild_term_stats(
-    spark: SparkSession,
-    index_dir: str,
-    delta_grace_s: float = TERM_STATS_DELTA_GRACE_S,
-) -> None:
-    # serialized against fold_term_stats_deltas on the same lock (see
-    # there: a racing fold re-adds delta sums the rebuild just baked
-    # into the base). Rebuild is an explicit operator action, so a held
-    # lock is a loud error rather than a silent skip.
-    lock = _term_stats_lock_path(index_dir)
-    if not fmt.try_claim_pid_lock(lock):
-        raise RuntimeError(
-            f"term_stats maintenance already running at {index_dir} "
-            f"({lock}); fold/rebuild are one-at-a-time"
-        )
-    try:
-        _rebuild_term_stats_locked(spark, index_dir, delta_grace_s)
-    finally:
-        fmt.release_lock(lock)
-
-
-def _rebuild_term_stats_locked(
-    spark: SparkSession, index_dir: str, delta_grace_s: float
-) -> None:
-    man0 = fmt.load_manifest(index_dir)
-    # derive stats from the committed snapshot only (a concurrent
-    # in-flight append's files must not leak into term_stats)
-    seg = fmt.read_committed(
-        spark,
-        fmt.segments_dir(index_dir),
-        (man0.segment_files or []) if man0 is not None else [],
-        fmt.SEG_READ_SCHEMA,
-    )
-    # every appended batch lands its own vocab rows: keep one per term
-    vocab = (
-        spark.read.schema(fmt.VOCAB_READ_SCHEMA)
-        .parquet(fmt.vocab_dir(index_dir))
-        .select("term", "term_id")
-        .dropDuplicates(["term_id"])
-    )
-    (
-        fmt.term_stats_of(seg, vocab)
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(fmt.term_stats_dir(index_dir))
-    )
-    # the rebuild FOLDED the snapshot's deltas into the new base —
-    # clear exactly those (an append racing this rebuild keeps its own
-    # delta: its segment files were not in man0's scan)
-    consumed = set(
-        (man0.term_stats_delta_files or []) if man0 is not None else []
-    )
-    base_segs = set(
-        (man0.segment_files or []) if man0 is not None else []
-    )
-
-    def _mark(m2: "fmt.IndexManifest") -> None:
-        if base_segs - set(m2.segment_files or []):
-            # a compaction/purge replaced files the rebuild scanned —
-            # the fresh base may be stale already; leave the flag down
-            # (df/cf is unchanged by a pure merge, but a purge shifts
-            # it, and we can't tell which happened from here)
-            m2.stages["term_stats"] = False
-        else:
-            m2.stages["term_stats"] = True
-        m2.term_stats_delta_files = sorted(
-            set(m2.term_stats_delta_files or []) - consumed
-        ) or None
-
-    fmt.commit_manifest(index_dir, _mark)
-    # consumed delta files are unreferenced by the new snapshot — swept
-    # after the landing-window grace (readers pinned to the prior
-    # snapshot keep unioning them until they refresh)
-    _sweep_unreferenced_deltas(index_dir, delta_grace_s)
 
 
 def incremental_deletes(
